@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Ast._
+import graft.core.ParquetTable
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.planner.Planner
 import graft.streaming.EventStreams
@@ -91,7 +92,7 @@ object Bench {
       val s = new graft.store.GraphStore(spark,
         versioningEnabled = true, clock = clock)
       s.attachNodes("customer",
-        spark.read.parquet(s"$sfDir/customer.parquet")
+        ParquetTable.read(spark, s"$sfDir/customer.parquet")
           .select(col("c_custkey").as("id"), col("c_name").as("name"),
             col("c_acctbal").as("acctbal")), "id")
       clock.set(2000L)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetTable
+
 /** Seeded local scale-up generator (VERDICT r5 "Next round" #3): writes a
   * `copies`× scaled replica of an existing testdata dir by unioning
   * FK-consistently key-shifted copies — copy `i` offsets every join key
@@ -92,7 +94,7 @@ object ScaleGen {
       * under the default maxPartitionBytes — the opposite of a scale
       * stress). */
     def scale(t: String)(f: (DataFrame, Column) => DataFrame): Unit = {
-      val raw = spark.read.parquet(s"$src/$t.parquet")
+      val raw = ParquetTable.read(spark, s"$src/$t.parquet")
       val k = broadcast(spark.range(copies).toDF("__copy"))
       val out = f(raw.crossJoin(k), col("__copy")).drop("__copy")
       out.repartition(32).write.mode("overwrite")
@@ -102,7 +104,7 @@ object ScaleGen {
     def shift(c: String, cp: Column): Column = col(c) + cp * Stride
 
     Seq("region", "nation").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      ParquetTable.read(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dest/$t.parquet")
     }
     scale("customer")((d, cp) => d.withColumn("c_custkey", shift("c_custkey", cp)))

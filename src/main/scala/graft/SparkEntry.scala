@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.GraphAnalytics
 import graft.core.Ast._
-import graft.core.MockClock
+import graft.core.{MockClock, ParquetTable}
 import graft.pipeline.{Corpus, Curation, Dedup, Ingest, Multimodal, Similarity, TextAnalysis}
 import graft.planner.Planner
 import graft.store.GraphStore
@@ -43,7 +43,7 @@ object SparkEntry {
     val clock = new MockClock(0L)
     val s = new GraphStore(spark, versioningEnabled = true, clock = clock)
     s.attachNodes("customer",
-      spark.read.parquet(s"$dir/customer.parquet")
+      ParquetTable.read(spark, s"$dir/customer.parquet")
         .select(col("c_custkey").as("id"), col("c_name").as("name"),
           col("c_acctbal").as("acctbal")), "id")
     clock.set(2000L)
@@ -198,7 +198,7 @@ object SparkEntry {
     // ---- D7 ARRAY append semantics via bulk update
     "q14_array_append" -> ((s, dir) => {
       val store = TpchGraph.store(s, dir)
-      val parts = s.read.parquet(s"$dir/part.parquet")
+      val parts = ParquetTable.read(s, s"$dir/part.parquet")
       val st = new GraphStore(s)
       st.attachNodes("item", parts.select(col("p_partkey").as("id"),
         split(col("p_name"), " ").as("tags")), "id")
@@ -1887,7 +1887,7 @@ object SparkEntry {
       val clock = new MockClock(0L)
       val st = new GraphStore(s, versioningEnabled = true, clock = clock)
       st.attachNodes("customer",
-        s.read.parquet(s"$dir/customer.parquet")
+        ParquetTable.read(s, s"$dir/customer.parquet")
           .select(col("c_custkey").as("id"), col("c_name").as("name"),
             col("c_acctbal").as("acctbal")), "id")
       clock.set(2000L)

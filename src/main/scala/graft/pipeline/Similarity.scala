@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetTable
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -163,8 +164,8 @@ object Similarity {
   /** Load a persisted IVF index → (centroids, assigned). */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/vectors"))
+    (ParquetTable.read(spark, s"$path/centroids"),
+      ParquetTable.read(spark, s"$path/vectors"))
 
   /** Symmetric int8 quantization of an embedding column — the standard
     * 4× memory cut before an ANN index is built or embeddings are shipped

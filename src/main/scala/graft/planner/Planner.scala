@@ -101,11 +101,13 @@ final class Planner(store: GraphStore) {
     }
 
     // ---- Scans with pre-filters attached
+    // every column renamed `<alias><SEP><name>` in one projection
+    def prefixed(raw: DataFrame, alias: String): DataFrame =
+      raw.select(raw.columns.toIndexedSeq.map(c =>
+        col(s"`${c.replace("`", "``")}`").as(s"$alias$SEP$c")): _*)
     def scanNode(alias: String): DataFrame = {
       val label = nodeAliases(alias)
-      val raw = store.nodes(label, q.asOf)
-      val renamed = raw.columns.foldLeft(raw)((d, c) =>
-        d.withColumnRenamed(c, s"$alias$SEP$c"))
+      val renamed = prefixed(store.nodes(label, q.asOf), alias)
       preFilters(alias).foldLeft(renamed)((d, e) =>
         d.filter(compile(e, d)))
     }
@@ -127,8 +129,7 @@ final class Planner(store: GraphStore) {
           case c     => col(c)
         }: _*))
       }
-      val renamed = raw.columns.foldLeft(raw)((d, c) =>
-        d.withColumnRenamed(c, s"$alias$SEP$c"))
+      val renamed = prefixed(raw, alias)
       preFilters(alias).foldLeft(renamed)((d, e) =>
         d.filter(compile(e, d)))
     }

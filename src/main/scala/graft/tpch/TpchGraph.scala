@@ -3,6 +3,7 @@ package graft.tpch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetTable
 import graft.store.GraphStore
 
 /** Graph view over the driver testdata (TESTDATA.md / FIXTURES.md §B):
@@ -12,7 +13,9 @@ import graft.store.GraphStore
   * agree exactly.
   *
   * Everything here is lazy DataFrames over the parquet files — scans keep
-  * Parquet column pruning + filter pushdown, no data is copied.
+  * Parquet column pruning + filter pushdown, no data is copied. Opening
+  * the store runs no Spark job: each table's schema is read from its
+  * footer on the driver ([[graft.core.ParquetTable]]).
   */
 object TpchGraph {
 
@@ -42,15 +45,14 @@ object TpchGraph {
     // matter whether the reader produced TimestampType or (with the
     // legacy nanosAsLong conf) LongType.
     def readRaw(t: String): DataFrame = {
-      val raw = spark.read.parquet(s"$dir/$t.parquet")
-      raw.schema.fields.foldLeft(raw) { (d, f) =>
+      val raw = ParquetTable.read(spark, s"$dir/$t.parquet")
+      raw.select(raw.schema.fields.toIndexedSeq.map { f =>
         // covers TimestampType and TimestampNTZType (TIMESTAMP(NANOS,false)
         // arrives as NTZ); session TZ is UTC so the cast is value-preserving
         if (f.dataType.typeName.startsWith("timestamp"))
-          d.withColumn(f.name,
-            unix_micros(col(f.name).cast("timestamp")) * 1000L)
-        else d
-      }
+          (unix_micros(col(f.name).cast("timestamp")) * 1000L).as(f.name)
+        else col(f.name)
+      }: _*)
     }
     // Truncate an epoch-nano long to microsecond precision, exactly (no
     // float division — these exceed a double's exact integer range). The
