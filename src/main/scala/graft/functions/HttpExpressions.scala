@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,37 +17,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * malformed at any point — bad hex, truncated chunk, missing
   * terminator — the ORIGINAL input is returned unchanged, so a
   * mislabeled non-chunked body is never corrupted. A native
-  * codegen'd expression: the parse is an iterative data-dependent
+  * codegen'd function: the parse is an iterative data-dependent
   * walk no built-in-function composition can express, and a UDF
   * would break whole-stage codegen (the GramTopStats precedent).
   *
   * 100 TB shape: O(bytes) per row riding the scan that already read
   * the payload — zero shuffle, zero allocation beyond the output.
   */
-case class HttpDechunk(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"HttpDechunk expects a string (the ISO-8859-1 byte view), got " +
-        child.dataType.catalogString)
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      HttpDechunk.dechunk(input.asInstanceOf[UTF8String].toString))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(" +
-        s"${HttpDechunk.getClass.getName.stripSuffix("$")}" +
-        s".dechunk($c.toString()))")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object HttpDechunk {
+  def apply(child: Expression): Expression =
+    NativeCall(getClass, StringType, Seq(Seq(StringType)), Seq(child))
+
+  def compute(s: UTF8String): UTF8String =
+    UTF8String.fromString(dechunk(s.toString))
 
   /** Decode chunked framing; on ANY malformed framing return `body`
     * unchanged (salvage). Tolerates LF-only line ends and skips
@@ -113,60 +93,38 @@ object HttpDechunk {
   * shift_jis / euc-jp / gbk / big5 / euc-kr / koi8-r /
   * iso-8859-2..15 all ship in `java.nio.charset`, so declared CJK
   * and Eastern-European bodies decode exactly instead of falling to
-  * the Latin-1 byte view. A native codegen'd expression — the
+  * the Latin-1 byte view. A native codegen'd function — the
   * dynamic charset lookup has no built-in composition and a UDF
   * would break whole-stage codegen.
   *
-  * 100 TB shape: O(bytes) per row riding the scan; `Charset` objects
-  * are cached per JVM, a fresh (cheap) decoder per call keeps it
+  * 100 TB shape: O(bytes) per row riding the scan; the name lookup is
+  * built once per JVM and never grows (charset names are per-row
+  * data from crawled headers, so memoizing unknown ones would grow
+  * without bound), a fresh (cheap) decoder per call keeps it
   * thread-safe. */
-case class CharsetDecode(bytes: Expression, charset: Expression)
-    extends BinaryExpression {
-  override def left: Expression = bytes
-  override def right: Expression = charset
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true // null = "could not decode"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (bytes.dataType == BinaryType && charset.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "CharsetDecode expects (binary bytes, string charset), got " +
-        s"(${bytes.dataType.catalogString}, " +
-        s"${charset.dataType.catalogString})")
-
-  override def nullSafeEval(b: Any, c: Any): Any =
-    CharsetDecode.decodeOrNull(b.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, c) => {
-      val obj = CharsetDecode.getClass.getName.stripSuffix("$")
-      s"""
-         |${ev.value} = $obj.decodeOrNull($b, $c.toString());
-         |if (${ev.value} == null) { ${ev.isNull} = true; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(bytes = newLeft, charset = newRight)
-}
-
 object CharsetDecode {
-  // Charset.forName walks provider SPIs — cache per JVM. CHM forbids
-  // null values, so "unsupported" is memoized as a sentinel.
-  private val Unsupported: AnyRef = new Object
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  def apply(bytes: Expression, charset: Expression): Expression =
+    NativeCall(getClass, StringType, Seq(Seq(BinaryType), Seq(StringType)),
+      Seq(bytes, charset), returnNullable = true) // null = "could not decode"
+
+  def compute(bytes: Array[Byte], charset: UTF8String): UTF8String =
+    decodeOrNull(bytes, charset.toString)
+
+  /** Every name and alias the JVM's charset providers know, ASCII
+    * lowercased (`Charset.forName` is case-insensitive; legal names
+    * are ASCII), each mapped to what `forName` returns for it. */
+  private[graft] val byName: java.util.Map[String, java.nio.charset.Charset] = {
+    val m = new java.util.HashMap[String, java.nio.charset.Charset]()
+    val all = java.nio.charset.Charset.availableCharsets().values()
+    all.forEach(cs => m.put(cs.name.toLowerCase(java.util.Locale.ROOT), cs))
+    all.forEach(cs => cs.aliases().forEach(a =>
+      m.putIfAbsent(a.toLowerCase(java.util.Locale.ROOT), cs)))
+    java.util.Collections.unmodifiableMap(m)
+  }
 
   private def lookup(name: String): java.nio.charset.Charset =
-    cache.computeIfAbsent(name, n =>
-      try java.nio.charset.Charset.forName(n)
-      catch { case _: Exception => Unsupported }) match {
-      case cs: java.nio.charset.Charset => cs
-      case _ => null
-    }
+    if (name.forall(_ < 0x80)) byName.get(name.toLowerCase(java.util.Locale.ROOT))
+    else null
 
   /** Strict decode; null on unknown charset / malformed / unmappable. */
   def decodeOrNull(bytes: Array[Byte], charsetName: String)

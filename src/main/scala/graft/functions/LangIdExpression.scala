@@ -1,9 +1,10 @@
 package graft.functions
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * replayable in SQL (distinct-trigram list ∩ a literal list), so
   * the operator hash-gates, unlike a float-scored classifier.
   *
-  * Native codegen'd expression (the GramTopStats precedent): the
+  * Native codegen'd function (the GramTopStats precedent): the
   * per-row work is one codepoint scan + profile-sized set probes; a
   * HOF formulation would interpret per character. Profiles are
   * constructor data (language dial — ship your own for other
@@ -27,60 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB shape: one scan, no shuffle; profile sets are bytes-sized
   * reference objects resident per executor.
   */
-case class LangIdNgram(child: Expression,
-                       profiles: Seq[(String, Seq[String])])
-    extends UnaryExpression {
-  require(profiles.nonEmpty, "profiles must be non-empty")
-  // codepoint grain, not UTF-16 units: a trained profile from astral
-  // text (one supplementary codepoint = two UTF-16 units) is a legal
-  // trigram — the classifier extracts document trigrams by codepoint
-  require(profiles.forall(_._2.forall(t =>
-    t.codePointCount(0, t.length) == 3)),
-    "profile entries must be trigrams (3 codepoints)")
-  // distinctness is part of the hits contract (advice r15): the
-  // engine probes a HashSet (duplicates collapse) while the SQL
-  // oracle counts profile-LIST entries — a repeated trigram would
-  // silently diverge engine vs oracle and under-count vs the
-  // documented "distinct profile trigrams hit" semantics
-  require(profiles.forall(p => p._2.distinct.size == p._2.size),
-    "profile trigram lists must be distinct (duplicates would " +
-      "under-count: hits = |doc trigrams ∩ profile set|)")
-
-  override def dataType: DataType = LangIdNgram.schema
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"LangIdNgram expects a string, got ${child.dataType.catalogString}")
-
-  /** (lang asc, trigram HashSet) — the tie-break order is baked in. */
-  @transient private lazy val sortedProfiles
-      : Array[(UTF8String, java.util.HashSet[String])] =
-    profiles.sortBy(_._1).map { case (lang, tris) =>
-      val set = new java.util.HashSet[String]()
-      tris.foreach(t => set.add(t))
-      (UTF8String.fromString(lang), set)
-    }.toArray
-
-  override def nullSafeEval(input: Any): Any =
-    LangIdNgram.classify(input.asInstanceOf[UTF8String],
-      sortedProfiles)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val profRef = ctx.addReferenceObj("profiles", sortedProfiles,
-      "scala.Tuple2[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} =
-         |  ${LangIdNgram.getClass.getName.stripSuffix("$")}.classify(
-         |    $c, $profRef);
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object LangIdNgram {
   val schema: StructType = StructType(Seq(
     StructField("lang", StringType, nullable = false),
@@ -88,8 +35,34 @@ object LangIdNgram {
 
   private val Und = UTF8String.fromString("und")
 
-  def classify(s: UTF8String,
-               profiles: Array[(UTF8String, java.util.HashSet[String])])
+  def apply(child: Expression, profiles: Seq[(String, Seq[String])])
+      : Expression = {
+    require(profiles.nonEmpty, "profiles must be non-empty")
+    // codepoint grain, not UTF-16 units: a trained profile from astral
+    // text (one supplementary codepoint = two UTF-16 units) is a legal
+    // trigram — the classifier extracts document trigrams by codepoint
+    require(profiles.forall(_._2.forall(t =>
+      t.codePointCount(0, t.length) == 3)),
+      "profile entries must be trigrams (3 codepoints)")
+    // distinctness is part of the hits contract (advice r15): the
+    // engine probes a HashSet (duplicates collapse) while the SQL
+    // oracle counts profile-LIST entries — a repeated trigram would
+    // silently diverge engine vs oracle and under-count vs the
+    // documented "distinct profile trigrams hit" semantics
+    require(profiles.forall(p => p._2.distinct.size == p._2.size),
+      "profile trigram lists must be distinct (duplicates would " +
+        "under-count: hits = |doc trigrams ∩ profile set|)")
+    // (lang asc, trigram HashSet) — the tie-break order is baked in
+    val sorted = new java.util.ArrayList[(UTF8String, java.util.HashSet[String])]()
+    profiles.sortBy(_._1).foreach { case (lang, tris) =>
+      sorted.add((UTF8String.fromString(lang), new java.util.HashSet(tris.asJava)))
+    }
+    NativeCall(getClass, schema, Seq(Seq(StringType)), Seq(child),
+      Seq(NativeCall.obj(sorted)))
+  }
+
+  def compute(s: UTF8String,
+      profiles: java.util.ArrayList[(UTF8String, java.util.HashSet[String])])
       : InternalRow = {
     val str = s.toLowerCase.toString
     // distinct codepoint-grain trigrams (matches SQL substring(i, 3))
@@ -112,8 +85,8 @@ object LangIdNgram {
     var bestLang: UTF8String = Und
     var bestHits = 0L
     var i = 0
-    while (i < profiles.length) {
-      val (lang, set) = profiles(i)
+    while (i < profiles.size) {
+      val (lang, set) = profiles.get(i)
       var hits = 0L
       val it = set.iterator()
       while (it.hasNext) if (tris.contains(it.next())) hits += 1
@@ -138,37 +111,17 @@ object LangIdNgram {
   * documents with fewer than n codepoints emit an empty array.
   * Matches SQL `substring(txt, i+1, n)` for i in 0..len-n exactly.
   */
-case class CharNgrams(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"n must be >= 1, got $n")
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"CharNgrams expects a string, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    CharNgrams.compute(input.asInstanceOf[UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${CharNgrams.getClass.getName.stripSuffix("$")}.compute($c, $n)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object CharNgrams {
-  def compute(s: UTF8String, n: Int)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def apply(child: Expression, n: Int): Expression = {
+    require(n >= 1, s"n must be >= 1, got $n")
+    NativeCall(getClass, ArrayType(StringType, containsNull = false),
+      Seq(Seq(StringType)), Seq(child), Seq(Literal(n)))
+  }
+
+  def compute(s: UTF8String, n: Int): ArrayData = {
     val str = s.toString
     val cps = str.codePointCount(0, str.length)
-    if (cps < n) return new org.apache.spark.sql.catalyst.util
-      .GenericArrayData(Array.empty[Any])
+    if (cps < n) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](cps - n + 1)
     // sliding UTF-16 offsets of window start/end — one forward walk,
     // no per-gram re-scan
@@ -183,6 +136,6 @@ object CharNgrams {
         b = str.offsetByCodePoints(b, 1)
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }

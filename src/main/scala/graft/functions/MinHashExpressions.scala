@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, XXH64}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature over a hashed-shingle array in ONE fused native
   * pass: for family `i`, `sig[i] = min over shingles s of
@@ -13,7 +12,7 @@ import org.apache.spark.sql.types._
   * Bit-identical to the SQL formulation
   * `min(xxhash64(__s, lit(i)))` per family — Spark's `xxhash64(long,
   * int)` chains `XXH64.hashInt(i, XXH64.hashLong(s, 42))`, and this
-  * expression calls the same static functions in the same order. The
+  * function calls the same static functions in the same order. The
   * per-shingle base hash `hashLong(s, 42)` is computed once and shared
   * by all `k` families (the SQL path recomputes it per family).
   *
@@ -26,36 +25,13 @@ import org.apache.spark.sql.types._
   * [[graft.pipeline.Dedup.shingles]] emits the whole text as one
   * shingle when it is shorter than k words).
   */
-case class MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  require(numHashes > 0, "numHashes must be positive")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"MinHashSig expects array<bigint>, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      MinHashSig.compute(input.asInstanceOf[ArrayData], numHashes))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"${MinHashSig.getClass.getName.stripSuffix("$")}" +
-        s".compute($c, $numHashes))")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object MinHashSig {
-  /** Shared by interpreted eval and generated code. */
+  def apply(child: Expression, numHashes: Int): Expression = {
+    require(numHashes > 0, "numHashes must be positive")
+    NativeCall(getClass, ArrayType(LongType, containsNull = false),
+      Seq(Seq(ArrayType(LongType))), Seq(child), Seq(Literal(numHashes)))
+  }
+
   def compute(shingles: ArrayData, numHashes: Int): Array[Long] = {
     val mins = Array.fill(numHashes)(Long.MaxValue)
     val n = shingles.numElements()
@@ -82,40 +58,20 @@ object MinHashSig {
   * function's), and keep 64 signed bit-counters; bit b of the output is
   * 1 when more token hashes set bit b than not. Bit-identical to the
   * nested-HOF formulation it replaces, which evaluated `64 × tokens`
-  * interpreted lambda steps per row. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"SimHash64 expects a (default-collation) string, got " +
-        child.dataType.catalogString)
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${SimHash64.getClass.getName.stripSuffix("$")}.compute($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
+  * interpreted lambda steps per row. The input must be a
+  * default-collation string. */
 object SimHash64 {
-  def compute(text: org.apache.spark.unsafe.types.UTF8String): Long = {
+  def apply(child: Expression): Expression =
+    NativeCall(getClass, LongType, Seq(Seq(StringType)), Seq(child))
+
+  def compute(text: UTF8String): Long = {
     // SQL-exact preprocessing: trim strips ASCII spaces only, lower is
     // UTF8String.toLowerCase, split is Java regex with limit -1
     val toks = text.trim().toLowerCase.toString.split("\\s+", -1)
     val counters = new Array[Int](64)
     var i = 0
     while (i < toks.length) {
-      val h = XXH64.hashUTF8String(
-        org.apache.spark.unsafe.types.UTF8String.fromString(toks(i)), 42L)
+      val h = XXH64.hashUTF8String(UTF8String.fromString(toks(i)), 42L)
       var b = 0
       while (b < 64) {
         counters(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)

@@ -1,17 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native symmetric-int8 quantization over `array<float|double>`
-  * embeddings — ONE fused codegen'd pass per row, replacing the HOF
-  * formulation (`array_max(transform(...))` feeding a second
-  * `transform` lambda). That formulation had a plan trap:
-  * CollapseProject inlined the `scale` projection into the per-element
+  * embeddings ([[QuantScale]], [[QuantVec]]) — ONE fused codegen'd
+  * pass per row, replacing the HOF formulation
+  * (`array_max(transform(...))` feeding a second `transform` lambda).
+  * That formulation had a plan trap: CollapseProject inlined the `scale` projection into the per-element
   * lambda of the next projection, and HOF lambdas evaluate interpreted,
   * so both `array_max` scans re-ran per ELEMENT — O(d²) interpreted
   * work per row (measured 18.3 s for 2,000×64 floats). These
@@ -34,74 +32,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * One divergence, documented: a NULL input array yields NULL qvec
   * (null-intolerant expression) where `concat_ws(",", transform(null))`
   * yielded "" — saner, and unobservable on non-null embedding columns.
+  *
+  * Both take `array<float>` or `array<double>`; `compute` is told
+  * which by `elem` (0 = float, 1 = double — [[NativeCall]]'s type
+  * position).
   */
-abstract class QuantBase extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(t, _) if t == FloatType || t == DoubleType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"${getClass.getSimpleName} expects array<float|double>, got " +
-          other.catalogString)
-    }
-  protected def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-}
+object QuantScale {
+  private[functions] val Vectors: Seq[DataType] =
+    Seq(ArrayType(FloatType), ArrayType(DoubleType))
 
-/** `max(abs(x))/127` of a vector as float64; NULL for empty/all-null. */
-case class QuantScale(child: Expression) extends QuantBase {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+  /** `max(abs(x))/127` of a vector as float64; NULL for empty/all-null. */
+  def apply(child: Expression): Expression =
+    NativeCall(getClass, DoubleType, Seq(Vectors), Seq(child),
+      returnNullable = true)
 
-  override def nullSafeEval(input: Any): Any =
-    QuantCore.scale(input.asInstanceOf[ArrayData], isFloat)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("r")
-      s"""
-         |java.lang.Double $r = ${QuantCore.N}.scale($c, $isFloat);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** Comma-joined int8 codes of a vector (scale computed internally). */
-case class QuantVec(child: Expression) extends QuantBase {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    QuantCore.qvec(input.asInstanceOf[ArrayData], isFloat)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${QuantCore.N}.qvec($c, $isFloat)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
-object QuantCore {
-  /** Fully-qualified name for generated code. */
-  val N: String = getClass.getName.stripSuffix("$")
-
-  private def get(a: ArrayData, i: Int, isFloat: Boolean): Double =
-    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+  private[functions] def get(a: ArrayData, i: Int, elem: Int): Double =
+    if (elem == 0) a.getFloat(i).toDouble else a.getDouble(i)
 
   /** max|x|/127 over non-null elements (Spark double ordering: NaN
-    * greatest), boxed so generated code can branch on null. */
-  def scale(a: ArrayData, isFloat: Boolean): java.lang.Double = {
+    * greatest), boxed so the caller can tell null. */
+  def compute(a: ArrayData, elem: Int): java.lang.Double = {
     val n = a.numElements()
     var max = Double.NaN
     var seen = false
     var i = 0
     while (i < n) {
       if (!a.isNullAt(i)) {
-        val x = Math.abs(get(a, i, isFloat))
+        val x = Math.abs(get(a, i, elem))
         if (!seen || java.lang.Double.compare(x, max) > 0) max = x
         seen = true
       }
@@ -109,9 +66,15 @@ object QuantCore {
     }
     if (seen) java.lang.Double.valueOf(max / 127.0) else null
   }
+}
 
-  def qvec(a: ArrayData, isFloat: Boolean): UTF8String = {
-    val s = scale(a, isFloat)
+object QuantVec {
+  /** Comma-joined int8 codes of a vector (scale computed internally). */
+  def apply(child: Expression): Expression =
+    NativeCall(getClass, StringType, Seq(QuantScale.Vectors), Seq(child))
+
+  def compute(a: ArrayData, elem: Int): UTF8String = {
+    val s = QuantScale.compute(a, elem)
     val n = a.numElements()
     val sb = new java.lang.StringBuilder(n * 4)
     if (s != null) {
@@ -124,7 +87,7 @@ object QuantCore {
           first = false
           if (sc == 0.0) sb.append('0')
           else sb.append(
-            Math.floor(get(a, i, isFloat) / sc + 0.5).toLong.toInt)
+            Math.floor(QuantScale.get(a, i, elem) / sc + 0.5).toLong.toInt)
         }
         i += 1
       }

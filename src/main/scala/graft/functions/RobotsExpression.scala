@@ -1,15 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** RFC 9309 (Robots Exclusion Protocol) evaluation — `true` when
   * `agent` may fetch `path` under the given robots.txt body. The
   * crawl-politeness filter every pipeline over crawled URLs needs;
-  * implemented as a native codegen'd expression (a per-row parse +
+  * implemented as a native codegen'd function (a per-row parse +
   * longest-match walk has no built-in-function composition, and a UDF
   * would break whole-stage codegen — the GramTopStats precedent).
   *
@@ -33,44 +31,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * small text repeated per host; the parse is O(bytes) per row and
   * the matcher O(pattern × path) with patterns a few tens of bytes.
   */
-case class RobotsAllowed(rules: Expression, path: Expression,
-                         agent: String) extends BinaryExpression {
-  require(agent.nonEmpty && !agent.contains("*"),
-    s"agent must be a concrete product token, got '$agent'")
-
-  override def left: Expression = rules
-  override def right: Expression = path
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = rules.nullable || path.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (rules.dataType == StringType && path.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "RobotsAllowed expects (string rules, string path), got " +
-        s"(${rules.dataType.catalogString}, ${path.dataType.catalogString})")
-
-  @transient private lazy val agentLower =
-    agent.toLowerCase(java.util.Locale.ROOT)
-
-  override def nullSafeEval(r: Any, p: Any): Any =
-    RobotsAllowed.allowed(r.asInstanceOf[UTF8String].toString,
-      p.asInstanceOf[UTF8String].toString, agentLower)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val agentRef = ctx.addReferenceObj("agent", agentLower,
-      "java.lang.String")
-    defineCodeGen(ctx, ev, (r, p) =>
-      s"${RobotsAllowed.getClass.getName.stripSuffix("$")}" +
-        s".allowed($r.toString(), $p.toString(), $agentRef)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(rules = newLeft, path = newRight)
-}
-
 object RobotsAllowed {
+  def apply(rules: Expression, path: Expression, agent: String): Expression = {
+    require(agent.nonEmpty && !agent.contains("*"),
+      s"agent must be a concrete product token, got '$agent'")
+    NativeCall(getClass, BooleanType, Seq(Seq(StringType), Seq(StringType)),
+      Seq(rules, path),
+      Seq(NativeCall.obj(agent.toLowerCase(java.util.Locale.ROOT))))
+  }
 
   /** RFC 9309 pattern match: literal prefix with `*` wildcards and an
     * optional trailing `$` anchor. Iterative greedy-with-backtrack
@@ -121,8 +89,10 @@ object RobotsAllowed {
   }
 
   /** Parse + evaluate in one pass over the rules body. */
-  def allowed(rules: String, path: String, agentLower: String)
+  def compute(rulesBody: UTF8String, pathU: UTF8String, agentLower: String)
       : Boolean = {
+    val rules = rulesBody.toString
+    val path = pathU.toString
     // collected (pattern, isAllow) for the exact-agent groups and the
     // * groups; exact wins if any exact group EXISTS (even rule-less)
     var exactSeen = false

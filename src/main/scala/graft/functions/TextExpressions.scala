@@ -1,9 +1,10 @@
 package graft.functions
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,24 +22,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * formulation that agrees beyond the BMP too. Lowercasing is
   * `UTF8String.toLowerCase`, identical to `lower()`.
   */
-case class PolyHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
+object PolyHash {
+  val Mod = 1000000007L
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"PolyHash expects a string, got ${child.dataType.catalogString}")
+  def apply(child: Expression): Expression =
+    NativeCall(getClass, LongType, Seq(Seq(StringType)), Seq(child))
 
-  override def nullSafeEval(input: Any): Any =
-    PolyHash.hash(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${PolyHash.getClass.getName.stripSuffix("$")}.hash($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
+  def compute(s: UTF8String): Long = {
+    val str = s.toLowerCase.toString
+    // both split('') formulations (Java regex AND DuckDB string_split)
+    // yield [''] for the EMPTY string — one ascii=0 fold step
+    if (str.isEmpty) return (7L * 31L) % Mod
+    var acc = 7L
+    var i = 0
+    while (i < str.length) {
+      val cp = str.codePointAt(i)
+      acc = (acc * 31L + cp) % Mod
+      i += Character.charCount(cp)
+    }
+    acc
+  }
 }
 
 /** Fused token statistics — `struct(n_ws, stop_cnt, char_sum, punct_cnt,
@@ -57,42 +60,12 @@ case class PolyHash(child: Expression) extends UnaryExpression {
   *  - `punct_cnt`= occurrences of `[.,;:!?()-]` in the RAW text.
   *  - `n_chars`  = `length(text)` (codepoints) of the RAW text.
   */
-case class TextStats(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = TextStats.schema
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"TextStats expects a string, got ${child.dataType.catalogString}")
-
-  @transient private lazy val stopSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    stopwords.foreach(s.add)
-    s
-  }
-  @transient private lazy val maxStopLen: Int =
-    if (stopwords.isEmpty) 0 else stopwords.map(_.length).max
-
-  override def nullSafeEval(input: Any): Any =
-    TextStats.compute(input.asInstanceOf[UTF8String], stopSet, maxStopLen)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("stopSet", stopSet,
-      "java.util.HashSet<String>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} =
-         |  ${TextStats.getClass.getName.stripSuffix("$")}.compute(
-         |    $c, $setRef, $maxStopLen);
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object TextStats {
+  def apply(child: Expression, stopwords: Seq[String]): Expression =
+    NativeCall(getClass, schema, Seq(Seq(StringType)), Seq(child), Seq(
+      NativeCall.obj(new java.util.HashSet[String](stopwords.asJava)),
+      Literal(if (stopwords.isEmpty) 0 else stopwords.map(_.length).max)))
+
   val schema: StructType = StructType(Seq(
     StructField("n_ws", IntegerType, nullable = false),
     StructField("stop_cnt", IntegerType, nullable = false),
@@ -100,9 +73,7 @@ object TextStats {
     StructField("punct_cnt", IntegerType, nullable = false),
     StructField("n_chars", IntegerType, nullable = false)))
 
-  private def isRegexWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
-      c == '\r'
+  import GramTokens.isRegexWs
 
   private def isPunct(c: Char): Boolean = c match {
     case '.' | ',' | ';' | ':' | '!' | '?' | '(' | ')' | '-' => true
@@ -176,54 +147,27 @@ object TextStats {
   }
 }
 
-/** Unicode normalization (UAX #15) as a native codegen'd expression —
+/** Unicode normalization (UAX #15) as a native codegen'd function —
   * `java.text.Normalizer` under whole-stage codegen, with an
   * `isNormalized` fast path so already-normalized text (the
   * overwhelmingly-common ASCII row) returns the input `UTF8String`
   * without allocating. A Scala UDF here would break codegen and box
   * every row; Spark has no built-in normalizer (SPARK-whichever never
-  * landed), so this is the (b)-tier custom-Expression case.
+  * landed), so this is a native call.
   *
   * `form` is validated at construction: NFC / NFD / NFKC / NFKD.
   * NFC is oracle-gated against DuckDB's utf8proc `nfc_normalize`.
   */
-case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
-  require(UnicodeNormalize.Forms.contains(form),
-    s"unknown normalization form '$form' — one of " +
-      UnicodeNormalize.Forms.mkString(", "))
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"UnicodeNormalize expects a string, got " +
-        child.dataType.catalogString)
-
-  @transient private lazy val nform =
-    java.text.Normalizer.Form.valueOf(form)
-
-  override def nullSafeEval(input: Any): Any =
-    UnicodeNormalize.compute(input.asInstanceOf[UTF8String], nform)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val formRef = ctx.addReferenceObj("nform", nform,
-      "java.text.Normalizer.Form")
-    defineCodeGen(ctx, ev, c =>
-      s"${UnicodeNormalize.getClass.getName.stripSuffix("$")}" +
-        s".compute($c, $formRef)")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object UnicodeNormalize {
   val Forms: Seq[String] = Seq("NFC", "NFD", "NFKC", "NFKD")
 
-  /** Shared by interpreted eval and generated code. */
+  def apply(child: Expression, form: String): Expression = {
+    require(Forms.contains(form),
+      s"unknown normalization form '$form' — one of " + Forms.mkString(", "))
+    NativeCall(getClass, StringType, Seq(Seq(StringType)), Seq(child),
+      Seq(NativeCall.obj(java.text.Normalizer.Form.valueOf(form))))
+  }
+
   def compute(s: UTF8String, form: java.text.Normalizer.Form)
       : UTF8String = {
     val str = s.toString
@@ -256,83 +200,22 @@ object UnicodeNormalize {
   * transient memory is O(distinct grams) map cells — the same order
   * as the document itself.
   */
-case class GramTopStats(child: Expression, ns: Seq[Int])
-    extends UnaryExpression {
-  require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n-gram sizes $ns")
-
-  override def dataType: DataType = StructType(ns.flatMap(n => Seq(
-    StructField(s"top${n}_cnt", LongType, nullable = false),
-    StructField(s"top${n}_len", LongType, nullable = false))))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"GramTopStats expects a string, got ${child.dataType.catalogString}")
-
-  @transient private lazy val nsArr: Array[Int] = ns.toArray
-
-  override def nullSafeEval(input: Any): Any =
-    GramTopStats.compute(input.asInstanceOf[UTF8String], nsArr)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nsRef = ctx.addReferenceObj("nsArr", nsArr, "int[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} =
-         |  ${GramTopStats.getClass.getName.stripSuffix("$")}.compute(
-         |    $c, $nsRef);
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** Shared whitespace tokenizer for the per-document gram passes:
-  * maximal non-`\s` runs, each reduced to a 64-bit polynomial hash
-  * plus its codepoint length (the hashed-gram discipline — gram
-  * classes never materialize strings). */
-private[functions] object GramTokens {
-  private def isRegexWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
-      c == '\r'
-
-  /** Returns (token hashes, token codepoint lengths, token count). */
-  def tokenize(str: String): (Array[Long], Array[Int], Int) = {
-    var tokH = new Array[Long](16)
-    var tokL = new Array[Int](16)
-    var m = 0
-    var i = 0
-    while (i < str.length) {
-      if (!isRegexWs(str.charAt(i))) {
-        var h = 1125899906842597L
-        var cps = 0
-        var j = i
-        while (j < str.length && !isRegexWs(str.charAt(j))) {
-          val c = str.charAt(j)
-          h = h * 31L + c
-          if (!Character.isLowSurrogate(c)) cps += 1
-          j += 1
-        }
-        if (m == tokH.length) {
-          tokH = java.util.Arrays.copyOf(tokH, m * 2)
-          tokL = java.util.Arrays.copyOf(tokL, m * 2)
-        }
-        tokH(m) = h; tokL(m) = cps; m += 1
-        i = j
-      } else i += 1
-    }
-    (tokH, tokL, m)
-  }
-}
-
 object GramTopStats {
-  def compute(s: UTF8String, ns: Array[Int]): InternalRow = {
+  def apply(child: Expression, ns: Seq[Int]): Expression = {
+    require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n-gram sizes $ns")
+    NativeCall(getClass,
+      StructType(ns.flatMap(n => Seq(
+        StructField(s"top${n}_cnt", LongType, nullable = false),
+        StructField(s"top${n}_len", LongType, nullable = false)))),
+      Seq(Seq(StringType)), Seq(child), Seq(GramTokens.sizes(ns)))
+  }
+
+  def compute(s: UTF8String, ns: ArrayData): InternalRow = {
     val (tokH, tokL, m) = GramTokens.tokenize(s.toString)
-    val out = new Array[Any](ns.length * 2)
+    val out = new Array[Any](ns.numElements() * 2)
     var k = 0
-    while (k < ns.length) {
-      val n = ns(k)
+    while (k < ns.numElements()) {
+      val n = ns.getInt(k)
       var bestCnt = 0L
       var bestLen = 0L
       if (m >= n) {
@@ -373,6 +256,48 @@ object GramTopStats {
   }
 }
 
+/** Shared whitespace tokenizer for the per-document gram passes:
+  * maximal non-`\s` runs, each reduced to a 64-bit polynomial hash
+  * plus its codepoint length (the hashed-gram discipline — gram
+  * classes never materialize strings). */
+private[functions] object GramTokens {
+  private[functions] def isRegexWs(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
+      c == '\r'
+
+  /** The n-gram sizes constant of [[GramTopStats]] / [[DupGramCoverage]]. */
+  def sizes(ns: Seq[Int]): Literal =
+    Literal.create(ns, ArrayType(IntegerType, containsNull = false))
+
+  /** Returns (token hashes, token codepoint lengths, token count). */
+  def tokenize(str: String): (Array[Long], Array[Int], Int) = {
+    var tokH = new Array[Long](16)
+    var tokL = new Array[Int](16)
+    var m = 0
+    var i = 0
+    while (i < str.length) {
+      if (!isRegexWs(str.charAt(i))) {
+        var h = 1125899906842597L
+        var cps = 0
+        var j = i
+        while (j < str.length && !isRegexWs(str.charAt(j))) {
+          val c = str.charAt(j)
+          h = h * 31L + c
+          if (!Character.isLowSurrogate(c)) cps += 1
+          j += 1
+        }
+        if (m == tokH.length) {
+          tokH = java.util.Arrays.copyOf(tokH, m * 2)
+          tokL = java.util.Arrays.copyOf(tokL, m * 2)
+        }
+        tokH(m) = h; tokL(m) = cps; m += 1
+        i = j
+      } else i += 1
+    }
+    (tokH, tokL, m)
+  }
+}
+
 /** Fused Gopher quality-signal skeleton (Rae et al. 2021 §A.1.1) —
   * every integer signal of
   * [[graft.pipeline.TextAnalysis.gopherSignals]] in ONE native pass:
@@ -402,51 +327,22 @@ object GramTopStats {
   *  - `n_required` = how many entries of the (pre-lowercased) required
   *    list appear among the `lower()`-cased tokens — lowercasing goes
   *    through the same `UTF8String.toLowerCase` the SQL `lower()`
-  *    uses, duplicates in the list count per entry, and tokens longer
+  *    uses, duplicates in the list count per entry (the constant maps
+  *    each distinct entry to its multiplicity), and tokens longer
   *    (UTF-16) than the longest required entry skip the lowercase
   *    allocation (Unicode lowercase mappings never shrink a string's
   *    UTF-16 length, so such a token can never equal a shorter entry).
   */
-case class GopherStats(child: Expression, requiredLower: Seq[String])
-    extends UnaryExpression {
-  require(requiredLower.nonEmpty, "requiredLower must be non-empty")
-
-  override def dataType: DataType = GopherStats.schema
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"GopherStats expects a string, got ${child.dataType.catalogString}")
-
-  @transient private lazy val reqArr: Array[String] = requiredLower.toArray
-  @transient private lazy val reqSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    requiredLower.foreach(s.add)
-    s
-  }
-  @transient private lazy val maxReqLen: Int = reqArr.map(_.length).max
-
-  override def nullSafeEval(input: Any): Any =
-    GopherStats.compute(input.asInstanceOf[UTF8String], reqArr, reqSet,
-      maxReqLen)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val reqRef = ctx.addReferenceObj("reqArr", reqArr, "java.lang.String[]")
-    val setRef = ctx.addReferenceObj("reqSet", reqSet,
-      "java.util.HashSet<String>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} =
-         |  ${GopherStats.getClass.getName.stripSuffix("$")}.compute(
-         |    $c, $reqRef, $setRef, $maxReqLen);
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object GopherStats {
+  def apply(child: Expression, requiredLower: Seq[String]): Expression = {
+    require(requiredLower.nonEmpty, "requiredLower must be non-empty")
+    val counts = new java.util.HashMap[String, Int]()
+    requiredLower.foreach(w => counts.merge(w, 1, (a, b) => a + b))
+    NativeCall(getClass, schema, Seq(Seq(StringType)), Seq(child), Seq(
+      NativeCall.obj(counts), Literal(requiredLower.map(_.length).max)))
+  }
+
+
   val schema: StructType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
     StructField("n_chars", LongType, nullable = false),
@@ -457,17 +353,15 @@ object GopherStats {
     StructField("n_alpha_words", LongType, nullable = false),
     StructField("n_required", LongType, nullable = false)))
 
-  private def isRegexWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
-      c == '\r'
+  import GramTokens.isRegexWs
 
   private def isBullet(c: Char): Boolean = c match {
     case '-' | '*' | '•' | '‣' | '▪' => true
     case _ => false
   }
 
-  def compute(s: UTF8String, req: Array[String],
-      reqSet: java.util.HashSet[String], maxReqLen: Int): InternalRow = {
+  def compute(s: UTF8String, reqCounts: java.util.HashMap[String, Int],
+      maxReqLen: Int): InternalRow = {
     val str = s.toString
     val n = str.length
     // ---- token scan (trim is subsumed: empties are dropped anyway)
@@ -492,7 +386,7 @@ object GopherStats {
         if (j - i <= maxReqLen) {
           val low = UTF8String.fromString(str.substring(i, j))
             .toLowerCase.toString
-          if (reqSet.contains(low)) {
+          if (reqCounts.containsKey(low)) {
             if (seen == null) seen = new java.util.HashSet[String]()
             seen.add(low)
           }
@@ -502,11 +396,8 @@ object GopherStats {
     }
     var nReq = 0L
     if (seen != null) {
-      var r = 0
-      while (r < req.length) {
-        if (seen.contains(req(r))) nReq += 1L
-        r += 1
-      }
+      val it = seen.iterator()
+      while (it.hasNext) nReq += reqCounts.get(it.next())
     }
     // ---- symbol scan over the raw text
     var nSym = 0L
@@ -569,29 +460,10 @@ object GopherStats {
   *  - `chars_*` = Σ codepoints over (all | distinct) trimmed
   *    segments (`length(array_join(..., ""))` semantics).
   */
-case class LineRepStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LineRepStats.schema
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"LineRepStats expects a string, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    LineRepStats.compute(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} =
-         |  ${LineRepStats.getClass.getName.stripSuffix("$")}.compute($c);
-       """.stripMargin)
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object LineRepStats {
+  def apply(child: Expression): Expression =
+    NativeCall(getClass, schema, Seq(Seq(StringType)), Seq(child))
+
   val schema: StructType = StructType(Seq(
     StructField("n_lines", LongType, nullable = false),
     StructField("n_dup_lines", LongType, nullable = false),
@@ -666,26 +538,6 @@ object LineRepStats {
   }
 }
 
-object PolyHash {
-  val Mod = 1000000007L
-
-  /** Shared by interpreted eval and generated code. */
-  def hash(s: UTF8String): Long = {
-    val str = s.toLowerCase.toString
-    // both split('') formulations (Java regex AND DuckDB string_split)
-    // yield [''] for the EMPTY string — one ascii=0 fold step
-    if (str.isEmpty) return (7L * 31L) % Mod
-    var acc = 7L
-    var i = 0
-    while (i < str.length) {
-      val cp = str.codePointAt(i)
-      acc = (acc * 31L + cp) % Mod
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-}
-
 /** Fused HTML character-reference decode — numeric references
   * (`&#NNN;` decimal / `&#xHH;` hex, VALID Unicode scalar values only)
   * plus the six ubiquitous named entities (`&lt; &gt; &quot; &apos;
@@ -710,27 +562,10 @@ object PolyHash {
   *    over-long digit runs the reference regex rejects — passes
   *    through verbatim.
   */
-case class HtmlEntityDecode(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"HtmlEntityDecode expects a string, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlEntityDecode.decode(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${HtmlEntityDecode.getClass.getName.stripSuffix("$")}.decode($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
 object HtmlEntityDecode {
+  def apply(child: Expression): Expression =
+    NativeCall(getClass, StringType, Seq(Seq(StringType)), Seq(child))
+
   // (key, replacement) — order irrelevant (at most one matches at a
   // position); kept in the historical fold order for readability
   private val Named: Array[(String, Char)] = Array(
@@ -743,7 +578,7 @@ object HtmlEntityDecode {
     else if (c >= 'A' && c <= 'F') c - 'A' + 10
     else -1
 
-  def decode(s: UTF8String): UTF8String = {
+  def compute(s: UTF8String): UTF8String = {
     val str = s.toString
     var i = str.indexOf('&')
     if (i < 0) return s
@@ -827,50 +662,25 @@ object HtmlEntityDecode {
   * `struct(n_word_chars, dup{n}_chars…)`; documents with fewer than
   * n words emit 0 for that n.
   */
-case class DupGramCoverage(child: Expression, ns: Seq[Int])
-    extends UnaryExpression {
-  require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n-gram sizes $ns")
-
-  override def dataType: DataType = StructType(
-    StructField("n_word_chars", LongType, nullable = false) +:
-      ns.map(n =>
-        StructField(s"dup${n}_chars", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"DupGramCoverage expects a string, got ${child.dataType.catalogString}")
-
-  @transient private lazy val nsArr: Array[Int] = ns.toArray
-
-  override def nullSafeEval(input: Any): Any =
-    DupGramCoverage.compute(input.asInstanceOf[UTF8String], nsArr)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nsRef = ctx.addReferenceObj("nsArr", nsArr, "int[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} =
-         |  ${DupGramCoverage.getClass.getName.stripSuffix("$")}.compute(
-         |    $c, $nsRef);
-       """.stripMargin)
+object DupGramCoverage {
+  def apply(child: Expression, ns: Seq[Int]): Expression = {
+    require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n-gram sizes $ns")
+    NativeCall(getClass,
+      StructType(StructField("n_word_chars", LongType, nullable = false) +:
+        ns.map(n => StructField(s"dup${n}_chars", LongType, nullable = false))),
+      Seq(Seq(StringType)), Seq(child), Seq(GramTokens.sizes(ns)))
   }
 
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
-object DupGramCoverage {
-  def compute(s: UTF8String, ns: Array[Int]): InternalRow = {
+  def compute(s: UTF8String, ns: ArrayData): InternalRow = {
     val (tokH, tokL, m) = GramTokens.tokenize(s.toString)
-    val out = new Array[Any](ns.length + 1)
+    val out = new Array[Any](ns.numElements() + 1)
     var wchars = 0L
     var i = 0
     while (i < m) { wchars += tokL(i); i += 1 }
     out(0) = wchars
     var k = 0
-    while (k < ns.length) {
-      val n = ns(k)
+    while (k < ns.numElements()) {
+      val n = ns.getInt(k)
       var dup = 0L
       if (m >= n) {
         val grams = m - n + 1
