@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.ParquetBridge
 import org.apache.spark.sql.types.StructType
 
@@ -32,8 +33,16 @@ object ParquetTable {
     val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     // The reader lists `path` again. Files deleted since the footer read
     // (a concurrent snapshot sweep) would otherwise open as an empty
-    // table; fail the way a missing file does.
-    if (df.inputFiles.isEmpty)
+    // table; fail the way a missing file does. Ask the relation, not
+    // `df.inputFiles`: that reads the optimized plan, where a cached
+    // copy of the same table hides the files.
+    val files = df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location.inputFiles.toSeq
+        case _ => Nil
+      }
+    }.flatten
+    if (files.isEmpty)
       throw new FileNotFoundException(s"no Parquet data file under $path")
     df
   }

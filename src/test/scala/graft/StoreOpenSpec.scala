@@ -241,4 +241,12 @@ class StoreOpenSpec extends SparkSpec {
         .isInstanceOf[FileNotFoundException])
     }
   }
+
+  test("a table whose same read is already cached opens again") {
+    val p = s"$Fixture/customer.parquet"
+    val cached = ParquetTable.read(spark, p).cache()
+    try {
+      assert(ParquetTable.read(spark, p).count() === cached.count())
+    } finally cached.unpersist(blocking = true)
+  }
 }
