@@ -1,0 +1,70 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.core.{MockClock, ParquetTable}
+import graft.pipeline.Similarity
+import graft.planner.Planner
+import graft.store.GraphStore
+import graft.tpch.TpchGraph
+
+/** What a [[SparkEntry]] registry entry runs against: the session, the
+  * TPC-H graph directory and, each built on first use, the opened store,
+  * its planner and the two fixtures several entries share.
+  *
+  * Entries mutate `store` (UPDATE/DELETE read-backs, QL `INTO` labels),
+  * so Verify gives every query a fresh context; Bench shares one
+  * `cache = true` context across all timed entries and forces the
+  * fixtures its selection needs before timing. */
+final class QueryCtx(val spark: SparkSession, val dir: String,
+                     cache: Boolean = false) {
+  lazy val store: GraphStore = TpchGraph.store(spark, dir, cache)
+  lazy val planner: Planner = new Planner(store)
+
+  /** The bitemporal customer fixture (q17/q18/q62/t43, bench
+    * temporal_asof), see [[QueryCtx.versionedCustomers]]. */
+  lazy val versioned: GraphStore =
+    QueryCtx.versionedCustomers(spark, dir, new MockClock(0L))
+
+  /** IVF index over the embeddings (16 cells, 2 Lloyd rounds: the p37
+    * parameters), persisted to a per-context temp dir that is removed at
+    * JVM exit, and loaded back as (assigned, centroids). Building and
+    * persisting is an offline pipeline step, so Bench forces it before
+    * timing and its ann_ivf_probe entry times only the serving path. */
+  lazy val ivfIndex: (DataFrame, DataFrame) = {
+    val dirPath = java.nio.file.Files.createTempDirectory("graft_bench_ivf")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array()).foreach(rm)
+        f.delete(); ()
+      }
+      rm(dirPath.toFile)
+    }))
+    val vecs = store.nodes("embeddings").withColumnRenamed("id", "vec_id")
+    val trained = Similarity.ivfTrain(vecs, k = 16, iters = 2)
+    Similarity.saveIndex(dirPath.toString, trained,
+      Similarity.ivfAssign(vecs, trained))
+    Similarity.loadIndex(spark, dirPath.toString)
+  }
+}
+
+object QueryCtx {
+
+  /** Customer v0 at t=0; at tx=2000 a retroactive correction
+    * (valid_from=500) bumps acctbal by 100 for ids divisible by 3
+    * (reference T1-T4 semantics). `clock` is left at 2000 for callers
+    * that mutate further. */
+  def versionedCustomers(spark: SparkSession, dir: String,
+                         clock: MockClock): GraphStore = {
+    val s = new GraphStore(spark, versioningEnabled = true, clock = clock)
+    s.attachNodes("customer",
+      ParquetTable.read(spark, s"$dir/customer.parquet")
+        .select(col("c_custkey").as("id"), col("c_name").as("name"),
+          col("c_acctbal").as("acctbal")), "id")
+    clock.set(2000L)
+    s.updateWhere("customer", col("id") % 3 === 0,
+      Map("acctbal" -> (col("acctbal") + 100)), validFrom = Some(500L))
+    s
+  }
+}

@@ -17,17 +17,28 @@ import graft.tpch.TpchGraph
   * Every `queries` entry runs through the engine surface (Query AST →
   * Planner → DataFrame, or GraphStore DML), never raw SQL, so the DuckDB
   * oracle genuinely gates engine semantics.
+  *
+  * This is the one query registry: `queries` (gated, dumped by Verify)
+  * and `timed` (graft.Bench's entries) are both `QueryCtx => DataFrame`
+  * definitions here. These bench keys make their gate's operator call
+  * through one shared definition, the gate adding only its output
+  * projection: dedup_exact/p30, text_quality/p38, ann_topk/p36,
+  * asof_join/q51, range_join/q52, decontaminate/p46, quantize_int8/p50,
+  * simhash_pairs/p33, cosine_lsh/p35, tfidf/p52, varlength_paths/v44,
+  * pagerank/g44, mp4_frames/p59, substring_spans/p60,
+  * shuffle_shards/p61, remove_spans/p62, spans_against/p84,
+  * mjpeg_frames/p85, boilerplate/p88, semdedup/p89, flac_decode/p90,
+  * bigram_lm/p91, exr_decode/p96, bpe_tokenize/p99, pq_encode/p146 and
+  * fix_encoding/p107 (a shared column). temporal_asof shares only the
+  * versioned fixture with q17/q18/q62.
   */
 object SparkEntry {
-
-  private def planner(spark: SparkSession, dir: String): Planner =
-    new Planner(TpchGraph.store(spark, dir))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Shape = the reference's flagship bench query (filter → hop → filter,
     * bench/tundra_runner.cpp:118-131) on the testdata graph. */
   def entry(spark: SparkSession): DataFrame =
-    planner(spark, "/root/testdata/sf0.001").plan(
+    new QueryCtx(spark, "/root/testdata/sf0.001").planner.plan(
       Q.from("c:customer")
         .where(ref("c.mktsegment") === "BUILDING" && ref("c.acctbal") > 1000)
         .traverse("c", "placed", "o:orders")
@@ -35,79 +46,66 @@ object SparkEntry {
         .select("c.id", "c.name", "o.id", "o.totalprice")
         .build)
 
-  /** Builds the bitemporal fixture used by q17/q18: customer v0 at t=0;
-    * at tx=2000 a retroactive correction (valid_from=500) bumps acctbal by
-    * 100 for ids divisible by 3 (reference T1-T4 semantics). */
-  private def versionedCustomers(spark: SparkSession,
-                                 dir: String): GraphStore = {
-    val clock = new MockClock(0L)
-    val s = new GraphStore(spark, versioningEnabled = true, clock = clock)
-    s.attachNodes("customer",
-      ParquetTable.read(spark, s"$dir/customer.parquet")
-        .select(col("c_custkey").as("id"), col("c_name").as("name"),
-          col("c_acctbal").as("acctbal")), "id")
-    clock.set(2000L)
-    s.updateWhere("customer", col("id") % 3 === 0,
-      Map("acctbal" -> (col("acctbal") + 100)), validFrom = Some(500L))
-    s
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * runs against a fresh [[QueryCtx]]: entries mutate their store, and
+    * no gate may see another's mutations. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    referenceQueries ++ relationalQueries ++ pipelineQueries ++
-      analyticsQueries ++ extendedQueries
+    (referenceQueries ++ relationalQueries ++ pipelineQueries ++
+      analyticsQueries ++ extendedQueries).map { case (name, q) =>
+      name -> ((s: SparkSession, dir: String) => q(new QueryCtx(s, dir)))
+    }
 
   /** Reference-parity operators (SURVEY.md §2.1-2.5). */
   private def referenceQueries
-      : Map[String, (SparkSession, String) => DataFrame] = Map(
+      : Map[String, QueryCtx => DataFrame] = Map(
     // ---- S1 scan + P1 projection
-    "q01_scan" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q01_scan" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .selectAs("c.id", "c_id").selectAs("c.name", "c_name").build)),
     // ---- F1/F2 numeric filter
-    "q02_filter_numeric" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q02_filter_numeric" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.acctbal") > 1000)
         .selectAs("c.id", "c_id").selectAs("c.acctbal", "c_acctbal").build)),
     // ---- F2 string predicates (intended semantics, not the reference's
     // degraded arrow path)
-    "q03_filter_string" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q03_filter_string" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.name").startsWith("Customer#") &&
           ref("c.name").endsWith("7") && ref("c.name").contains("12"))
         .selectAs("c.id", "c_id").selectAs("c.name", "c_name").build)),
     // ---- F4 AND/OR tree + F3 strict typing
-    "q04_filter_andor" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("o:orders")
+    "q04_filter_andor" -> (c =>
+      c.planner.plan(Q.from("o:orders")
         .where((ref("o.status") === "F" || ref("o.totalprice") > 100000.0) &&
           ref("o.priority") =!= "1-URGENT")
         .selectAs("o.id", "o_id").selectAs("o.status", "o_status")
         .selectAs("o.totalprice", "o_totalprice").build)),
     // ---- J1+J2 INNER hop
-    "q05_join_inner" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q05_join_inner" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .traverse("c", "placed", "o:orders")
         .selectAs("c.id", "c_id").selectAs("o.id", "o_id").build)),
     // ---- J3 LEFT hop
-    "q06_join_left" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q06_join_left" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .traverse("c", "placed", "o:orders", JoinKind.Left)
         .selectAs("c.id", "c_id").selectAs("o.id", "o_id").build)),
     // ---- J4 RIGHT cross-schema
-    "q07_join_right" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q07_join_right" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.acctbal") > 9000)
         .traverse("c", "placed", "o:orders", JoinKind.Right)
         .selectAs("c.id", "c_id").selectAs("o.id", "o_id").build)),
     // ---- J6 FULL cross-schema
-    "q08_join_full" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q08_join_full" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.acctbal") > 9000)
         .traverse("c", "placed", "o:orders", JoinKind.Full)
         .selectAs("c.id", "c_id").selectAs("o.id", "o_id").build)),
     // ---- J7 two hops + F6 inlined WHERE
-    "q09_two_hop" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q09_two_hop" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.mktsegment") === "BUILDING")
         .traverse("c", "placed", "o:orders")
         .traverse("o", "contains", "l:lineitem")
@@ -115,8 +113,8 @@ object SparkEntry {
         .selectAs("c.id", "c_id").selectAs("o.id", "o_id")
         .selectAs("l.linenumber", "l_linenumber").build)),
     // ---- J5 RIGHT self-join dedup: target_ids = all − matched_sources
-    "q10_self_right" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("s:supplier")
+    "q10_self_right" -> (c =>
+      c.planner.plan(Q.from("s:supplier")
         .where(ref("s.acctbal") > 5000.0)
         .traverse("s", "same_nation", "t:supplier", JoinKind.Right)
         .selectAs("s.id", "s_id").selectAs("t.id", "t_id").build)),
@@ -124,8 +122,8 @@ object SparkEntry {
     // thresholds picked non-empty at EVERY SF incl. sf0.001 (4 rows
     // there, 629 at sf0.01) — the check.py 0-row lint rejects gates
     // whose oracle is empty at the replay scale
-    "q11_multi_pattern" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q11_multi_pattern" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.acctbal") > 8000.0)
         .traverse("c", "in_nation", "n:nation")
         .traverse("s:supplier", "in_nation", "n:nation")
@@ -134,8 +132,8 @@ object SparkEntry {
         .selectAs("n.name", "n_name").build)),
     // ---- J8×J3 multi-pattern LEFT union on shared alias n
     // (reference LeftJoinStrategy union: src/query/join.cpp:119-137)
-    "q45_multi_left" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q45_multi_left" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.acctbal") > 9900.0)
         .traverse("c", "in_nation", "n:nation")
         .traverse("s:supplier", "in_nation", "n:nation", JoinKind.Left)
@@ -144,8 +142,8 @@ object SparkEntry {
         .selectAs("s.id", "s_id").build)),
     // ---- J2/J5 cyclic RIGHT: hop between two bound aliases gates rows on
     // the edge and appends never-visited targets (join.cpp:243-331)
-    "q46_cyclic_right" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q46_cyclic_right" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.acctbal") > 9000.0)
         .traverse("c", "placed", "o:orders")
         .traverse("c", "placed", "o2:orders")
@@ -154,8 +152,8 @@ object SparkEntry {
         .selectAs("o2.id", "o2_id").build)),
     // ---- J6 cyclic FULL: kept rows NULL-extend on a missing back-edge,
     // plus never-matched-target extras (self-join covered rule)
-    "q49_cyclic_full" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q49_cyclic_full" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(ref("c.acctbal") > 9000.0)
         .traverse("c", "placed", "o:orders")
         .traverse("c", "placed", "o2:orders")
@@ -163,8 +161,8 @@ object SparkEntry {
         .selectAs("c.id", "c_id").selectAs("o.id", "o_id")
         .selectAs("o2.id", "o2_id").build)),
     // ---- var-length hop through the planner (hops exposed + filtered)
-    "q50_varlength_hop" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("o:orders")
+    "q50_varlength_hop" -> (c =>
+      c.planner.plan(Q.from("o:orders")
         .where(ref("o.totalprice") > 400000.0)
         .traverseRange("o", "next_order", "o2:orders", 1, 3,
           edgeAlias = Some("e"))
@@ -173,8 +171,8 @@ object SparkEntry {
         .selectAs("e.hops", "hops").build)),
     // ---- beyond-reference QL surface: aggregate + implicit GROUP BY +
     // ORDER BY + LIMIT through the planner (SURVEY §2 preamble)
-    "q48_agg_orderby_limit" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q48_agg_orderby_limit" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .traverse("c", "in_nation", "n:nation")
         .selectAs("n.name", "nation")
         .count("cnt")
@@ -183,23 +181,22 @@ object SparkEntry {
         .limit(5)
         .build)),
     // ---- F7 cross-alias deferred WHERE
-    "q12_cross_alias_where" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q12_cross_alias_where" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .traverse("c", "placed", "o:orders")
         .where(Comparison(FieldRef.parse("o.totalprice"), CmpOp.Gt,
           FieldRef.parse("c.acctbal")))
         .where(ref("c.acctbal") > 9900.0)
         .selectAs("c.id", "c_id").selectAs("o.id", "o_id").build)),
     // ---- P2/F5 nested MAP projection + predicate
-    "q13_map_props" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("e:events")
+    "q13_map_props" -> (c =>
+      c.planner.plan(Q.from("e:events")
         .where(ref("e.props.type") === "error" && ref("e.props.k") > 50)
         .selectAs("e.id", "e_id").selectAs("e.props.k", "k").build)),
     // ---- D7 ARRAY append semantics via bulk update
-    "q14_array_append" -> ((s, dir) => {
-      val store = TpchGraph.store(s, dir)
-      val parts = ParquetTable.read(s, s"$dir/part.parquet")
-      val st = new GraphStore(s)
+    "q14_array_append" -> (c => {
+      val parts = ParquetTable.read(c.spark, s"${c.dir}/part.parquet")
+      val st = new GraphStore(c.spark)
       st.attachNodes("item", parts.select(col("p_partkey").as("id"),
         split(col("p_name"), " ").as("tags")), "id")
       st.updateWhere("item", col("id") % 2 === 0, Map("tags" -> lit("X")),
@@ -212,8 +209,8 @@ object SparkEntry {
         .select(col("p_id"), concat_ws(",", col("tags")).as("tags_csv"))
     }),
     // ---- D5/D6 UPDATE then read-back
-    "q15_update_readback" -> ((s, dir) => {
-      val store = TpchGraph.store(s, dir)
+    "q15_update_readback" -> (c => {
+      val store = c.store
       store.updateWhere("customer", col("acctbal") < 0,
         Map("mktsegment" -> lit("X")))
       new Planner(store).plan(Q.from("c:customer")
@@ -221,16 +218,16 @@ object SparkEntry {
         .selectAs("c.mktsegment", "c_mktsegment").build)
     }),
     // ---- D8/D9 DELETE nodes + incident edges, then read edges back
-    "q16_delete_readback" -> ((s, dir) => {
-      val store = TpchGraph.store(s, dir)
+    "q16_delete_readback" -> (c => {
+      val store = c.store
       store.deleteWhere("customer", col("acctbal") < 0)
       store.edges("placed", "customer", "orders").select(
         col("src").as("src"), col("dst").as("dst"))
     }),
     // ---- D8b path-pattern DELETE: matched relationships removed, nodes
     // survive (reference intent, tundra_shell.cpp:847-856)
-    "q47_delete_edges_readback" -> ((s, dir) => {
-      val store = TpchGraph.store(s, dir)
+    "q47_delete_edges_readback" -> (c => {
+      val store = c.store
       val pairs = new Planner(store).plan(Q.from("c:customer")
         .traverse("c", "placed", "o:orders")
         .where(ref("o.totalprice") > 400000.0)
@@ -242,8 +239,8 @@ object SparkEntry {
     // ---- D6 edge path: UPDATE edge properties by MATCH, then read back
     // (matched edge ids -> distributed prop rewrite, reference
     // src/update/update_executor.cpp:177-209)
-    "q57_edge_update_readback" -> ((s, dir) => {
-      val store = TpchGraph.store(s, dir)
+    "q57_edge_update_readback" -> (c => {
+      val store = c.store
       val ids = new Planner(store).plan(Q.from("l:lineitem")
         .traverse("l", "supplied_by", "s:supplier", edgeAlias = Some("e"))
         .where(ref("s.acctbal") > 9000.0)
@@ -255,24 +252,24 @@ object SparkEntry {
           col("quantity"))
     }),
     // ---- T1/T2 valid-time as-of (sees the retroactive correction)
-    "q17_asof_valid" -> ((s, dir) =>
-      new Planner(versionedCustomers(s, dir)).plan(
+    "q17_asof_valid" -> (c =>
+      new Planner(c.versioned).plan(
         Q.from("c:customer").asOfValidTime(2500L)
           .selectAs("c.id", "c_id").selectAs("c.acctbal", "acctbal").build)),
     // ---- T2 bitemporal: tx-time 1500 predates the correction (tx=2000)
-    "q18_asof_bitemporal" -> ((s, dir) =>
-      new Planner(versionedCustomers(s, dir)).plan(
+    "q18_asof_bitemporal" -> (c =>
+      new Planner(c.versioned).plan(
         Q.from("c:customer").asOf(1000L, 1500L)
           .selectAs("c.id", "c_id").selectAs("c.acctbal", "acctbal").build)),
     // ---- OFFSET paging through the full QL path (tie-broken ordering
     // so the page is deterministic)
-    "q64_offset" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir)).execute(
+    "q64_offset" -> (c =>
+      new graft.ql.Shell(c.store).execute(
         "MATCH (c:customer) SELECT c.id AS c_id, c.acctbal AS acctbal " +
           "ORDER BY acctbal DESC, c_id LIMIT 20 OFFSET 10;").get),
     // ---- salted skew join: result must be EXACTLY the plain join's
-    "q63_skew_join" -> ((s, dir) => {
-      val store = TpchGraph.store(s, dir)
+    "q63_skew_join" -> (c => {
+      val store = c.store
       val orders = store.nodes("orders")
         .select(col("id").as("o_id"), col("custkey"))
       val cust = store.nodes("customer")
@@ -282,16 +279,16 @@ object SparkEntry {
     }),
     // ---- valid-time history truncation (SCD2 retention): every read
     // at vt past the watermark must be bit-identical after compaction
-    "q62_compact_readback" -> ((s, dir) => {
-      val store = versionedCustomers(s, dir) // correction closes heads at vt=500
+    "q62_compact_readback" -> (c => {
+      val store = c.versioned // correction closes heads at vt=500
       store.compactVersions("customer", 2100L)
       new Planner(store).plan(
         Q.from("c:customer").asOfValidTime(2500L)
           .selectAs("c.id", "c_id").selectAs("c.acctbal", "acctbal").build)
     }),
     // ---- J9 edge alias: predicates + projection on typed edge props
-    "q19_edge_props" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("l:lineitem")
+    "q19_edge_props" -> (c =>
+      c.planner.plan(Q.from("l:lineitem")
         .traverse("l", "supplied_by", "s:supplier",
           edgeAlias = Some("e"))
         .where(ref("e.quantity") > 45.0)
@@ -299,22 +296,22 @@ object SparkEntry {
         .selectAs("s.id", "s_id").build)),
     // ---- SEMI hop: existence test — customers with >= 1 big order;
     // the target alias binds no columns, its WHERE scopes the test
-    "q53_semi_join" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q53_semi_join" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .traverse("c", "placed", "o:orders", JoinKind.Semi)
         .where(ref("o.totalprice") > 400000.0)
         .selectAs("c.id", "c_id").selectAs("c.acctbal", "acctbal").build)),
     // ---- ANTI hop: absence test — customers with NO big order
-    "q54_anti_join" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q54_anti_join" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .traverse("c", "placed", "o:orders", JoinKind.Anti)
         .where(ref("o.totalprice") > 400000.0)
         .selectAs("c.id", "c_id").selectAs("c.acctbal", "acctbal").build)),
     // ---- scalar functions + arithmetic in WHERE and SELECT
     // (beyond-reference, SURVEY §2.6 — a computed filter and computed
     // output columns through the planner's whitelist compiler)
-    "q56_scalar_exprs" -> ((s, dir) =>
-      planner(s, dir).plan(Q.from("c:customer")
+    "q56_scalar_exprs" -> (c =>
+      c.planner.plan(Q.from("c:customer")
         .where(sfn("length", sref("c.mktsegment")) === slit(8))
         .selectAs("c.id", "c_id")
         .selectExpr(sfn("upper", sref("c.mktsegment")), "seg_u")
@@ -324,27 +321,27 @@ object SparkEntry {
         .build)),
     // ---- DISTINCT projection through the full QL path (parser -> shell
     // -> planner)
-    "q58_distinct" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir)).execute(
+    "q58_distinct" -> (c =>
+      new graft.ql.Shell(c.store).execute(
         "MATCH (c:customer) SELECT DISTINCT c.mktsegment AS seg, " +
           "c.nationkey AS nk;").get),
     // ---- HAVING over aggregate output names (QL path)
-    "q59_having" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir)).execute(
+    "q59_having" -> (c =>
+      new graft.ql.Shell(c.store).execute(
         "MATCH (c:customer)-[:in_nation]->(n:nation) " +
           "SELECT n.name AS nation, COUNT(*) AS cnt HAVING cnt > 8;").get),
     // ---- IN list (QL sugar, desugared to an OR chain so strict typing
     // applies per value)
-    "q60_in_list" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir)).execute(
+    "q60_in_list" -> (c =>
+      new graft.ql.Shell(c.store).execute(
         "MATCH (c:customer) WHERE c.mktsegment IN " +
           "(\"BUILDING\", \"MACHINERY\") " +
           "SELECT c.id AS c_id, c.mktsegment AS seg;").get),
     // ---- user-level set ops between MATCH results (QL path): rich
     // BUILDING customers minus the ones with a cheap order, plus every
     // AUTOMOBILE customer — exercises EXCEPT + UNION chaining
-    "q61_setops_ql" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir)).execute(
+    "q61_setops_ql" -> (c =>
+      new graft.ql.Shell(c.store).execute(
         "MATCH (c:customer) WHERE c.mktsegment = \"BUILDING\" " +
           "AND c.acctbal > 5000.0 SELECT c.id AS c_id " +
           "EXCEPT MATCH (c:customer)-[:placed]->(o:orders) " +
@@ -356,8 +353,8 @@ object SparkEntry {
     // no two SUPPLIERS share a nation (the edge table itself is
     // empty), so the supplier form was a constant-empty gate — the
     // class the check.py 0-row lint now rejects
-    "q55_undirected" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "q55_undirected" -> (c => {
+      val st = c.store
       val ca = st.nodes("customer")
         .select(col("id").as("src"), col("nationkey").as("nk"))
       val cb = st.nodes("customer")
@@ -376,10 +373,10 @@ object SparkEntry {
   /** Beyond-reference relational surface ([ABSENT] in the reference,
     * native in Spark — SURVEY.md §2 exposes them as engine operators). */
   private def relationalQueries
-      : Map[String, (SparkSession, String) => DataFrame] = Map(
+      : Map[String, QueryCtx => DataFrame] = Map(
     // ---- aggregation with exact (decimal) sums
-    "a20_agg_pricing" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("lineitem")
+    "a20_agg_pricing" -> (c =>
+      c.store.nodes("lineitem")
         .groupBy(col("returnflag"), col("linestatus"))
         .agg(sum(col("quantity").cast("decimal(18,2)"))
             .cast("double").as("sum_qty"),
@@ -387,16 +384,16 @@ object SparkEntry {
             .cast("double").as("sum_price"),
           count(lit(1)).as("n"))),
     // ---- ORDER BY + LIMIT (deterministic tie-break on id)
-    "a21_topk" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("customer")
+    "a21_topk" -> (c =>
+      c.store.nodes("customer")
         .orderBy(col("acctbal").desc, col("id").asc).limit(10)
         .select(col("id").as("c_id"), col("acctbal"))),
     // ---- window function: top-3 suppliers by acctbal per nation
-    "a22_window_rank" -> ((s, dir) => {
+    "a22_window_rank" -> (c => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("nationkey")
         .orderBy(col("acctbal").desc, col("id").asc)
-      TpchGraph.store(s, dir).nodes("supplier")
+      c.store.nodes("supplier")
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
         .select(col("id").as("s_id"), col("nationkey"), col("rn"))
     }),
@@ -411,15 +408,15 @@ object SparkEntry {
     // customer at least one order at small SFs. check.py now fails
     // any gate whose oracle returns 0 rows, so a regression to a
     // constant-empty EXCEPT can no longer book as a pass.
-    "a23_setops" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "a23_setops" -> (c => {
+      val st = c.store
       st.nodes("customer").select(col("nationkey").as("nk")).distinct()
         .except(st.nodes("nation").filter(col("regionkey") === 0)
           .select(col("id").as("nk")).distinct())
     }),
     // ---- grouped DISTINCT aggregation
-    "a24_distinct_count" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("customer")
+    "a24_distinct_count" -> (c =>
+      c.store.nodes("customer")
         .groupBy(col("nationkey"))
         .agg(countDistinct(col("mktsegment")).as("n_seg"))),
     // ---- HLL approx-distinct, hard-gated: the query emits the exact
@@ -429,8 +426,8 @@ object SparkEntry {
     // documented error contract instead of a rows-only check.
     // LshRecallSpec "a25 HLL" additionally books the observed relative
     // error.
-    "a25_approx_distinct" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("orders")
+    "a25_approx_distinct" -> (c =>
+      c.store.nodes("orders")
         .agg(countDistinct(col("custkey")).as("exact_custkeys"),
           approx_count_distinct(col("custkey")).as("__approx"))
         .select(col("exact_custkeys"),
@@ -439,25 +436,25 @@ object SparkEntry {
             .as("approx_ok"))),
     // ---- exact percentiles (sort-based; integer inputs keep the linear
     // interpolation bit-identical across engines)
-    "a26_percentile" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("orders")
+    "a26_percentile" -> (c =>
+      c.store.nodes("orders")
         .groupBy(col("status"))
         .agg(percentile(col("custkey"), lit(0.5)).as("med"),
           percentile(col("custkey"), lit(0.25)).as("q1"),
           count(lit(1)).as("n"))),
     // ---- ROLLUP subtotals (NULL group markers match ANSI)
-    "a27_rollup" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("lineitem")
+    "a27_rollup" -> (c =>
+      c.store.nodes("lineitem")
         .rollup(col("returnflag"), col("linestatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("quantity").cast("decimal(18,2)"))
             .cast("double").as("sum_qty"))),
     // ---- PIVOT with an explicit value list (Spark leaves empty cells
     // NULL where a filtered count gives 0 — coalesce to match)
-    "a28_pivot" -> ((s, dir) => {
+    "a28_pivot" -> (c => {
       val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD",
         "MACHINERY")
-      TpchGraph.store(s, dir).nodes("customer")
+      c.store.nodes("customer")
         .groupBy(col("nationkey"))
         .pivot("mktsegment", segs)
         .agg(count(lit(1)))
@@ -465,27 +462,27 @@ object SparkEntry {
           segs.map(g => coalesce(col(g), lit(0L)).as(g)): _*)
     }),
     // ---- tumbling-window aggregation (batch path of the streaming op)
-    "s26_window_agg" -> ((s, dir) => {
-      val ev = TpchGraph.store(s, dir).nodes("events")
+    "s26_window_agg" -> (c => {
+      val ev = c.store.nodes("events")
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
       EventStreams.windowedStats(ev).select("win_start", "etype", "n")
     }),
     // ---- CUBE: all grouping-set combinations
-    "a29_cube" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("lineitem")
+    "a29_cube" -> (c =>
+      c.store.nodes("lineitem")
         .cube(col("returnflag"), col("linestatus"))
         .agg(count(lit(1)).as("n"))),
     // ---- gap-based sessionization, relational formulation (the batch
     // twin of the stateful streaming sessionize — same gap rule)
-    "s27_sessionize" -> ((s, dir) =>
+    "s27_sessionize" -> (c =>
       EventStreams.sessionizeBatch(
-        TpchGraph.store(s, dir).nodes("events"), gapMs = 30L * 60000L)
+        c.store.nodes("events"), gapMs = 30L * 60000L)
         .select("userid", "sess_start", "sess_end", "n_events")),
     // ---- streaming dedup, batch twin: only the key projection is gated
     // (dropDuplicates keeps an arbitrary survivor row; the first-arrival
     // rule is pinned by the streaming spec's MemoryStream test)
-    "s28_stream_dedup" -> ((s, dir) =>
-      EventStreams.dedupStream(TpchGraph.store(s, dir).nodes("events"),
+    "s28_stream_dedup" -> (c =>
+      EventStreams.dedupStream(c.store.nodes("events"),
         Seq("userid", "etype")).select("userid", "etype")),
     // ---- stream-stream keyed interval join, batch twin (the
     // streaming-legal time-bounded join: equi-key + two-sided
@@ -495,8 +492,8 @@ object SparkEntry {
     // µs-aligned (checked: epoch_ns % 1000 = 0 for every row), so the
     // µs conversion is lossless and both engines compare equal
     // instants
-    "s29_interval_join" -> ((s, dir) => {
-      val ev = TpchGraph.store(s, dir).nodes("events")
+    "s29_interval_join" -> (c => {
+      val ev = c.store.nodes("events")
         .withColumn("ts",
           timestamp_micros(expr("ts div 1000")))
       val l = ev.filter(col("etype") === "purchase")
@@ -510,25 +507,25 @@ object SparkEntry {
     // ---- s31: per-key windowed admission rate limiting (crawl
     // politeness; batch twin of the streaming O(1)-state form pinned
     // in PipelineSpec) — at most 3 events per user per hour window
-    "s31_rate_limit" -> ((s, dir) =>
+    "s31_rate_limit" -> (c =>
       EventStreams.rateLimitBatch(
-        TpchGraph.store(s, dir).nodes("events"),
+        c.store.nodes("events"),
         "userid", "ts", "id", maxPerWindow = 3,
         windowNs = 3600000000000L)),
     // ---- s30: keep-first near-dup FILTER (batch twin of the streaming
     // LSH-state ingestion filter; MemoryStream path pinned in
     // PipelineSpec). p31 params → banded recall is exact on this
     // corpus, so the oracle derives is_dup from exact-Jaccard pairs
-    "s30_near_dup_filter" -> ((s, dir) =>
+    "s30_near_dup_filter" -> (c =>
       Dedup.nearDupKeepFirst(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .filter(col("id") < 1000),
         "id", "id", "text", numHashes = 64, bands = 32, shingleK = 2,
         threshold = 0.6)
         .select(col("id").as("doc_id"), col("is_dup"))),
     // p145: the same from the REPL (PIPELINE DEDUP KEEPFIRST)
-    "p145_ql_neardup_keepfirst" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p145_ql_neardup_keepfirst" -> (c => {
+      val st = c.store
       st.attachNodes("nddocs", st.nodes("documents")
         .filter(col("id") < 1000).select(col("id"), col("text")), "id")
       new graft.ql.Shell(st)
@@ -539,81 +536,55 @@ object SparkEntry {
     }),
     // ---- as-of join: newest same-user click at or before each purchase
     // (one shuffle+sort, never a per-left range scan)
-    "q51_asof_join" -> ((s, dir) => {
-      val ev = TpchGraph.store(s, dir).nodes("events")
-      val purchases = ev.filter(col("etype") === "purchase")
-        .select(col("id").as("pid"), col("userid"), col("ts"))
-      val clicks = ev.filter(col("etype") === "click")
-        .select(col("id").as("cid"), col("userid"), col("ts").as("cts"))
-      graft.operators.AsOfJoin.backward(purchases, clicks, Seq("userid"),
-        "ts", "cts").select(col("pid"), col("cid"))
-    }),
+    "q51_asof_join" -> (c => asofJoin(c).select(col("pid"), col("cid"))),
     // ---- keyed interval join: same-user events within 1h after a signup
     // (binned equi-join, never a nested-loop inequality join)
-    "q52_range_join" -> ((s, dir) => {
-      val ev = TpchGraph.store(s, dir).nodes("events")
-      val signups = ev.filter(col("etype") === "signup")
-        .select(col("id").as("aid"), col("userid"), col("ts"))
-      val acts = ev.select(col("id").as("bid"), col("userid"),
-        col("ts").as("bts"))
-      graft.operators.RangeJoin.byKeyAndWindow(signups, acts,
-        Seq("userid"), "ts", "bts", 0L, 3600L * 1000000000L)
-        .filter(col("bid") =!= col("aid"))
-        .select(col("aid"), col("bid"))
-    })
+    "q52_range_join" -> (c => rangeJoin(c)
+      .filter(col("bid") =!= col("aid")).select(col("aid"), col("bid")))
   )
 
   /** LLM-training-data pipeline operators (north star, SURVEY.md §2.10). */
   private def pipelineQueries
-      : Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p30_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(TpchGraph.store(s, dir).nodes("documents"), "id",
-        Seq("text")).select(col("id").as("doc_id"), col("cnt"))),
+      : Map[String, QueryCtx => DataFrame] = Map(
+    "p30_dedup_exact" -> (c =>
+      dedupExact(c).select(col("id").as("doc_id"), col("cnt"))),
     // Hard-gated against the exact all-pairs Jaccard oracle: the LSH
     // output is verified-exact pairs ∩ candidates, so with 32 bands of
     // r=2 the per-pair miss probability at the 0.6 threshold is
     // (1-0.36)^32 ≈ 6e-7 — recall is deterministically 1 on the gate
     // corpora (every real pair sits at J ≥ 0.9, miss ≈ 1e-24), and the
     // oracle checks the banding+verification machinery end to end.
-    "p31_minhash_pairs" -> ((s, dir) =>
+    "p31_minhash_pairs" -> (c =>
       Dedup.minhashLsh(
-        TpchGraph.store(s, dir).nodes("documents").filter(col("id") < 1000),
+        c.store.nodes("documents").filter(col("id") < 1000),
         "id", "text", numHashes = 64, bands = 32, shingleK = 2,
         threshold = 0.6)),
-    "p32_jaccard_block" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(TpchGraph.store(s, dir).nodes("documents"),
+    "p32_jaccard_block" -> (c =>
+      Dedup.ngramJaccardPairs(c.store.nodes("documents"),
         "id", "text", blockCol = "source", k = 3, threshold = 0.01)),
     // Hard-gated: the DuckDB oracle recomputes xxhash64 itself (the
     // [[DuckOracleSql]] HUGEINT XXH64 mirror) and replays the signature,
     // chunk-bucket and hamming logic independently.
-    "p33_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(TpchGraph.store(s, dir).nodes("documents"), "id",
-        "text", maxHamming = 10)),
-    "p34_cosine_pairs" -> ((s, dir) =>
+    "p33_simhash_pairs" -> simhashPairs,
+    "p34_cosine_pairs" -> (c =>
       Dedup.cosinePairs(
-        TpchGraph.store(s, dir).nodes("embeddings").filter(col("id") < 500),
+        c.store.nodes("embeddings").filter(col("id") < 500),
         "id", "embedding", threshold = 0.4)),
     // LSH-bucketed variant (recall < 1 by design) — hard-gated: the
     // oracle mirrors the xxhash64-derived hyperplanes in DuckDB and
     // replays bucketing + exact verification, so the emitted set (NOT
     // just its size) must match bit for bit.
-    "p35_cosine_lsh" -> ((s, dir) =>
-      Dedup.cosinePairsLsh(TpchGraph.store(s, dir).nodes("embeddings"),
-        "id", "embedding", threshold = 0.4, planes = 8)),
-    "p36_ann_topk" -> ((s, dir) => {
-      val vecs = TpchGraph.store(s, dir).nodes("embeddings")
-        .withColumnRenamed("id", "vec_id")
-      Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") < 5),
-        k = 10).select("q_id", "nn_id", "rank", "cosine")
-    }),
+    "p35_cosine_lsh" -> cosineLsh,
+    "p36_ann_topk" -> (c =>
+      annTopK(c).select("q_id", "nn_id", "rank", "cosine")),
     // IVF probing is approximate vs brute force, but fully deterministic
     // given the data — hard-gated by a DuckDB oracle that replays the
     // whole pipeline: lowest-id init, two Lloyd rounds (argmin-L2²
     // assignment, per-dim double mean cast to float — the float cast
     // absorbs cross-engine summation-order noise), 4-probe, exact
     // cosine top-10 within probed cells.
-    "p37_ann_ivf" -> ((s, dir) => {
-      val vecs = TpchGraph.store(s, dir).nodes("embeddings")
+    "p37_ann_ivf" -> (c => {
+      val vecs = c.store.nodes("embeddings")
         .withColumnRenamed("id", "vec_id")
       val centroids = Similarity.ivfTrain(vecs, k = 16, iters = 2)
       val assigned = Similarity.ivfAssign(vecs, centroids)
@@ -625,17 +596,11 @@ object SparkEntry {
     // codebooks + nearest-entry codes; the oracle replays the full
     // generalized training (subspace-tagged Lloyd CTEs, the p37
     // determinism contract) and the final assignment
-    "p146_pq_encode" -> ((s, dir) => {
-      val vecs = TpchGraph.store(s, dir).nodes("embeddings")
-        .withColumnRenamed("id", "vec_id")
-      val cb = Similarity.pqTrain(vecs, m = 4, k = 16, iters = 2)
-      Similarity.pqEncode(vecs, cb, m = 4)
-        .select(col("vec_id"), col("s").cast("int").as("s"),
-          col("code"))
-    }),
+    "p146_pq_encode" -> (c => pqEncode(c)
+      .select(col("vec_id"), col("s").cast("int").as("s"), col("code"))),
     // p147: the same from the REPL (PIPELINE PQ)
-    "p147_ql_pq" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p147_ql_pq" -> (c => {
+      val st = c.store
       new graft.ql.Shell(st)
         .execute("PIPELINE PQ ON embeddings WITH (m = 4, k = 16, " +
           "iters = 2);").get
@@ -645,8 +610,8 @@ object SparkEntry {
     // p148: PQ asymmetric-distance top-k (the ADC serving path) —
     // oracle replays training + encoding + the per-query LUT + the
     // subspace-ordered distance fold + the rank window
-    "p148_pq_topk" -> ((s, dir) => {
-      val vecs = TpchGraph.store(s, dir).nodes("embeddings")
+    "p148_pq_topk" -> (c => {
+      val vecs = c.store.nodes("embeddings")
         .withColumnRenamed("id", "vec_id")
       val cb = Similarity.pqTrain(vecs, m = 4, k = 16, iters = 2)
       val codes = Similarity.pqEncode(vecs, cb, m = 4)
@@ -657,8 +622,8 @@ object SparkEntry {
     }),
     // p150: the ADC top-k from the REPL (PIPELINE PQ TOPK) — must
     // reproduce p148 bit for bit through the lexer/parser/shell
-    "p150_ql_pq_topk" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p150_ql_pq_topk" -> (c => {
+      val st = c.store
       new graft.ql.Shell(st)
         .execute("PIPELINE PQ TOPK ON embeddings " +
           "QUERY IDS (0, 1, 2, 3, 4) WITH (m = 4, k = 16, " +
@@ -671,41 +636,35 @@ object SparkEntry {
     // the oracle replays the ENTIRE pipeline (deterministic IVF
     // training CTEs shared with p37, then the NOT EXISTS keep-rule),
     // so the emitted keeper set must match bit for bit.
-    "p89_semdedup" -> ((s, dir) => {
-      val vecs = TpchGraph.store(s, dir).nodes("embeddings")
-        .withColumnRenamed("id", "vec_id")
-      Dedup.semDedup(vecs, nClusters = 16, iters = 2, threshold = 0.4)
-        .select(col("vec_id"), col("cluster"))
-    }),
-    "p38_text_quality" -> ((s, dir) =>
-      TextAnalysis.annotate(
-        TpchGraph.store(s, dir).nodes("documents"), "text")
-        .select(col("id").as("doc_id"), col("n_tokens"),
-          col("n_tokens_bpe"), col("stopword_ratio"), col("avg_word_len"),
-          col("quality"))),
-    "p39_langid" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("documents")
+    "p89_semdedup" -> (c =>
+      semDedup(c).select(col("vec_id"), col("cluster"))),
+    "p38_text_quality" -> (c =>
+      textQuality(c).select(col("id").as("doc_id"), col("n_tokens"),
+        col("n_tokens_bpe"), col("stopword_ratio"), col("avg_word_len"),
+        col("quality"))),
+    "p39_langid" -> (c =>
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           TextAnalysis.langId(col("text")).as("lang_pred"))),
-    "p40_fingerprint" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("documents")
+    "p40_fingerprint" -> (c =>
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fp"))),
     // composite corpus pipeline: quality gate → exact dedup
-    "p42_clean_corpus" -> ((s, dir) =>
-      Corpus.clean(TpchGraph.store(s, dir).nodes("documents"), "id",
+    "p42_clean_corpus" -> (c =>
+      Corpus.clean(c.store.nodes("documents"), "id",
         "text", minQuality = 0.5)
         .select(col("id").as("doc_id"), col("cnt"))),
-    "p41_multimodal_decode" -> ((s, dir) =>
+    "p41_multimodal_decode" -> (c =>
       Multimodal.decode(Multimodal.attachBinary(
-        TpchGraph.store(s, dir).nodes("documents"), "id", "text"))
+        c.store.nodes("documents"), "id", "text"))
         .select(col("id").as("doc_id"), col("format"), col("width"),
           col("height"))),
     // PII scrub: the synthetic corpus has no real PII, so deterministic
     // fake PII (an email + a digit run derived from the id) is appended
     // on BOTH sides before redaction — the masking itself is what's gated
-    "p43_pii_redact" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("documents")
+    "p43_pii_redact" -> (c =>
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           TextAnalysis.redactPii(concat(col("text"),
             lit(" contact: user"), col("id").cast("string"),
@@ -717,40 +676,34 @@ object SparkEntry {
     // that ARE the operator — is oracle-gated; logprob/ppl are
     // spec-gated (libm ln, the tfIdf precedent). The oracle counts
     // STRING bigrams while the engine shuffles xxhash64 longs.
-    "p91_bigram_lm" -> ((s, dir) =>
-      TextAnalysis.bigramLm(
-        TpchGraph.store(s, dir).nodes("documents"), "id", "text")
-        .select(col("id").as("doc_id"), col("n_bigrams"),
-          col("sum_c2"), col("sum_c1"))),
-    "p44_repetition" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("documents")
+    "p91_bigram_lm" -> (c =>
+      bigramLm(c).select(col("id").as("doc_id"), col("n_bigrams"),
+        col("sum_c2"), col("sum_c1"))),
+    "p44_repetition" -> (c =>
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           TextAnalysis.repetitionRatio(col("text")).as("rep_ratio"))),
     // deterministic held-out split: hash-bucketed, stable as the corpus
     // grows, engine/oracle agree exactly
-    "p45_split" -> ((s, dir) =>
-      Corpus.assignSplits(TpchGraph.store(s, dir).nodes("documents"), "id")
+    "p45_split" -> (c =>
+      Corpus.assignSplits(c.store.nodes("documents"), "id")
         .select(col("id").as("doc_id"), col("split"))),
     // benchmark decontamination: docs sharing 3-grams with a benchmark
     // set (fixture: the id%97==0 subset of the corpus itself — members
     // show ratio 1.0 by construction; the gated semantics are the
     // overlap counts/ratios, which is what matters)
-    "p46_decontaminate" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
-      Curation.decontaminate(docs, docs.filter(col("id") % 97 === 0),
-        "id", "text", k = 3, ratioThreshold = 0.5)
-        .select(col("id").as("doc_id"), col("overlap_cnt"),
-          col("overlap_ratio"), col("contaminated"))
-    }),
+    "p46_decontaminate" -> (c =>
+      decontaminate(c).select(col("id").as("doc_id"), col("overlap_cnt"),
+        col("overlap_ratio"), col("contaminated"))),
     // token-budget sequence packing (sort-and-chunk by id order)
-    "p47_pack_sequences" -> ((s, dir) =>
-      Curation.packSequences(TpchGraph.store(s, dir).nodes("documents"),
+    "p47_pack_sequences" -> (c =>
+      Curation.packSequences(c.store.nodes("documents"),
         "id", "text", budgetTokens = 512)
         .select(col("id").as("doc_id"), col("n_tokens"), col("bin"))),
     // deterministic stratified sampling: 60% of predicted-en docs, 10%
     // of the rest, selected by the same md5 buckets as p45's splits
-    "p48_stratified_sample" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p48_stratified_sample" -> (c => {
+      val docs = c.store.nodes("documents")
       Curation.stratifiedSample(docs, "id",
         TextAnalysis.langId(col("text")), Map("en" -> 60, "und" -> 10))
         .select(col("id").as("doc_id"),
@@ -765,8 +718,8 @@ object SparkEntry {
     // The exact key includes `source` because the generator blocks on it:
     // identical texts in different blocks are NOT linked by the
     // full-corpus run and must not be star-linked either.
-    "p49_dup_clusters" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p49_dup_clusters" -> (c => {
+      val docs = c.store.nodes("documents")
       Curation.dupClustersCollapsed(docs, "id",
         exactKeyCols = Seq("source", "text"),
         pairGen = d => Dedup.ngramJaccardPairs(d, "id", "text",
@@ -776,39 +729,34 @@ object SparkEntry {
     }),
     // symmetric int8 embedding quantization (qvec joined to a string so
     // the harness can sort/hash — the q14 array-column lesson)
-    "p50_quantize_int8" -> ((s, dir) =>
-      Similarity.quantizeInt8(
-        TpchGraph.store(s, dir).nodes("embeddings")
-          .withColumnRenamed("id", "vec_id"))
-        .select(col("vec_id"), col("scale"), col("qvec"))),
+    "p50_quantize_int8" -> (c =>
+      quantizeInt8(c).select(col("vec_id"), col("scale"), col("qvec"))),
     // incremental ingestion: new batch (id >= 250) anti-joined against
     // the accumulated corpus's (id < 250) text keys
-    "p54_dedup_incremental" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p54_dedup_incremental" -> (c => {
+      val docs = c.store.nodes("documents")
       Dedup.exactAgainst(docs.filter(col("id") >= 250),
         docs.filter(col("id") < 250), Seq("text"))
         .select(col("id").as("doc_id"))
     }),
     // frame sampling over binary payloads: frames are md5'd so the
     // harness hashes strings, not raw bytes (q14 array-column lesson)
-    "p53_frame_sample" -> ((s, dir) =>
+    "p53_frame_sample" -> (c =>
       Multimodal.sampleFrames(Multimodal.attachBinary(
-        TpchGraph.store(s, dir).nodes("documents"), "id", "text"),
+        c.store.nodes("documents"), "id", "text"),
         n = 3, frameBytes = 64)
         .select(col("id").as("doc_id"), col("frame_idx"),
           md5(col("frame")).as("frame_md5"),
           length(col("frame")).cast("int").as("frame_len"))),
     // vocabulary build: exact top-k corpus terms, term-asc tie-break
-    "p51_top_terms" -> ((s, dir) =>
-      TextAnalysis.topTerms(TpchGraph.store(s, dir).nodes("documents"),
+    "p51_top_terms" -> (c =>
+      TextAnalysis.topTerms(c.store.nodes("documents"),
         "text", k = 50)),
     // TF-IDF integer skeleton (tf, df); the float tfidf column is
     // spec-gated (ln() last-ulp differs across libms)
-    "p52_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfIdf(TpchGraph.store(s, dir).nodes("documents"),
-        "id", "text", vocab = 20)
-        .select(col("doc").as("doc_id"), col("term"), col("tf"),
-          col("df"))),
+    "p52_tfidf" -> (c =>
+      tfIdf(c).select(col("doc").as("doc_id"), col("term"), col("tf"),
+        col("df"))),
     // REAL image codec, end to end: per-id solid-color PNG (even ids) /
     // BMP (odd ids) synthesized on executors, decoded back through
     // javax.imageio — dims, channel means, and the luminance-histogram
@@ -816,9 +764,9 @@ object SparkEntry {
     // hist_bucket = 1-indexed position of the full pixel count in the
     // 8-bucket histogram (solid color ⇒ exactly one nonzero bucket),
     // gating the histogram CONTENT without hashing an array column.
-    "p55_image_decode" -> ((s, dir) =>
+    "p55_image_decode" -> (c =>
       Multimodal.decode(Multimodal.synthesizeImages(
-        TpchGraph.store(s, dir).nodes("documents"), "id"))
+        c.store.nodes("documents"), "id"))
         .select(col("id").as("doc_id"), col("format"), col("width"),
           col("height"), col("mean_r"), col("mean_g"), col("mean_b"),
           array_position(col("histogram"),
@@ -827,9 +775,9 @@ object SparkEntry {
     // REAL audio codec: per-id square-wave WAV (16-bit mono PCM, 8 kHz)
     // through javax.sound.sampled — header fields read back verbatim,
     // peak and RMS of a ±amp square wave both equal amp exactly.
-    "p56_audio_decode" -> ((s, dir) =>
+    "p56_audio_decode" -> (c =>
       Multimodal.decodeAudio(Multimodal.synthesizeWav(
-        TpchGraph.store(s, dir).nodes("documents"), "id"))
+        c.store.nodes("documents"), "id"))
         .select(col("id").as("doc_id"), col("format"),
           col("sample_rate"), col("channels"), col("n_frames"),
           col("peak_amp"), col("rms_amp"))),
@@ -839,37 +787,33 @@ object SparkEntry {
     // the engine's own CRC-verified FLAC decoder; the oracle REGENERATES
     // the integer wave with generate_series and recomputes peak/RMS, so
     // a genuinely compressed audio bitstream is gated end to end.
-    "p90_flac_decode" -> ((s, dir) =>
-      Multimodal.decodeAudio(Multimodal.synthesizeFlac(
-        TpchGraph.store(s, dir).nodes("documents"), "id"))
-        .select(col("id").as("doc_id"), col("format"),
-          col("sample_rate"), col("channels"), col("n_frames"),
-          col("peak_amp"), col("rms_amp"))),
+    "p90_flac_decode" -> (c =>
+      flacDecode(c).select(col("id").as("doc_id"), col("format"),
+        col("sample_rate"), col("channels"), col("n_frames"),
+        col("peak_amp"), col("rms_amp"))),
     // p96: REAL HDR image decode — OpenEXR through the engine's own
     // scanline codec; the fixture cycles ALL FOUR supported
     // compressions (NONE/RLE/ZIPS/ZIP) by id % 4, and the solid
     // half-float planes make every decoded mean pure id arithmetic.
-    "p96_exr_decode" -> ((s, dir) =>
-      Multimodal.decodeExr(Multimodal.synthesizeExr(
-        TpchGraph.store(s, dir).nodes("documents"), "id"))
-        .select(col("id").as("doc_id"), col("width"), col("height"),
-          col("n_channels"), col("mean_r"), col("mean_g"),
-          col("mean_b"))),
+    "p96_exr_decode" -> (c =>
+      exrDecode(c).select(col("id").as("doc_id"), col("width"),
+        col("height"), col("n_channels"), col("mean_r"), col("mean_g"),
+        col("mean_b"))),
     // REAL image resample: cap the longest side at 32 px (aspect kept,
     // integer floor), re-encode, decode again — within-budget images
     // pass through byte-identical, resampled solid color stays exact.
-    "p57_image_resize" -> ((s, dir) =>
+    "p57_image_resize" -> (c =>
       Multimodal.decode(Multimodal.resizeImages(Multimodal.synthesizeImages(
-        TpchGraph.store(s, dir).nodes("documents"), "id"), maxDim = 32))
+        c.store.nodes("documents"), "id"), maxDim = 32))
         .select(col("id").as("doc_id"), col("format"), col("width"),
           col("height"), col("mean_r"), col("mean_g"), col("mean_b"))),
     // REAL video container: per-id RIFF/AVI with uncompressed RGB24 DIB
     // frames, frame-sampled by walking the actual chunk structure (strf
     // header for dims, movi 00db chunks for frames) — k=3 evenly-spaced
     // picks; every stat is lossless pixel arithmetic on (id, frame_idx).
-    "p58_video_frames" -> ((s, dir) =>
+    "p58_video_frames" -> (c =>
       Multimodal.sampleVideoFrames(Multimodal.synthesizeAvi(
-        TpchGraph.store(s, dir).nodes("documents"), "id"), k = 3)
+        c.store.nodes("documents"), "id"), k = 3)
         .select(col("id").as("doc_id"), col("n_frames"),
           col("frame_idx"), col("width"), col("height"),
           col("mean_r"), col("mean_g"), col("mean_b"))),
@@ -878,52 +822,45 @@ object SparkEntry {
     // stco) over spec-shaped synthesized containers with TWO samples
     // per chunk; every stat is lossless pixel arithmetic on
     // (id, frame_idx).
-    "p59_mp4_frames" -> ((s, dir) =>
-      Multimodal.sampleVideoFrames(Multimodal.synthesizeMp4(
-        TpchGraph.store(s, dir).nodes("documents"), "id"), k = 3)
-        .select(col("id").as("doc_id"), col("n_frames"),
-          col("frame_idx"), col("width"), col("height"),
-          col("mean_r"), col("mean_g"), col("mean_b"))),
+    "p59_mp4_frames" -> (c =>
+      mp4Frames(c).select(col("id").as("doc_id"), col("n_frames"),
+        col("frame_idx"), col("width"), col("height"),
+        col("mean_r"), col("mean_g"), col("mean_b"))),
     // Duplicated-substring spans (Lee et al. 2021 shape): token
     // positions covered by an 8-gram occurring >= 2 times corpus-wide,
     // merged per doc. Hash-grain corpus shuffle; the DuckDB oracle
     // groups the gram STRINGS, so a 64-bit gram-hash collision would
     // surface as a hash mismatch here.
-    "p60_substring_spans" -> ((s, dir) =>
-      Dedup.duplicatedSpans(TpchGraph.store(s, dir).nodes("documents"),
-        "id", "text", k = 8)
-        .select(col("id").as("doc_id"), col("span_start"),
-          col("span_end"))),
+    "p60_substring_spans" -> (c => substringSpans(c)
+      .select(col("id").as("doc_id"), col("span_start"), col("span_end"))),
     // Duplicated-substring span REMOVAL (p62 — the surgery half of the
     // Lee et al. family): cut p60's spans out of the token stream, drop
     // docs with an empty remnant. The oracle replays it as DuckDB
     // string surgery over the gaps-and-islands spans (grams grouped as
     // strings; the engine shuffles xxhash64 longs — independent).
-    "p62_remove_spans" -> ((s, dir) =>
-      Dedup.removeSpans(TpchGraph.store(s, dir).nodes("documents"),
-        "id", "text", k = 8)
-        .select(col("id").as("doc_id"), col("clean_text"),
-          col("n_kept"), col("n_removed"))),
+    "p62_remove_spans" -> (c =>
+      removeSpans(c).select(col("id").as("doc_id"), col("clean_text"),
+        col("n_kept"), col("n_removed"))),
     // ---- p66-p69: one oracle-gated QL round-trip per PIPELINE family
     // (r11 verdict #7 — the pipeline operators are now reachable from
     // the REPL like everything else); each statement must reproduce its
     // Scala-API twin's oracle bit for bit
-    "p66_ql_dedup" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p66_ql_dedup" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE DEDUP EXACT ON documents;").get
         .select(col("id").as("doc_id"), col("cnt"))),
-    "p67_ql_spans" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p67_ql_spans" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE SPANS ON documents WITH (k = 8);").get
         .select(col("id").as("doc_id"), col("span_start"),
           col("span_end"))),
-    "p68_ql_shards" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p68_ql_shards" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE SHARDS ON documents WITH (n = 16);").get
         .select(col("id").as("doc_id"), col("shard"), col("sort_key"),
           col("pos"))),
-    "p69_ql_ann" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p69_ql_ann" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE ANN ON embeddings QUERY IDS (0, 1, 2, 3, 4);")
         .get.select(col("q_id"), col("nn_id"), col("rank"),
           col("cosine"))),
@@ -931,8 +868,8 @@ object SparkEntry {
     // (decontaminate / pack / sample / clusters), completing the REPL
     // surface over SURVEY §2.10 — each reuses (or mirrors) its
     // Scala-API twin's oracle
-    "p70_ql_decontaminate" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p70_ql_decontaminate" -> (c => {
+      val st = c.store
       st.attachNodes("benchmark",
         st.nodes("documents").filter(col("id") % 97 === 0), "id")
       new graft.ql.Shell(st)
@@ -941,31 +878,31 @@ object SparkEntry {
         .select(col("id").as("doc_id"), col("overlap_cnt"),
           col("overlap_ratio"), col("contaminated"))
     }),
-    "p71_ql_pack" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p71_ql_pack" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE PACK ON documents WITH (budget = 512);").get
         .select(col("id").as("doc_id"), col("n_tokens"), col("bin"))),
-    "p72_ql_sample" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p72_ql_sample" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE SAMPLE ON documents WITH (by = \"source\", " +
           "pct = \"src1:60,src3:25\", default_pct = 10);").get
         .select(col("id").as("doc_id"), col("source"))),
-    "p73_ql_clusters" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p73_ql_clusters" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE CLUSTERS ON documents WITH " +
           "(block = \"source\", k = 3, threshold = 0.01);").get
         .select(col("id").as("doc_id"), col("cluster"))),
     // p74/p75: the ANN scale path (train-on-the-fly IVF probe) and the
     // hyperplane-LSH embedding dedup from the REPL — gated against the
     // p37 / p35 full-replay oracles
-    "p74_ql_ann_ivf" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p74_ql_ann_ivf" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE ANN IVF ON embeddings " +
           "QUERY IDS (0, 1, 2, 3, 4) WITH (clusters = 16, iters = 2, " +
           "probe = 4, k = 10);").get
         .select(col("q_id"), col("nn_id"), col("rank"), col("cosine"))),
-    "p75_ql_cosine_lsh" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p75_ql_cosine_lsh" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE DEDUP COSINE_LSH ON embeddings WITH " +
           "(threshold = 0.4, planes = 8);").get
         .select(col("id_a"), col("id_b"), col("cosine"))),
@@ -976,18 +913,18 @@ object SparkEntry {
     // mirror / codepoint fingerprint / gram grouping over 2-, 3- and
     // 4-byte UTF-8. (p61's hash input is the integer id — text encoding
     // cannot reach it, so it has no non-ASCII twin.)
-    "p63_simhash_nonascii" -> ((s, dir) =>
+    "p63_simhash_nonascii" -> (c =>
       Dedup.simhashPairs(
-        nonAsciiDocs(TpchGraph.store(s, dir).nodes("documents"),
+        nonAsciiDocs(c.store.nodes("documents"),
           prefix = false),
         "id", "text", maxHamming = 10)),
-    "p64_fingerprint_nonascii" -> ((s, dir) =>
-      nonAsciiDocs(TpchGraph.store(s, dir).nodes("documents"))
+    "p64_fingerprint_nonascii" -> (c =>
+      nonAsciiDocs(c.store.nodes("documents"))
         .select(col("id").as("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fp"))),
-    "p65_spans_nonascii" -> ((s, dir) =>
+    "p65_spans_nonascii" -> (c =>
       Dedup.duplicatedSpans(
-        nonAsciiDocs(TpchGraph.store(s, dir).nodes("documents")),
+        nonAsciiDocs(c.store.nodes("documents")),
         "id", "text", k = 8)
         .select(col("id").as("doc_id"), col("span_start"),
           col("span_end"))),
@@ -999,16 +936,14 @@ object SparkEntry {
     // proven exhaustively in MultimodalCodecSpec), so the decoded
     // means replay as pure id arithmetic in DuckDB even though the
     // bytes cross a real lossy-codec bitstream.
-    "p85_mjpeg_frames" -> ((s, dir) =>
-      Multimodal.sampleVideoFrames(Multimodal.synthesizeMjpegAvi(
-        TpchGraph.store(s, dir).nodes("documents"), "id"), k = 3)
-        .select(col("id").as("doc_id"), col("n_frames"),
-          col("frame_idx"), col("width"), col("height"),
-          col("mean_r"), col("mean_g"), col("mean_b"))),
+    "p85_mjpeg_frames" -> (c =>
+      mjpegFrames(c).select(col("id").as("doc_id"), col("n_frames"),
+        col("frame_idx"), col("width"), col("height"),
+        col("mean_r"), col("mean_g"), col("mean_b"))),
     // p86: video frame sampling from the REPL (MEDIA FRAMES) over the
     // attached DIB-AVI label — must reproduce p58's oracle bit for bit
-    "p86_ql_media_frames" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p86_ql_media_frames" -> (c => {
+      val st = c.store
       st.attachNodes("videos", Multimodal.synthesizeAvi(
         st.nodes("documents"), "id"), "id")
       new graft.ql.Shell(st)
@@ -1021,8 +956,8 @@ object SparkEntry {
     // corpus gram-count table (the operator a daily ingest runs);
     // oracle = spansAgainst's qualifying positions fed through the
     // same DuckDB string surgery as p62
-    "p87_remove_spans_against" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p87_remove_spans_against" -> (c => {
+      val docs = c.store.nodes("documents")
       Dedup.removeSpansAgainst(docs.filter(col("id") % 3 === 0),
         Dedup.spanGramCounts(docs.filter(col("id") % 3 =!= 0),
           "id", "text", 8),
@@ -1038,25 +973,17 @@ object SparkEntry {
     // 0-14 occur 6 times, 15-96 occur 5), so the >= boundary is pinned.
     // The oracle replays the whole operator with STRING lines — the
     // engine counts xxhash64 longs, so the hash-grain swap is gated.
-    "p88_boilerplate" -> ((s, dir) =>
-      Curation.removeBoilerplate(
-        TpchGraph.store(s, dir).nodes("documents").select(col("id"),
-          concat_ws("\n",
-            concat(lit("NAV-"), (col("id") % 5).cast("string")),
-            coalesce(col("text"), lit("")),
-            concat(lit("FOOTER-"), (col("id") % 97).cast("string")))
-            .as("text")),
-        "id", "text", minDocs = 6)
-        .select(col("id").as("doc_id"), col("clean_text"),
-          col("n_kept"), col("n_removed"))),
+    "p88_boilerplate" -> (c =>
+      boilerplate(c).select(col("id").as("doc_id"), col("clean_text"),
+        col("n_kept"), col("n_removed"))),
     // p103: incremental boilerplate removal — the fresh batch
     // (id % 3 == 0) is cleaned against the corpus's persisted
     // line-count table: a line is boilerplate when batch + corpus
     // distinct-doc counts reach minDocs. The FOOTER groups straddle
     // the threshold only with corpus assistance, so the assisted join
     // path is what the gate pins.
-    "p103_boilerplate_against" -> ((s, dir) => {
-      val wrapped = TpchGraph.store(s, dir).nodes("documents")
+    "p103_boilerplate_against" -> (c => {
+      val wrapped = c.store.nodes("documents")
         .select(col("id"), concat_ws("\n",
           concat(lit("NAV-"), (col("id") % 5).cast("string")),
           coalesce(col("text"), lit("")),
@@ -1077,21 +1004,14 @@ object SparkEntry {
     // replays both relations with STRING grams (engine shuffles
     // xxhash64 longs — independent) and the same gaps-and-islands
     // merge as p60.
-    "p84_spans_against" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
-      Dedup.spansAgainst(docs.filter(col("id") % 3 === 0),
-        Dedup.spanGramCounts(docs.filter(col("id") % 3 =!= 0),
-          "id", "text", 8),
-        "id", "text", k = 8)
-        .select(col("id").as("doc_id"), col("span_start"),
-          col("span_end"))
-    }),
+    "p84_spans_against" -> (c => spansAgainst(c)
+      .select(col("id").as("doc_id"), col("span_start"), col("span_end"))),
     // ---- p76: the QL INTO-chain (r12 verdict #2) — a real curation
     // SCRIPT through the shell: span surgery persists INTO a label,
     // the next statement exact-dedups the attached result; the gate
     // replays the same composition in one DuckDB query
-    "p76_ql_chain" -> ((s, dir) => {
-      val sh = new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p76_ql_chain" -> (c => {
+      val sh = new graft.ql.Shell(c.store)
       sh.execute(
         "PIPELINE SPANS REMOVE ON documents WITH (k = 8) INTO cleaned;")
       sh.execute(
@@ -1102,24 +1022,24 @@ object SparkEntry {
     // ---- p77-p83: QL round-trips for the text-analysis and media
     // families (r12 verdict #7), each gated against its Scala twin's
     // oracle bit-for-bit
-    "p77_ql_text_quality" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p77_ql_text_quality" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE TEXT QUALITY ON documents;").get
         .select(col("id").as("doc_id"), col("n_tokens"),
           col("n_tokens_bpe"), col("stopword_ratio"),
           col("avg_word_len"), col("quality"))),
-    "p78_ql_langid" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p78_ql_langid" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE TEXT LANGID ON documents;").get
         .select(col("id").as("doc_id"), col("lang_pred"))),
-    "p79_ql_fingerprint" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p79_ql_fingerprint" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE TEXT FINGERPRINT ON documents;").get
         .select(col("id").as("doc_id"), col("fp"))),
     // p80 mirrors p43's fixture: the deterministic fake PII is attached
     // as its own label, then redacted through the QL statement
-    "p80_ql_pii" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p80_ql_pii" -> (c => {
+      val st = c.store
       st.attachNodes("piidocs",
         st.nodes("documents").select(col("id"),
           concat(col("text"), lit(" contact: user"),
@@ -1129,15 +1049,15 @@ object SparkEntry {
         .execute("PIPELINE TEXT PII ON piidocs;").get
         .select(col("id").as("doc_id"), col("redacted"))
     }),
-    "p81_ql_repetition" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p81_ql_repetition" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE TEXT REPETITION ON documents;").get
         .select(col("id").as("doc_id"), col("rep_ratio"))),
     // p82/p83: the REAL codec paths (javax.imageio / javax.sound) from
     // the REPL — the synthesized PNG/BMP and WAV labels are attached,
     // then decoded through the MEDIA statements
-    "p82_ql_media_image" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p82_ql_media_image" -> (c => {
+      val st = c.store
       st.attachNodes("images", Multimodal.synthesizeImages(
         st.nodes("documents"), "id"), "id")
       new graft.ql.Shell(st)
@@ -1148,8 +1068,8 @@ object SparkEntry {
             col("width").cast("long") * col("height"))
             .cast("int").as("hist_bucket"))
     }),
-    "p83_ql_media_audio" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p83_ql_media_audio" -> (c => {
+      val st = c.store
       st.attachNodes("sounds", Multimodal.synthesizeWav(
         st.nodes("documents"), "id"), "id")
       new graft.ql.Shell(st)
@@ -1162,8 +1082,8 @@ object SparkEntry {
     // boilerplate removal, SemDeDup, bigram LM, FLAC audio — each must
     // reproduce its Scala twin's oracle bit for bit through the real
     // lexer/parser/shell
-    "p92_ql_boilerplate" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p92_ql_boilerplate" -> (c => {
+      val st = c.store
       st.attachNodes("mldocs", st.nodes("documents").select(col("id"),
         concat_ws("\n",
           concat(lit("NAV-"), (col("id") % 5).cast("string")),
@@ -1176,21 +1096,21 @@ object SparkEntry {
         .select(col("id").as("doc_id"), col("clean_text"),
           col("n_kept"), col("n_removed"))
     }),
-    "p93_ql_semdedup" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p93_ql_semdedup" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE SEMDEDUP ON embeddings " +
           "WITH (clusters = 16, iters = 2, threshold = 0.4);").get
         .select(col("id").as("vec_id"), col("cluster"))),
-    "p94_ql_bigram_lm" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p94_ql_bigram_lm" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE TEXT LM ON documents;").get
         .select(col("id").as("doc_id"), col("n_bigrams"),
           col("sum_c2"), col("sum_c1"))),
     // FLAC flows through the SAME MEDIA AUDIO statement as WAV — the
     // decoder dispatches on magic bytes, so the QL surface needs no
     // new syntax for a new codec
-    "p95_ql_media_flac" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p95_ql_media_flac" -> (c => {
+      val st = c.store
       st.attachNodes("flacs", Multimodal.synthesizeFlac(
         st.nodes("documents"), "id"), "id")
       new graft.ql.Shell(st)
@@ -1204,12 +1124,12 @@ object SparkEntry {
     // deterministic signals so the row hash-gates exactly (the engine
     // counts distinct texts at xxhash64 grain; the oracle counts
     // strings — the hash swap is gated)
-    "p101_corpus_profile" -> ((s, dir) =>
-      Corpus.profile(TpchGraph.store(s, dir).nodes("documents"),
+    "p101_corpus_profile" -> (c =>
+      Corpus.profile(c.store.nodes("documents"),
         "id", "text")),
     // p102: the same from the REPL
-    "p102_ql_profile" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p102_ql_profile" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE PROFILE ON documents;").get),
     // p99: BPE tokenizer — distributed merge training on the distinct-
     // word table + greedy lowest-rank apply. The merge CHOICES are
@@ -1220,16 +1140,12 @@ object SparkEntry {
     // whitespace-normalized lowercased input bit for bit — which
     // breaks if training corrupts a symbol, apply merges across word
     // boundaries, or the marker handling drops a character.
-    "p99_bpe_roundtrip" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
-      val merges = graft.pipeline.Bpe.train(docs, "text", numMerges = 20)
-      graft.pipeline.Bpe.tokenize(docs, "id", "text", merges)
-        .select(col("id").as("doc_id"), col("detok"))
-    }),
+    "p99_bpe_roundtrip" -> (c =>
+      bpeTokenize(c).select(col("id").as("doc_id"), col("detok"))),
     // p100: the BPE round trip from the REPL — must reproduce p99's
     // oracle bit for bit through the real lexer/parser/shell
-    "p100_ql_bpe" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p100_ql_bpe" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE TEXT BPE ON documents WITH (merges = 20);")
         .get.select(col("id").as("doc_id"), col("detok"))),
     // p98: compressed-JSONL ingestion — the round trip a web-scale
@@ -1238,16 +1154,16 @@ object SparkEntry {
     // re-ingested via the streaming binaryFile reader in STRICT mode,
     // and must reproduce the original table bit for bit (JSON string
     // escaping, long ids, zstd framing all gated)
-    "p98_ingest_jsonl_zst" -> ((s, dir) => {
+    "p98_ingest_jsonl_zst" -> (c => {
       import org.apache.spark.sql.types._
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+      val docs = c.store.nodes("documents")
         .select(col("id"), col("text"), col("lang"), col("source"))
       val out = new java.io.File(
         sys.props("java.io.tmpdir"),
-        "graft_jsonl_" + Integer.toHexString(dir.hashCode))
+        "graft_jsonl_" + Integer.toHexString(c.dir.hashCode))
         .getAbsolutePath
       Ingest.writeJsonlZst(docs, out, shards = 4)
-      Ingest.jsonlFiles(s, out + "/*.jsonl.zst", StructType(Seq(
+      Ingest.jsonlFiles(c.spark, out + "/*.jsonl.zst", StructType(Seq(
         StructField("id", LongType), StructField("text", StringType),
         StructField("lang", StringType),
         StructField("source", StringType))), strict = true)
@@ -1260,15 +1176,15 @@ object SparkEntry {
     // byte-exact streaming parser; the gate pins Content-Length byte
     // accounting over multi-byte UTF-8, CRLF framing, the URI round
     // trip and gzip member handling (null text writes as '')
-    "p104_warc_ingest" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p104_warc_ingest" -> (c => {
+      val docs = c.store.nodes("documents")
         .select(col("id"), col("text"), col("source"))
       val out = new java.io.File(
         sys.props("java.io.tmpdir"),
-        "graft_warc_" + Integer.toHexString(dir.hashCode))
+        "graft_warc_" + Integer.toHexString(c.dir.hashCode))
         .getAbsolutePath
       Ingest.writeWarcGz(docs, out, shards = 4)
-      Ingest.warcFiles(s, out + "/*.warc.gz")
+      Ingest.warcFiles(c.spark, out + "/*.warc.gz")
         .select(
           regexp_extract(col("target_uri"), "/(\\d+)$", 1)
             .cast("long").as("doc_id"),
@@ -1285,18 +1201,18 @@ object SparkEntry {
     // split: status / content_type / charset from the headers, the
     // body decoded per charset. The oracle states the expected fields
     // in closed form — it never re-runs the split
-    "p118_http_split" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p118_http_split" -> (c => {
+      val docs = c.store.nodes("documents")
         .select(col("id"),
           concat(lit("<p>"), coalesce(col("text"), lit("")),
             lit(" café 中文</p>")).as("text"),
           col("source"))
       val out = new java.io.File(
         sys.props("java.io.tmpdir"),
-        "graft_warc_http_" + Integer.toHexString(dir.hashCode))
+        "graft_warc_http_" + Integer.toHexString(c.dir.hashCode))
         .getAbsolutePath
       Ingest.writeWarcGz(docs, out, shards = 4, httpWrap = true)
-      Ingest.httpResponses(Ingest.warcFiles(s, out + "/*.warc.gz"))
+      Ingest.httpResponses(Ingest.warcFiles(c.spark, out + "/*.warc.gz"))
         .select(
           regexp_extract(col("target_uri"), "/(\\d+)$", 1)
             .cast("long").as("doc_id"),
@@ -1309,8 +1225,8 @@ object SparkEntry {
     // still contain HTTP headers when they reach stripHtml" gap,
     // closed end to end): headers must be GONE from the clean text,
     // tags stripped, the decoration preserved
-    "p119_ql_http_chain" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p119_ql_http_chain" -> (c => {
+      val st = c.store
       val docs = st.nodes("documents")
         .select(col("id"),
           concat(lit("<h1>"), col("source"), lit("</h1><p>"),
@@ -1320,11 +1236,11 @@ object SparkEntry {
           col("source"))
       val out = new java.io.File(
         sys.props("java.io.tmpdir"),
-        "graft_warc_chain_" + Integer.toHexString(dir.hashCode))
+        "graft_warc_chain_" + Integer.toHexString(c.dir.hashCode))
         .getAbsolutePath
       Ingest.writeWarcGz(docs, out, shards = 4, httpWrap = true)
       st.attachNodes("warcrows",
-        Ingest.warcFiles(s, out + "/*.warc.gz")
+        Ingest.warcFiles(c.spark, out + "/*.warc.gz")
           .select(regexp_extract(col("target_uri"), "/(\\d+)$", 1)
             .cast("long").as("id"), col("warc_type"), col("payload")),
         "id")
@@ -1339,23 +1255,14 @@ object SparkEntry {
     // UTF-8-seen-as-Latin-1 mis-decode, repair, and the result must
     // reproduce the decorated original bit for bit; clean ASCII rides
     // the identity path of the same expression
-    "p107_mojibake_repair" -> ((s, dir) => {
-      val deco = concat(coalesce(col("text"), lit("")),
-        lit(" café — naïve 中文 €"))
-      TpchGraph.store(s, dir).nodes("documents")
-        .select(col("id").as("doc_id"),
-          graft.pipeline.Encoding.repairMojibake(
-            graft.pipeline.Encoding.toMojibake(deco)).as("fixed"))
-    }),
+    "p107_mojibake_repair" -> (c => c.store.nodes("documents")
+      .select(col("id").as("doc_id"), mojibakeRepaired.as("fixed"))),
     // p108: the same through the REPL (PIPELINE TEXT FIXENCODING on a
     // pre-corrupted attached label)
-    "p108_ql_fixencoding" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
-      val deco = concat(coalesce(col("text"), lit("")),
-        lit(" café — naïve 中文 €"))
-      st.attachNodes("mojidocs", st.nodes("documents")
-        .select(col("id"),
-          graft.pipeline.Encoding.toMojibake(deco).as("text")), "id")
+    "p108_ql_fixencoding" -> (c => {
+      val st = c.store
+      st.attachNodes("mojidocs", st.nodes("documents").select(col("id"),
+        graft.pipeline.Encoding.toMojibake(mojibakeDeco).as("text")), "id")
       new graft.ql.Shell(st)
         .execute("PIPELINE TEXT FIXENCODING ON mojidocs;").get
         .select(col("id").as("doc_id"), col("fixed"))
@@ -1365,15 +1272,15 @@ object SparkEntry {
     // recomputes the per-source per-million rates with the SAME
     // deterministic arithmetic (name-ordered weight sum, IEEE sqrt/
     // floor) and replays the md5 buckets
-    "p116_temperature_mix" -> ((s, dir) =>
+    "p116_temperature_mix" -> (c =>
       graft.pipeline.Curation.temperatureMix(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id"), col("source")),
         "id", "source", budgetDocs = 300L, tau = 0.5)
         .select(col("id").as("doc_id"), col("source"))),
     // p117: the same from the REPL
-    "p117_ql_mix" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p117_ql_mix" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute("PIPELINE MIX ON documents WITH (budget = 300);").get
         .select(col("id").as("doc_id"), col("source"))),
     // p114: URL canonicalization — three synthesized variants per id
@@ -1382,7 +1289,7 @@ object SparkEntry {
     // empty-value param retention, fragment strip, empty-path → '/'.
     // Closed-form oracle (states the expected URL, never re-runs the
     // normalizer)
-    "p114_canonical_url" -> ((s, dir) => {
+    "p114_canonical_url" -> (c => {
       val raw = element_at(array(
         concat(lit("HTTP://WWW."), upper(col("source")),
           lit(".Example.COM:80/Docs/"), col("id"),
@@ -1392,13 +1299,13 @@ object SparkEntry {
         concat(lit("ftp://Host.Net:2121/A/"), col("id"),
           lit("?z=1&y=&utm_medium=m"))),
         (col("id") % 3).cast("int") + 1)
-      TpchGraph.store(s, dir).nodes("documents")
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           graft.pipeline.Curation.canonicalizeUrl(raw).as("url"))
     }),
     // p115: the same from the REPL over an attached url-bearing label
-    "p115_ql_canonurl" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p115_ql_canonurl" -> (c => {
+      val st = c.store
       val raw = element_at(array(
         concat(lit("HTTP://WWW."), upper(col("source")),
           lit(".Example.COM:80/Docs/"), col("id"),
@@ -1423,12 +1330,12 @@ object SparkEntry {
     // İ expansion in SQL). The check.py corpus canary is untouched:
     // it guards the documents TABLE; this gate proves the mirror that
     // lifts the restriction when an oracle opts in.
-    "p113_contextual_lower" -> ((s, dir) => {
+    "p113_contextual_lower" -> (c => {
       val variant = element_at(array(
         lit("İstanbul ΟΔΟΣ"), lit("ΣΩΜΑ ΣΟΦΟΣ."),
         lit("ΔΗΜΟΣ' Σ.Σ"), lit("Χ.Σ. ΤΕΛΟΣ Σ")),
         (col("id") % 4).cast("int") + 1)
-      TpchGraph.store(s, dir).nodes("documents")
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           lower(concat(coalesce(col("text"), lit("")), lit(" "),
             variant)).as("lowered"))
@@ -1439,7 +1346,7 @@ object SparkEntry {
     // leaks it), and entity references including the double-encoded
     // `&amp;lt;`. The oracle states the expected TEXT in closed form —
     // it does not re-run the strip logic, so the gate is independent
-    "p111_strip_html" -> ((s, dir) => {
+    "p111_strip_html" -> (c => {
       val html = concat(
         lit("<html><head><style>p { color: red }</style></head>" +
           "<body>\n<h1 class=\"t\">"), col("source"),
@@ -1447,13 +1354,13 @@ object SparkEntry {
         lit("</p><!-- boilerplate --><script type=\"text/javascript\">" +
           "var x = \"<p>leak</p>\";</script>" +
           "&amp; &lt;ok&gt;&nbsp;&amp;lt; &#65;&#x42;=&#9731; bad:&#0;&#xD800; &amp;#77;</body></html>"))
-      TpchGraph.store(s, dir).nodes("documents")
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           graft.pipeline.TextAnalysis.stripHtml(html).as("clean"))
     }),
     // p112: the same from the REPL over an attached html-bearing label
-    "p112_ql_striphtml" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p112_ql_striphtml" -> (c => {
+      val st = c.store
       val html = concat(
         lit("<html><head><style>p { color: red }</style></head>" +
           "<body>\n<h1 class=\"t\">"), col("source"),
@@ -1470,14 +1377,14 @@ object SparkEntry {
     // p109: fixed-budget token chunking with overlap — the
     // long-document → training-sequence step; zero-shuffle
     // projection+explode, exact SQL replay (16-token windows every 12)
-    "p109_chunk_documents" -> ((s, dir) =>
+    "p109_chunk_documents" -> (c =>
       graft.pipeline.Curation.chunkDocuments(
-        TpchGraph.store(s, dir).nodes("documents"), "id", "text",
+        c.store.nodes("documents"), "id", "text",
         budget = 16, overlap = 4)
         .withColumnRenamed("id", "doc_id")),
     // p110: the same from the REPL
-    "p110_ql_chunk" -> ((s, dir) =>
-      new graft.ql.Shell(TpchGraph.store(s, dir))
+    "p110_ql_chunk" -> (c =>
+      new graft.ql.Shell(c.store)
         .execute(
           "PIPELINE CHUNK ON documents WITH (budget = 16, overlap = 4);")
         .get.withColumnRenamed("id", "doc_id")),
@@ -1490,8 +1397,8 @@ object SparkEntry {
     // exactly these integers and the two broadcast totals, so the
     // skeleton gate pins the whole computation (float log sums are
     // order-dependent and stay out of the hash, the p91 discipline)
-    "p105_dsir_weights" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p105_dsir_weights" -> (c => {
+      val docs = c.store.nodes("documents")
       graft.pipeline.Dsir.weights(docs,
         docs.filter(col("id") % 3 === 0),
         docs.filter(col("id") % 3 =!= 0), "id", "text")
@@ -1501,8 +1408,8 @@ object SparkEntry {
     // p106: DSIR from the REPL — AGAINST names the target label; the
     // scored label itself is the source distribution (so the oracle's
     // source predicate is TRUE, not the %3<>0 slice)
-    "p106_ql_dsir" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p106_ql_dsir" -> (c => {
+      val st = c.store
       st.attachNodes("dsir_target",
         st.nodes("documents").filter(col("id") % 3 === 0), "id")
       new graft.ql.Shell(st)
@@ -1519,7 +1426,7 @@ object SparkEntry {
     // sentence (the pseudo-English corpus carries only 'the' of the
     // paper's list) so BOTH pass branches carry rows — a
     // constant-output gate proves nothing (the a23 lesson)
-    "p121_gopher_quality" -> ((s, dir) => {
+    "p121_gopher_quality" -> (c => {
       val deco = element_at(array(
         concat(coalesce(col("text"), lit("")),
           lit(" and that have with be to of the")),
@@ -1531,13 +1438,13 @@ object SparkEntry {
           coalesce(col("text"), lit("")))),
         (col("id") % 4).cast("int") + 1)
       graft.pipeline.TextAnalysis.gopherSignals(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id").as("doc_id"), deco.as("text")),
         "doc_id", "text")
     }),
     // p122: the same from the REPL (PIPELINE TEXT GOPHER)
-    "p122_ql_gopher" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p122_ql_gopher" -> (c => {
+      val st = c.store
       val deco = element_at(array(
         concat(coalesce(col("text"), lit("")),
           lit(" and that have with be to of the")),
@@ -1560,8 +1467,8 @@ object SparkEntry {
     // oracle replays the hash through the proven DuckDB XXH64 mirror.
     // 64 is a power of two, so the mirror's unsigned-HUGEINT `% 64`
     // equals Spark's pmod over the signed reinterpretation exactly
-    "p120_dsir_buckets" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p120_dsir_buckets" -> (c => {
+      val docs = c.store.nodes("documents")
       graft.pipeline.Dsir.weights(docs,
         docs.filter(col("id") % 3 === 0), docs, "id", "text",
         buckets = 64)
@@ -1574,18 +1481,18 @@ object SparkEntry {
     // gzipped WET shards (each opening with the warcinfo record real
     // shards carry) and re-ingested; the non-ASCII decoration keeps
     // the RFC 3629 sieve's UTF-8 decode path on the line
-    "p123_wet_ingest" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p123_wet_ingest" -> (c => {
+      val docs = c.store.nodes("documents")
         .select(col("id"),
           concat(coalesce(col("text"), lit("")), lit(" café 中文"))
             .as("text"),
           col("source"))
       val out = new java.io.File(
         sys.props("java.io.tmpdir"),
-        "graft_wet_" + Integer.toHexString(dir.hashCode))
+        "graft_wet_" + Integer.toHexString(c.dir.hashCode))
         .getAbsolutePath
       Ingest.writeWetGz(docs, out, shards = 4)
-      Ingest.wetFiles(s, out + "/*.wet.gz")
+      Ingest.wetFiles(c.spark, out + "/*.wet.gz")
         .select(
           regexp_extract(col("target_uri"), "/(\\d+)$", 1)
             .cast("long").as("doc_id"),
@@ -1599,14 +1506,14 @@ object SparkEntry {
     // punct / javascript / policy phrase → page fails the 3-sentence
     // floor), a lorem-ipsum page and a curly-brace page (line-clean
     // but page-failing). The oracle re-applies every rule in DuckDB
-    "p124_c4_clean" -> ((s, dir) =>
+    "p124_c4_clean" -> (c =>
       graft.pipeline.TextAnalysis.c4Clean(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id").as("doc_id"), c4Deco.as("text")),
         "doc_id", "text")),
     // p125: the same from the REPL (PIPELINE TEXT C4)
-    "p125_ql_c4" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p125_ql_c4" -> (c => {
+      val st = c.store
       st.attachNodes("c4docs", st.nodes("documents")
         .select(col("id"), c4Deco.as("text")), "id")
       new graft.ql.Shell(st)
@@ -1619,14 +1526,14 @@ object SparkEntry {
     // The decoration carries combining sequences (e+U+0301,
     // A+U+030A), the U+212B ANGSTROM SIGN singleton, and the U+FB01
     // ligature that must SURVIVE NFC (it only folds under NFKC)
-    "p126_nfc_normalize" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("documents")
+    "p126_nfc_normalize" -> (c =>
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           graft.pipeline.TextAnalysis.normalizeUnicode(nfcDeco, "NFC")
             .as("normalized"))),
     // p127: the same from the REPL (PIPELINE TEXT NORMALIZE)
-    "p127_ql_normalize" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p127_ql_normalize" -> (c => {
+      val st = c.store
       st.attachNodes("nfcdocs", st.nodes("documents")
         .select(col("id"), nfcDeco.as("text")), "id")
       new graft.ql.Shell(st)
@@ -1640,14 +1547,14 @@ object SparkEntry {
     // text line, and a guaranteed-unique line; the oracle replays
     // keep-first over line STRINGS (the engine dedups on xxhash64 —
     // CCNet's own 64-bit-hash contract; a collision is 2^-64/pair)
-    "p128_dedup_lines" -> ((s, dir) =>
+    "p128_dedup_lines" -> (c =>
       graft.pipeline.Curation.dedupLines(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id").as("doc_id"), lineDeco.as("text")),
         "doc_id", "text")),
     // p129: the same from the REPL (PIPELINE DEDUP LINES)
-    "p129_ql_dedup_lines" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p129_ql_dedup_lines" -> (c => {
+      val st = c.store
       st.attachNodes("linedocs", st.nodes("documents")
         .select(col("id"), lineDeco.as("text")), "id")
       new graft.ql.Shell(st)
@@ -1658,12 +1565,12 @@ object SparkEntry {
     // 28500 container, `metadata` records with a JSON envelope): the
     // documents table round-trips through writeWatGz → watFiles with
     // a caller schema, and from_json must surface the envelope fields
-    "p130_wat_ingest" -> ((s, dir) => {
-      val docs = TpchGraph.store(s, dir).nodes("documents")
+    "p130_wat_ingest" -> (c => {
+      val docs = c.store.nodes("documents")
         .select(col("id"), col("text"), col("source"))
       val out = new java.io.File(
         sys.props("java.io.tmpdir"),
-        "graft_wat_" + Integer.toHexString(dir.hashCode))
+        "graft_wat_" + Integer.toHexString(c.dir.hashCode))
         .getAbsolutePath
       Ingest.writeWatGz(docs, out, shards = 4)
       // the schema prunes INTO the nested CommonCrawl envelope —
@@ -1679,7 +1586,7 @@ object SparkEntry {
         StructField("source", StringType)))
       val uri = col("Envelope")("WARC-Header-Metadata")(
         "WARC-Target-URI")
-      Ingest.watFiles(s, out + "/*.wat.gz", watSchema)
+      Ingest.watFiles(c.spark, out + "/*.wat.gz", watSchema)
         .select(regexp_extract(uri, "/(\\d+)$", 1)
           .cast("long").as("doc_id"),
           uri.as("url"),
@@ -1691,16 +1598,16 @@ object SparkEntry {
     // filter) — exact host, subdomain, NON-match at a non-label
     // boundary (notads.*), and a clean host; the oracle states the
     // surviving rows in closed form
-    "p131_url_filter" -> ((s, dir) =>
+    "p131_url_filter" -> (c =>
       graft.pipeline.Curation.filterBlockedHosts(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id").as("doc_id"), urlFilterDeco.as("url")),
         "doc_id", "url", Seq("ads.blocked.example"))),
     // p132: the same from the REPL (PIPELINE URL WITH block) — the
     // inputs are pre-canonical so the canonicalize step is identity
     // and both gates share one oracle
-    "p132_ql_url_filter" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p132_ql_url_filter" -> (c => {
+      val st = c.store
       st.attachNodes("blockdocs", st.nodes("documents")
         .select(col("id"), urlFilterDeco.as("url")), "id")
       new graft.ql.Shell(st)
@@ -1714,14 +1621,14 @@ object SparkEntry {
     // fixture decorates three slices with rule-violating shapes (a
     // repeated line, a repeated paragraph, a dominant 2-gram) and
     // leaves the fourth clean so both pass branches carry rows
-    "p133_gopher_rep" -> ((s, dir) =>
+    "p133_gopher_rep" -> (c =>
       graft.pipeline.TextAnalysis.gopherRepetition(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id").as("doc_id"), gopherRepDeco.as("text")),
         "doc_id", "text")),
     // p134: the same from the REPL (PIPELINE TEXT GOPHERREP)
-    "p134_ql_gopher_rep" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p134_ql_gopher_rep" -> (c => {
+      val st = c.store
       st.attachNodes("repdocs", st.nodes("documents")
         .select(col("id"), gopherRepDeco.as("text")), "id")
       new graft.ql.Shell(st)
@@ -1733,14 +1640,14 @@ object SparkEntry {
     // two fixture slices share a 3-sentence prefix (the global first
     // occurrence keeps it, every other loses those sentences; a doc
     // reduced to nothing drops), the third slice is undecorated
-    "p135_sentence_spans" -> ((s, dir) =>
+    "p135_sentence_spans" -> (c =>
       graft.pipeline.Curation.dedupSentenceSpans(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id").as("doc_id"), sentSpanDeco.as("text")),
         "doc_id", "text")),
     // p136: the same from the REPL (PIPELINE SPANS SENTENCES)
-    "p136_ql_sentence_spans" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p136_ql_sentence_spans" -> (c => {
+      val st = c.store
       st.attachNodes("sentdocs", st.nodes("documents")
         .select(col("id"), sentSpanDeco.as("text")), "id")
       new graft.ql.Shell(st)
@@ -1755,15 +1662,15 @@ object SparkEntry {
     // the §2.2.2 octet-length specificity tie (non-ASCII pattern,
     // hit + miss). Closed-form oracle (states the expected bit,
     // never re-runs the matcher)
-    "p137_robots" -> ((s, dir) =>
-      TpchGraph.store(s, dir).nodes("documents")
+    "p137_robots" -> (c =>
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           graft.pipeline.TextAnalysis.robotsAllowed(
             robotsRulesDeco, robotsPathDeco, "graftbot")
             .cast("int").as("allowed"))),
     // p138: the same from the REPL (PIPELINE ROBOTS)
-    "p138_ql_robots" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p138_ql_robots" -> (c => {
+      val st = c.store
       st.attachNodes("robotdocs", st.nodes("documents")
         .select(col("id"), robotsRulesDeco.as("rules"),
           robotsPathDeco.as("path")), "id")
@@ -1779,17 +1686,17 @@ object SparkEntry {
     // httpSplit must route each through the JVM charset registry and
     // recover the exact text; the oracle states the expected UTF-8
     // text in closed form — it never re-runs the decode
-    "p141_charset_decode" -> ((s, dir) =>
+    "p141_charset_decode" -> (c =>
       Ingest.httpSplit(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id"), charsetPayloadDeco.as("payload")))
         .select(col("id").as("doc_id"), col("charset"), col("text"))),
     // p149: the WHATWG meta prescan — headers carry NO charset, the
     // markup declares it (`<meta charset=…>`); httpSplit must sniff
     // the 1024-byte window and decode identically to p141
-    "p149_meta_charset" -> ((s, dir) =>
+    "p149_meta_charset" -> (c =>
       Ingest.httpSplit(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id"), metaCharsetPayloadDeco.as("payload")))
         .select(col("id").as("doc_id"), col("charset"), col("text"))),
     // p139: character-trigram language ID (Cavnar-Trenkle, set-overlap
@@ -1797,16 +1704,16 @@ object SparkEntry {
     // carry French/German/Spanish sentences. The oracle recomputes the
     // distinct-trigram ∩ profile overlaps and the argmax (tie-break =
     // smallest tag) from the SAME profile constants
-    "p139_langid_ngram" -> ((s, dir) => {
+    "p139_langid_ngram" -> (c => {
       val lid = graft.pipeline.TextAnalysis.langIdNgram(langIdDeco)
-      TpchGraph.store(s, dir).nodes("documents")
+      c.store.nodes("documents")
         .select(col("id").as("doc_id"),
           lid.getField("lang").as("lang_pred"),
           lid.getField("hits").as("hits"))
     }),
     // p140: the same from the REPL (PIPELINE TEXT LANGID method=ngram)
-    "p140_ql_langid_ngram" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p140_ql_langid_ngram" -> (c => {
+      val st = c.store
       st.attachNodes("langdocs", st.nodes("documents")
         .select(col("id"), langIdDeco.as("text")), "id")
       new graft.ql.Shell(st)
@@ -1817,15 +1724,15 @@ object SparkEntry {
     // p142: Cavnar-Trenkle profile TRAINING (top-k trigrams per label
     // by corpus frequency, ties to trigram asc) — the trained profile
     // itself is the gated output, re-derived independently in SQL
-    "p142_langid_train" -> ((s, dir) =>
+    "p142_langid_train" -> (c =>
       graft.pipeline.TextAnalysis.langIdTrainProfiles(
-        TpchGraph.store(s, dir).nodes("documents")
+        c.store.nodes("documents")
           .select(col("id"), langLabelDeco.as("lang"),
             langIdDeco.as("text")),
         "lang", "text", k = 20)),
     // p143: the same from the REPL (PIPELINE TEXT LANGIDTRAIN)
-    "p143_ql_langid_train" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p143_ql_langid_train" -> (c => {
+      val st = c.store
       st.attachNodes("langtrain", st.nodes("documents")
         .select(col("id"), langLabelDeco.as("lang"),
           langIdDeco.as("text")), "id")
@@ -1836,8 +1743,8 @@ object SparkEntry {
     // p144: train-then-classify round trip — profiles trained on the
     // labeled corpus replace the hardcoded dial; the oracle re-runs
     // BOTH stages (training CTEs feed the classification) in SQL
-    "p144_langid_trained" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p144_langid_trained" -> (c => {
+      val st = c.store
       val docs = st.nodes("documents")
         .select(col("id"), langLabelDeco.as("lang"),
           langIdDeco.as("text"))
@@ -1851,8 +1758,8 @@ object SparkEntry {
     }),
     // p97: the EXR decode from the REPL — must reproduce p96's oracle
     // bit for bit through the real lexer/parser/shell
-    "p97_ql_media_exr" -> ((s, dir) => {
-      val st = TpchGraph.store(s, dir)
+    "p97_ql_media_exr" -> (c => {
+      val st = c.store
       st.attachNodes("hdrs", Multimodal.synthesizeExr(
         st.nodes("documents"), "id"), "id")
       new graft.ql.Shell(st)
@@ -1864,35 +1771,26 @@ object SparkEntry {
     // Deterministic training-shard shuffle: xxhash64-permutation shard
     // + within-shard position; hard-gated against the DuckDB XXH64
     // mirror's hashLong chain.
-    "p61_shuffle_shards" -> ((s, dir) =>
-      Curation.shuffleShards(
-        TpchGraph.store(s, dir).nodes("documents"), "id", nShards = 16)
-        .select(col("id").as("doc_id"), col("shard"), col("sort_key"),
-          col("pos")))
+    "p61_shuffle_shards" -> (c =>
+      shuffleShards(c).select(col("id").as("doc_id"), col("shard"),
+        col("sort_key"), col("pos")))
   )
 
   /** Temporal DIFF + variable-length paths (beyond-reference ops). */
   private def extendedQueries
-      : Map[String, (SparkSession, String) => DataFrame] = Map(
+      : Map[String, QueryCtx => DataFrame] = Map(
     // temporal audit DIFF between two snapshots (spec §11)
-    "t43_temporal_diff" -> ((s, dir) =>
-      versionedCustomers(s, dir).diff("customer",
+    "t43_temporal_diff" -> (c =>
+      c.versioned.diff("customer",
         TemporalSnapshot(1000L, 1500L), TemporalSnapshot(2500L, INF))
         .select(col("id").as("c_id"), col("change"))),
     // temporal DIFF exercising all three change kinds: UPDATED (the
     // retroactive correction), ADDED (node created at t=3000), REMOVED
     // (interval-end delete at t=3000) — snapshot A predates everything
     // on the tx axis, snapshot B sees it all
-    "t45_temporal_diff_kinds" -> ((s, dir) => {
+    "t45_temporal_diff_kinds" -> (c => {
       val clock = new MockClock(0L)
-      val st = new GraphStore(s, versioningEnabled = true, clock = clock)
-      st.attachNodes("customer",
-        ParquetTable.read(s, s"$dir/customer.parquet")
-          .select(col("c_custkey").as("id"), col("c_name").as("name"),
-            col("c_acctbal").as("acctbal")), "id")
-      clock.set(2000L)
-      st.updateWhere("customer", col("id") % 3 === 0,
-        Map("acctbal" -> (col("acctbal") + 100)), validFrom = Some(500L))
+      val st = QueryCtx.versionedCustomers(c.spark, c.dir, clock)
       clock.set(3000L)
       // delete BEFORE create: the created node's id is max(custkey)+1,
       // which at some scale factors is itself divisible by 7 (sf0.1:
@@ -1906,47 +1804,42 @@ object SparkEntry {
         .select(col("id").as("c_id"), col("change"))
     }),
     // variable-length paths over per-customer order chains
-    "v44_varlength" -> ((s, dir) =>
-      graft.planner.VarLength.pairs(
-        TpchGraph.store(s, dir).edges("next_order", "orders", "orders"),
-        minHops = 1, maxHops = 3)
-        .select(col("src"), col("dst"), col("hops")))
+    "v44_varlength" -> (c =>
+      varlengthPaths(c).select(col("src"), col("dst"), col("hops")))
   )
 
   /** GraphX-lifted batch analytics (SURVEY.md §2.10). */
   private def analyticsQueries
-      : Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g42_components" -> ((s, dir) =>
-      GraphAnalytics.connectedComponents(TpchGraph.store(s, dir),
+      : Map[String, QueryCtx => DataFrame] = Map(
+    "g42_components" -> (c =>
+      GraphAnalytics.connectedComponents(c.store,
         Seq(("same_nation", "supplier", "supplier")))),
-    "g43_triangles" -> ((s, dir) =>
-      GraphAnalytics.triangleCounts(TpchGraph.store(s, dir),
+    "g43_triangles" -> (c =>
+      GraphAnalytics.triangleCounts(c.store,
         Seq(("same_nation", "supplier", "supplier")))
         .select(col("id"), col("triangles").cast("long").as("triangles"))),
     // rank rounded to 6 decimals: GraphX's aggregateMessages sum order
     // is nondeterministic (~1e-15 drift/iteration), so raw doubles can't
     // hash-match — but the 5-iteration update IS deterministic at 1e-6,
     // and the oracle replays it exactly (see oracleSql)
-    "g44_pagerank" -> ((s, dir) =>
-      GraphAnalytics.pageRank(TpchGraph.store(s, dir),
-        Seq(("same_nation", "supplier", "supplier")), iters = 5)
-        .select(col("id"), round(col("rank"), 6).as("rank"))),
+    "g44_pagerank" -> (c =>
+      pageRank(c).select(col("id"), round(col("rank"), 6).as("rank"))),
     // deterministic LPA: nation cliques converge to min-id communities
     // in one superstep (self-inclusive tally, min tie-break)
-    "g47_communities" -> ((s, dir) =>
-      GraphAnalytics.labelPropagation(TpchGraph.store(s, dir),
+    "g47_communities" -> (c =>
+      GraphAnalytics.labelPropagation(c.store,
         Seq(("same_nation", "supplier", "supplier")))),
     // degree profile over the same_nation graph, isolated nodes at 0
-    "g46_degrees" -> ((s, dir) =>
-      GraphAnalytics.degrees(TpchGraph.store(s, dir),
+    "g46_degrees" -> (c =>
+      GraphAnalytics.degrees(c.store,
         Seq(("same_nation", "supplier", "supplier")))),
     // landmark BFS over nation cliques ∪ an id-chain (the chain makes
     // distances nontrivial — cliques alone are diameter ≤ 1); the oracle
     // is a real recursive-CTE BFS, so Pregel's min-dist propagation is
     // exactly pinned
-    "g45_shortest_paths" -> ((s, dir) => {
-      val base = TpchGraph.store(s, dir)
-      val st = new GraphStore(s)
+    "g45_shortest_paths" -> (c => {
+      val base = c.store
+      val st = new GraphStore(c.spark)
       st.attachNodes("supplier", base.nodes("supplier"), "id")
       st.attachEdges("same_nation", "supplier", "supplier",
         base.edges("same_nation", "supplier", "supplier")
@@ -1960,6 +1853,368 @@ object SparkEntry {
           ("next_sup", "supplier", "supplier")),
         Seq(("supplier", 0L)))
         .select(col("id").as("s_id"), col("dist"))
+    })
+  )
+
+  // ---- Definitions shared by a gate and a timed entry: the gate adds
+  // only its output projection, so the timed work is the gated work.
+
+  private val dedupExact: QueryCtx => DataFrame = c =>
+    Dedup.exact(c.store.nodes("documents"), "id", Seq("text"))
+  private val textQuality: QueryCtx => DataFrame = c =>
+    TextAnalysis.annotate(c.store.nodes("documents"), "text")
+  private val annTopK: QueryCtx => DataFrame = c => {
+    val vecs = c.store.nodes("embeddings").withColumnRenamed("id", "vec_id")
+    Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") < 5), k = 10)
+  }
+  private val asofJoin: QueryCtx => DataFrame = c => {
+    val ev = c.store.nodes("events")
+    graft.operators.AsOfJoin.backward(
+      ev.filter(col("etype") === "purchase")
+        .select(col("id").as("pid"), col("userid"), col("ts")),
+      ev.filter(col("etype") === "click")
+        .select(col("id").as("cid"), col("userid"), col("ts").as("cts")),
+      Seq("userid"), "ts", "cts")
+  }
+  private val rangeJoin: QueryCtx => DataFrame = c => {
+    val ev = c.store.nodes("events")
+    graft.operators.RangeJoin.byKeyAndWindow(
+      ev.filter(col("etype") === "signup")
+        .select(col("id").as("aid"), col("userid"), col("ts")),
+      ev.select(col("id").as("bid"), col("userid"), col("ts").as("bts")),
+      Seq("userid"), "ts", "bts", 0L, 3600L * 1000000000L)
+  }
+  // fixture: the id%97==0 subset of the corpus itself is the benchmark
+  private val decontaminate: QueryCtx => DataFrame = c => {
+    val docs = c.store.nodes("documents")
+    Curation.decontaminate(docs, docs.filter(col("id") % 97 === 0),
+      "id", "text", k = 3, ratioThreshold = 0.5)
+  }
+  private val quantizeInt8: QueryCtx => DataFrame = c =>
+    Similarity.quantizeInt8(
+      c.store.nodes("embeddings").withColumnRenamed("id", "vec_id"))
+  private val simhashPairs: QueryCtx => DataFrame = c =>
+    Dedup.simhashPairs(c.store.nodes("documents"), "id", "text",
+      maxHamming = 10)
+  private val cosineLsh: QueryCtx => DataFrame = c =>
+    Dedup.cosinePairsLsh(c.store.nodes("embeddings"), "id", "embedding",
+      threshold = 0.4, planes = 8)
+  private val tfIdf: QueryCtx => DataFrame = c =>
+    TextAnalysis.tfIdf(c.store.nodes("documents"), "id", "text", vocab = 20)
+  private val varlengthPaths: QueryCtx => DataFrame = c =>
+    graft.planner.VarLength.pairs(
+      c.store.edges("next_order", "orders", "orders"), minHops = 1,
+      maxHops = 3)
+  private val pageRank: QueryCtx => DataFrame = c =>
+    GraphAnalytics.pageRank(c.store,
+      Seq(("same_nation", "supplier", "supplier")), iters = 5)
+  private val mp4Frames: QueryCtx => DataFrame = c =>
+    Multimodal.sampleVideoFrames(
+      Multimodal.synthesizeMp4(c.store.nodes("documents"), "id"), k = 3)
+  private val substringSpans: QueryCtx => DataFrame = c =>
+    Dedup.duplicatedSpans(c.store.nodes("documents"), "id", "text", k = 8)
+  private val shuffleShards: QueryCtx => DataFrame = c =>
+    Curation.shuffleShards(c.store.nodes("documents"), "id", nShards = 16)
+  private val removeSpans: QueryCtx => DataFrame = c =>
+    Dedup.removeSpans(c.store.nodes("documents"), "id", "text", k = 8)
+  // the batch (id % 3 == 0) against the rest's gram-count table; the
+  // count-table build is part of the work
+  private val spansAgainst: QueryCtx => DataFrame = c => {
+    val docs = c.store.nodes("documents")
+    Dedup.spansAgainst(docs.filter(col("id") % 3 === 0),
+      Dedup.spanGramCounts(docs.filter(col("id") % 3 =!= 0),
+        "id", "text", 8),
+      "id", "text", k = 8)
+  }
+  private val mjpegFrames: QueryCtx => DataFrame = c =>
+    Multimodal.sampleVideoFrames(
+      Multimodal.synthesizeMjpegAvi(c.store.nodes("documents"), "id"), k = 3)
+  // NAV lines shared by id % 5 and FOOTER lines by id % 97 around each
+  // text, so the distinct-doc counts straddle minDocs = 6
+  private val boilerplate: QueryCtx => DataFrame = c =>
+    Curation.removeBoilerplate(
+      c.store.nodes("documents").select(col("id"),
+        concat_ws("\n",
+          concat(lit("NAV-"), (col("id") % 5).cast("string")),
+          coalesce(col("text"), lit("")),
+          concat(lit("FOOTER-"), (col("id") % 97).cast("string")))
+          .as("text")),
+      "id", "text", minDocs = 6)
+  private val semDedup: QueryCtx => DataFrame = c =>
+    Dedup.semDedup(
+      c.store.nodes("embeddings").withColumnRenamed("id", "vec_id"),
+      nClusters = 16, iters = 2, threshold = 0.4)
+  private val flacDecode: QueryCtx => DataFrame = c =>
+    Multimodal.decodeAudio(
+      Multimodal.synthesizeFlac(c.store.nodes("documents"), "id"))
+  private val bigramLm: QueryCtx => DataFrame = c =>
+    TextAnalysis.bigramLm(c.store.nodes("documents"), "id", "text")
+  private val exrDecode: QueryCtx => DataFrame = c =>
+    Multimodal.decodeExr(
+      Multimodal.synthesizeExr(c.store.nodes("documents"), "id"))
+  // 20 training rounds on the distinct-word table + the tokenize pass
+  private val bpeTokenize: QueryCtx => DataFrame = c => {
+    val docs = c.store.nodes("documents")
+    graft.pipeline.Bpe.tokenize(docs, "id", "text",
+      graft.pipeline.Bpe.train(docs, "text", numMerges = 20))
+  }
+  // product quantization: subspace Lloyd (2 rounds) + final encode
+  private val pqEncode: QueryCtx => DataFrame = c => {
+    val vecs = c.store.nodes("embeddings").withColumnRenamed("id", "vec_id")
+    Similarity.pqEncode(vecs,
+      Similarity.pqTrain(vecs, m = 4, k = 16, iters = 2), m = 4)
+  }
+  // mixed 2-/3-byte UTF-8 appended to every text, corrupted with the
+  // UTF-8-seen-as-Latin-1 mis-decode, then repaired
+  private def mojibakeDeco: org.apache.spark.sql.Column =
+    concat(coalesce(col("text"), lit("")), lit(" café — naïve 中文 €"))
+  private def mojibakeRepaired: org.apache.spark.sql.Column =
+    graft.pipeline.Encoding.repairMojibake(
+      graft.pipeline.Encoding.toMojibake(mojibakeDeco))
+
+  /** The entries graft.Bench times, in its output order. Entries named
+    * by a definition above run exactly their gate's operator call; the
+    * rest are timed only (gating one needs its own oracle). Bench runs
+    * them all against one `cache = true` context. */
+  def timed: Seq[(String, QueryCtx => DataFrame)] = Seq(
+    "full_scan" -> (c => c.planner.plan(
+      Q.from("l:lineitem").select("l.id", "l.quantity").build)),
+    "filtered_query" -> (c => c.planner.plan(Q.from("c:customer")
+      .where(ref("c.acctbal") > 1000.0).select("c.id").build)),
+    "simple_join" -> (c => c.planner.plan(Q.from("c:customer")
+      .traverse("c", "placed", "o:orders")
+      .select("c.id", "o.id").build)),
+    "complex_join" -> (c => c.planner.plan(Q.from("c:customer")
+      .where(ref("c.mktsegment") === "BUILDING")
+      .traverse("c", "placed", "o:orders")
+      .traverse("o", "contains", "l:lineitem")
+      .where(ref("l.quantity") > 40.0)
+      .select("c.id", "o.id", "l.linenumber").build)),
+    "friend_join" -> (c => c.planner.plan(Q.from("c:customer")
+      .where(ref("c.acctbal") > 1000.0 &&
+        ref("c.mktsegment") === "BUILDING")
+      .traverse("c", "placed", "o:orders")
+      .where(ref("o.totalprice") > 50000.0)
+      .select("c.id", "o.id").build)),
+    "agg_pricing" -> (c => c.store.nodes("lineitem")
+      .groupBy(col("returnflag"), col("linestatus"))
+      .agg(sum(col("quantity")).as("sum_qty"), count(lit(1)).as("n"))),
+    "window_agg" -> (c => EventStreams.windowedStats(
+      c.store.nodes("events").withColumn("ts",
+        timestamp_micros((col("ts") / 1000L).cast("long"))))),
+    "dedup_exact" -> dedupExact,
+    "text_quality" -> (c =>
+      textQuality(c).select("id", "n_tokens", "quality", "fingerprint")),
+    "minhash_lsh" -> (c => Dedup.minhashLsh(
+      c.store.nodes("documents").filter(col("id") < 10000),
+      "id", "text", numHashes = 64, bands = 8, shingleK = 3,
+      threshold = 0.5, maxBucketSize = 100)),
+    // bulk node creation with dense distributed id assignment
+    // (BASELINE: node creation throughput)
+    "node_insert" -> (c => {
+      val s2 = new GraphStore(c.spark)
+      val src = c.store.nodes("lineitem").drop("id")
+      s2.attachNodes("ingest_probe", src.limit(0), "orderkey") // schema
+      s2.createNodes("ingest_probe", src)
+      s2.nodes("ingest_probe")
+    }),
+    "ann_topk" -> annTopK,
+    "asof_join" -> asofJoin,
+    "range_join" -> rangeJoin,
+    "decontaminate" -> decontaminate,
+    "pack_sequences" -> (c => Curation.packSequences(
+      c.store.nodes("documents"), "id", "text", budgetTokens = 2048)),
+    "quantize_int8" -> quantizeInt8,
+    "simhash_pairs" -> simhashPairs,
+    "cosine_lsh" -> cosineLsh,
+    "tfidf" -> tfIdf,
+    // GraphX connected components over near-dup pairs. The pair
+    // generator here is simhash (the cheap LSH path), NOT the exact
+    // blocked Jaccard the p49 oracle uses: exact pairwise verification
+    // is quadratic within blocks (58 s at sf0.1 — measured, and the
+    // Dedup scaladoc's "never run unblocked" caveat in action), while
+    // the 100 TB clustering shape is LSH-candidate pairs + CC.
+    // exact-dup groups collapse to star edges + one representative
+    // before the LSH generator (round 7): on duplication-heavy corpora
+    // this keeps the pair graph linear in group size instead of
+    // quadratic (sf1: 2494 ten-way exact groups, measured in SCALE.md)
+    "dup_clusters" -> (c => Curation.dupClustersCollapsed(
+      c.store.nodes("documents"), "id", exactKeyCols = Seq("text"),
+      pairGen = d => Dedup.simhashPairs(d, "id", "text", maxHamming = 10),
+      collapsible = col("text").isNotNull)),
+    "varlength_paths" -> varlengthPaths,
+    // IVF serving path: probe the persisted index (QueryCtx.ivfIndex,
+    // built before timing) — the brute-force twin is ann_topk
+    "ann_ivf_probe" -> (c => Similarity.ivfTopK(c.ivfIndex._2,
+      c.ivfIndex._1, c.store.nodes("embeddings")
+        .withColumnRenamed("id", "vec_id").filter(col("vec_id") < 5),
+      k = 10, nProbe = 4)),
+    "pagerank" -> pageRank,
+    // temporal as-of scan over the versioned fixture (built before
+    // timing): reps time the version-visibility read, not the mutation
+    "temporal_asof" -> (c => new Planner(c.versioned).plan(
+      Q.from("c:customer").asOfValidTime(2500L)
+        .select("c.id", "c.acctbal").build)),
+    "mp4_frames" -> mp4Frames,
+    "substring_spans" -> substringSpans,
+    "shuffle_shards" -> shuffleShards,
+    "remove_spans" -> removeSpans,
+    "spans_against" -> spansAgainst,
+    "mjpeg_frames" -> mjpegFrames,
+    "boilerplate" -> boilerplate,
+    "semdedup" -> semDedup,
+    "flac_decode" -> flacDecode,
+    "bigram_lm" -> bigramLm,
+    "exr_decode" -> exrDecode,
+    "bpe_tokenize" -> bpeTokenize,
+    // BPE training at a production-shaped merge count: 200 rounds.
+    // The count-probed local finish runs every round driver-side
+    // after exactly 2 Spark jobs (word-count + vocabulary collect);
+    // the r13 distributed loop scheduled ~2 barrier jobs PER merge
+    // (~400 here, ~64K at a real 32K vocabulary) — this entry pins
+    // the job-count collapse
+    "bpe_train200" -> (c => {
+      val merges = graft.pipeline.Bpe.train(
+        c.store.nodes("documents"), "text", numMerges = 200)
+      c.spark.createDataset(merges.map { case (l, r) => l + " " + r })(
+        org.apache.spark.sql.Encoders.STRING).toDF("merge")
+    }),
+    // compressed-JSONL ingest round trip: zstd shard export + streaming
+    // strict re-ingest — the corpus-intake path end to end (the write
+    // is timed; shards overwrite idempotently per rep)
+    "jsonl_ingest" -> (c => {
+      import org.apache.spark.sql.types._
+      val out = new java.io.File(sys.props("java.io.tmpdir"),
+        "graft_bench_jsonl").getAbsolutePath
+      Ingest.writeJsonlZst(
+        c.store.nodes("documents").select("id", "text", "source"),
+        out, shards = 8)
+      Ingest.jsonlFiles(c.spark, out + "/*.jsonl.zst",
+        StructType(Seq(StructField("id", LongType),
+          StructField("text", StringType),
+          StructField("source", StringType))), strict = true)
+    }),
+    // WARC ingest round trip: gzipped WARC export + byte-exact
+    // streaming re-ingest — CommonCrawl's intake path (write timed)
+    "warc_ingest" -> (c => {
+      val out = new java.io.File(sys.props("java.io.tmpdir"),
+        "graft_bench_warc").getAbsolutePath
+      Ingest.writeWarcGz(
+        c.store.nodes("documents").select("id", "text", "source"),
+        out, shards = 8)
+      Ingest.warcFiles(c.spark, out + "/*.warc.gz")
+    }),
+    // the complete CommonCrawl intake chain: HTTP-wrapped WARC export +
+    // re-ingest + header/body split + charset-sieved decode + HTML→text
+    "http_split" -> (c => {
+      val out = new java.io.File(sys.props("java.io.tmpdir"),
+        "graft_bench_http").getAbsolutePath
+      Ingest.writeWarcGz(
+        c.store.nodes("documents").select(col("id"),
+          concat(lit("<h1>t</h1><p>"), coalesce(col("text"),
+            lit("")), lit(" café</p>")).as("text"), col("source")),
+        out, shards = 8, httpWrap = true)
+      Ingest.httpResponses(Ingest.warcFiles(c.spark, out + "/*.warc.gz"))
+        .select(col("target_uri"), col("status"),
+          TextAnalysis.stripHtml(col("text")).as("clean"))
+    }),
+    // DSIR importance weights + Gumbel top-k resample in the paper's
+    // hashed-bucket form: two bucket-grain count shuffles + one
+    // occurrence-grain score pass + TakeOrdered
+    "dsir_select" -> (c => {
+      val docs = c.store.nodes("documents")
+      graft.pipeline.Dsir.resample(
+        graft.pipeline.Dsir.weights(docs,
+          docs.filter(col("id") % 3 === 0), docs, "id", "text",
+          buckets = 10000),
+        "id", k = 1000, seed = 42L)
+    }),
+    "fix_encoding" -> (c => c.store.nodes("documents")
+      .select(col("id"), mojibakeRepaired.as("fixed"))),
+    "strip_html" -> (c => {
+      val html = concat(lit("<html><body><h1>"), col("source"),
+        lit("</h1><p>"), coalesce(col("text"), lit("")),
+        lit("</p><script>var x = \"<p>leak</p>\";</script>" +
+          "&amp; &lt;ok&gt;</body></html>"))
+      c.store.nodes("documents").select(col("id"),
+        TextAnalysis.stripHtml(html).as("clean"))
+    }),
+    "chunk_documents" -> (c => Curation.chunkDocuments(
+      c.store.nodes("documents"), "id", "text", budget = 64, overlap = 16)),
+    "canonical_url" -> (c => {
+      val raw = concat(lit("HTTP://WWW."), upper(col("source")),
+        lit(".Example.COM:80/Docs/"), col("id"),
+        lit("?utm_source=feed&b=2&a=1&fbclid=x#frag"))
+      c.store.nodes("documents").select(col("id"),
+        Curation.canonicalizeUrl(raw).as("url"))
+    }),
+    "temperature_mix" -> (c => Curation.temperatureMix(
+      c.store.nodes("documents").select(col("id"), col("source")),
+      "id", "source", budgetDocs = 10000L, tau = 0.5)),
+    // Gopher rule suite: one codegen'd pass per doc
+    "gopher_quality" -> (c => TextAnalysis.gopherSignals(
+      c.store.nodes("documents"), "id", "text")),
+    // WET ingest round trip (write timed, like warc_ingest)
+    "wet_ingest" -> (c => {
+      val out = new java.io.File(sys.props("java.io.tmpdir"),
+        "graft_bench_wet").getAbsolutePath
+      Ingest.writeWetGz(
+        c.store.nodes("documents").select("id", "text", "source"),
+        out, shards = 8)
+      Ingest.wetFiles(c.spark, out + "/*.wet.gz")
+    }),
+    "c4_clean" -> (c => TextAnalysis.c4Clean(
+      c.store.nodes("documents"), "id", "text")),
+    "nfc_normalize" -> (c => c.store.nodes("documents").select(col("id"),
+      TextAnalysis.normalizeUnicode(col("text")).as("normalized"))),
+    "dedup_lines" -> (c => Curation.dedupLines(
+      c.store.nodes("documents"), "id", "text")),
+    // Gopher repetition suite: per-doc array signals + the fused
+    // top-n-gram and dup-gram-coverage passes, a zero-exchange projection
+    "gopher_rep" -> (c => TextAnalysis.gopherRepetition(
+      c.store.nodes("documents"), "id", "text")),
+    "pq_encode" -> pqEncode,
+    // keep-first near-dup filter: minhashLsh pairs + loser derivation
+    // joins on the pair table
+    "neardup_keepfirst" -> (c => Dedup.nearDupKeepFirst(
+      c.store.nodes("documents"), "id", "id", "text")),
+    // Cavnar-Trenkle profile training: trigram explode → (lang, tri)
+    // map-side-combined count → window rank over the vocabulary-grain
+    // count table
+    "langid_train" -> (c => TextAnalysis.langIdTrainProfiles(
+      c.store.nodes("documents").select(col("id"),
+        (col("id") % 4).cast("string").as("lang"), col("text")),
+      "lang", "text", k = 300)),
+    // trigram langid: native distinct-trigram overlap
+    "langid_ngram" -> (c => {
+      val lid = TextAnalysis.langIdNgram(col("text"))
+      c.store.nodes("documents").select(col("id"),
+        lid.getField("lang").as("lang_pred"),
+        lid.getField("hits").as("hits"))
+    }),
+    // RFC 9309 robots evaluation: native parse+match per row
+    "robots_eval" -> (c => {
+      val rules = lit("User-agent: *\nDisallow: /\n\n" +
+        "User-agent: graftbot\nAllow: /docs/\nDisallow: /*.pdf$\n" +
+        "Disallow: /private/\n")
+      val path = concat(lit("/docs/"), col("source"), lit("/"),
+        col("id").cast("string"),
+        when(col("id") % 3 === 0, ".pdf").otherwise(".html"))
+      c.store.nodes("documents").select(col("id"),
+        TextAnalysis.robotsAllowed(rules, path, "graftbot").as("allowed"))
+    }),
+    // C4 sentence-span dedup: sentence-hash slices + span-hash-grain
+    // winner table + position cut
+    "sentence_spans" -> (c => Curation.dedupSentenceSpans(
+      c.store.nodes("documents"), "id", "text")),
+    // URL blocklist filter: suffix explode + broadcast semi join + anti
+    // join back; 1000-domain blocklist
+    "url_filter" -> (c => {
+      val raw = concat(lit("http://h"), pmod(col("id"), lit(2000)),
+        lit(".example.com/"), col("id"))
+      Curation.filterBlockedHosts(
+        c.store.nodes("documents").select(col("id"), raw.as("url")),
+        "id", "url", (0 until 1000).map(i => s"h$i.example.com"))
     })
   )
 

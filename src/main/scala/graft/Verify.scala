@@ -9,6 +9,14 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local debugging)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // A mistyped name would otherwise dump nothing and look like a pass.
+    val queries = SparkEntry.queries
+    val unknown = only.getOrElse(Set.empty) -- queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println("[verify] unknown query name(s): " +
+        unknown.toSeq.sorted.mkString(", "))
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors, 32).toString)
     val spark = SparkSession.builder()
@@ -19,7 +27,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()

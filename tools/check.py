@@ -127,6 +127,14 @@ def main(sf_dir, out_dir, subset=None):
     run_id = os.environ.get("GRAFT_CHECK_RUN") or \
         "%d-%d" % (int(time.time()), os.getpid())
     book = {}
+    # A subset name with no oracle entry would otherwise be skipped like
+    # every other name, and a fully mistyped subset would pass vacuously.
+    for name in sorted((subset or set()) - oracle.keys()):
+        print(f"FAIL {name}: not a gated query (no entry in "
+              f"oracle_sql.json)")
+        book[name] = {"pass": False, "rows": None, "oracle": "duckdb",
+                      "err": "unknown query", "run": run_id}
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
         # The subset RESTRICTS the check itself (not just missing-dump
         # classification): one-query-per-process retry loops depend on a
