@@ -27,25 +27,34 @@ final class QueryCtx(val spark: SparkSession, val dir: String,
   lazy val versioned: GraphStore =
     QueryCtx.versionedCustomers(spark, dir, new MockClock(0L))
 
-  /** IVF index over the embeddings (16 cells, 2 Lloyd rounds: the p37
-    * parameters), persisted to a per-context temp dir that is removed at
-    * JVM exit, and loaded back as (assigned, centroids). Building and
-    * persisting is an offline pipeline step, so Bench forces it before
-    * timing and its ann_ivf_probe entry times only the serving path. */
-  lazy val ivfIndex: (DataFrame, DataFrame) = {
-    val dirPath = java.nio.file.Files.createTempDirectory("graft_bench_ivf")
+  /** This context's scratch directory, created on first use and removed
+    * at JVM exit, so two JVMs on the same data never share a path. */
+  private lazy val scratch: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft_ctx")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array()).foreach(rm)
         f.delete(); ()
       }
-      rm(dirPath.toFile)
+      rm(d.toFile)
     }))
+    d
+  }
+
+  /** Path `name` inside this context's scratch directory. */
+  def tempDir(name: String): String = scratch.resolve(name).toString
+
+  /** IVF index over the embeddings (16 cells, 2 Lloyd rounds: the p37
+    * parameters), persisted to [[tempDir]] and loaded back as (assigned,
+    * centroids). Building and persisting is an offline pipeline step, so
+    * Bench forces it before timing and its ann_ivf_probe entry times only
+    * the serving path. */
+  lazy val ivfIndex: (DataFrame, DataFrame) = {
+    val path = tempDir("ivf")
     val vecs = store.nodes("embeddings").withColumnRenamed("id", "vec_id")
     val trained = Similarity.ivfTrain(vecs, k = 16, iters = 2)
-    Similarity.saveIndex(dirPath.toString, trained,
-      Similarity.ivfAssign(vecs, trained))
-    Similarity.loadIndex(spark, dirPath.toString)
+    Similarity.saveIndex(path, trained, Similarity.ivfAssign(vecs, trained))
+    Similarity.loadIndex(spark, path)
   }
 }
 

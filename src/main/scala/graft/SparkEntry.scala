@@ -1158,10 +1158,7 @@ object SparkEntry {
       import org.apache.spark.sql.types._
       val docs = c.store.nodes("documents")
         .select(col("id"), col("text"), col("lang"), col("source"))
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        "graft_jsonl_" + Integer.toHexString(c.dir.hashCode))
-        .getAbsolutePath
+      val out = c.tempDir("jsonl")
       Ingest.writeJsonlZst(docs, out, shards = 4)
       Ingest.jsonlFiles(c.spark, out + "/*.jsonl.zst", StructType(Seq(
         StructField("id", LongType), StructField("text", StringType),
@@ -1179,10 +1176,7 @@ object SparkEntry {
     "p104_warc_ingest" -> (c => {
       val docs = c.store.nodes("documents")
         .select(col("id"), col("text"), col("source"))
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        "graft_warc_" + Integer.toHexString(c.dir.hashCode))
-        .getAbsolutePath
+      val out = c.tempDir("warc")
       Ingest.writeWarcGz(docs, out, shards = 4)
       Ingest.warcFiles(c.spark, out + "/*.warc.gz")
         .select(
@@ -1207,10 +1201,7 @@ object SparkEntry {
           concat(lit("<p>"), coalesce(col("text"), lit("")),
             lit(" café 中文</p>")).as("text"),
           col("source"))
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        "graft_warc_http_" + Integer.toHexString(c.dir.hashCode))
-        .getAbsolutePath
+      val out = c.tempDir("warc_http")
       Ingest.writeWarcGz(docs, out, shards = 4, httpWrap = true)
       Ingest.httpResponses(Ingest.warcFiles(c.spark, out + "/*.warc.gz"))
         .select(
@@ -1234,10 +1225,7 @@ object SparkEntry {
             lit(" café 中文</p><script>var h = \"<b>leak</b>\";" +
               "</script>")).as("text"),
           col("source"))
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        "graft_warc_chain_" + Integer.toHexString(c.dir.hashCode))
-        .getAbsolutePath
+      val out = c.tempDir("warc_chain")
       Ingest.writeWarcGz(docs, out, shards = 4, httpWrap = true)
       st.attachNodes("warcrows",
         Ingest.warcFiles(c.spark, out + "/*.warc.gz")
@@ -1487,10 +1475,7 @@ object SparkEntry {
           concat(coalesce(col("text"), lit("")), lit(" café 中文"))
             .as("text"),
           col("source"))
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        "graft_wet_" + Integer.toHexString(c.dir.hashCode))
-        .getAbsolutePath
+      val out = c.tempDir("wet")
       Ingest.writeWetGz(docs, out, shards = 4)
       Ingest.wetFiles(c.spark, out + "/*.wet.gz")
         .select(
@@ -1568,10 +1553,7 @@ object SparkEntry {
     "p130_wat_ingest" -> (c => {
       val docs = c.store.nodes("documents")
         .select(col("id"), col("text"), col("source"))
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        "graft_wat_" + Integer.toHexString(c.dir.hashCode))
-        .getAbsolutePath
+      val out = c.tempDir("wat")
       Ingest.writeWatGz(docs, out, shards = 4)
       // the schema prunes INTO the nested CommonCrawl envelope —
       // exactly the from_json path watFiles advertises
@@ -2084,8 +2066,7 @@ object SparkEntry {
     // is timed; shards overwrite idempotently per rep)
     "jsonl_ingest" -> (c => {
       import org.apache.spark.sql.types._
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_jsonl").getAbsolutePath
+      val out = c.tempDir("bench_jsonl")
       Ingest.writeJsonlZst(
         c.store.nodes("documents").select("id", "text", "source"),
         out, shards = 8)
@@ -2097,8 +2078,7 @@ object SparkEntry {
     // WARC ingest round trip: gzipped WARC export + byte-exact
     // streaming re-ingest — CommonCrawl's intake path (write timed)
     "warc_ingest" -> (c => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_warc").getAbsolutePath
+      val out = c.tempDir("bench_warc")
       Ingest.writeWarcGz(
         c.store.nodes("documents").select("id", "text", "source"),
         out, shards = 8)
@@ -2107,8 +2087,7 @@ object SparkEntry {
     // the complete CommonCrawl intake chain: HTTP-wrapped WARC export +
     // re-ingest + header/body split + charset-sieved decode + HTML→text
     "http_split" -> (c => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_http").getAbsolutePath
+      val out = c.tempDir("bench_http")
       Ingest.writeWarcGz(
         c.store.nodes("documents").select(col("id"),
           concat(lit("<h1>t</h1><p>"), coalesce(col("text"),
@@ -2156,8 +2135,7 @@ object SparkEntry {
       c.store.nodes("documents"), "id", "text")),
     // WET ingest round trip (write timed, like warc_ingest)
     "wet_ingest" -> (c => {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_wet").getAbsolutePath
+      val out = c.tempDir("bench_wet")
       Ingest.writeWetGz(
         c.store.nodes("documents").select("id", "text", "source"),
         out, shards = 8)

@@ -88,8 +88,7 @@ object Dedup {
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
                  threshold: Double = 0.7,
-                 maxBucketSize: Int = 200,
-                 eagerCheckpoint: Boolean = false): DataFrame = {
+                 maxBucketSize: Int = 200): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     require(threshold > 0.0, "threshold must be positive (verification " +
       "counts common shingles; zero-overlap pairs are never near-dups)")
@@ -111,7 +110,7 @@ object Dedup {
     // hit >120 s host stall windows excluded): lazy won every clean rep —
     // 8.2/5.5/9.5 s vs eager's 15.7/7.7/19.8 s (min 5.5 vs 7.7) — i.e.
     // eager's up-front materialization jobs cost ~1.5-2x on this shape.
-    // Lazy is therefore the default; r2's reason for eager (benign
+    // Both checkpoints are therefore lazy; r2's reason for eager (benign
     // "Failed to update accumulator" DAGScheduler ERROR spam from
     // late task events of checkpoint-truncated stages) is handled by a
     // targeted RegexFilter in src/main/resources/log4j2.properties
@@ -121,7 +120,7 @@ object Dedup {
         transform(split(lower(trim(col(textCol))), "\\s+"),
           t => xxhash64(t)).as("__th"))
       .select(col("__id"), hashedShingles(col("__th"), shingleK).as("__shh"))
-      .transform(graft.core.Materialize(_, eager = eagerCheckpoint))
+      .transform(graft.core.Materialize(_))
     // Signatures in ONE fused native pass per row
     // ([[graft.functions.MinHashSig]] — bit-identical to the former
     // explode → groupBy(id).agg(64 min buffers) formulation, which paid
@@ -146,7 +145,7 @@ object Dedup {
         graft.functions.MinHashSig(
           org.apache.spark.sql.graft.ColumnBridge.expression(col("__shh")),
           numHashes)).as("__sig"))
-      .transform(graft.core.Materialize(_, eager = eagerCheckpoint))
+      .transform(graft.core.Materialize(_))
     // Band key = xxhash64 over (band index, its r signature slots):
     // any injective-modulo-collision function of the slot values yields
     // the same candidate buckets as the former md5(concat_ws) string —

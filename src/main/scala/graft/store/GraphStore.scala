@@ -101,7 +101,7 @@ final class GraphStore(
       df.schema.fields.filter(_.name != idCol).toIndexedSeq)
     val t = new NodeTable(label, st, versioningEnabled)
     t.base = Some(df.select(
-      t.fullSchema(versioningEnabled).fieldNames.toIndexedSeq.map {
+      t.rowSchema.fieldNames.toIndexedSeq.map {
         case "id" => df.col(s"`${idCol.replace("`", "``")}`")
           .cast(LongType).as("id")
         case c if versioningEnabled && NodeTable.V0.contains(c) =>
@@ -120,20 +120,33 @@ final class GraphStore(
       StructType(df.schema.fields.filterNot(f =>
         Seq("id", "src", "dst", "created_ts").contains(f.name)).toIndexedSeq))
     catalog.registerEdgeType(info)
+    val t = new EdgeTable(info, versioningEnabled)
+    t.base = Some(edgeRows(t, df))
+    edgeTables((name, srcLabel, dstLabel)) = t
+  }
+
+  /** `df` as rows of edge table `t`, in one projection: `src`/`dst` and
+    * props cast to the table's types, a prop `df` lacks is null, an absent
+    * `id` is a hash of (type, src, dst), an absent `created_ts` is 0, and
+    * a versioned store's rows open at version 0. */
+  private def edgeRows(t: EdgeTable, df: DataFrame): DataFrame = {
+    val present = df.columns.toSet
     val src = col("src").cast(LongType)
     val dst = col("dst").cast(LongType)
-    val present = df.columns.toSet
-    val t = new EdgeTable(info, versioningEnabled)
-    t.base = Some(df.select(t.schema.fieldNames.toIndexedSeq.map {
-      case "src" => src.as("src")
-      case "dst" => dst.as("dst")
-      case "id" if !present("id") => xxhash64(lit(name), src, dst).as("id")
-      case "created_ts" if !present("created_ts") => lit(0L).as("created_ts")
-      case c if versioningEnabled && NodeTable.V0.contains(c) =>
-        lit(NodeTable.V0(c)).as(c)
-      case c => col(c)
-    }: _*))
-    edgeTables((name, srcLabel, dstLabel)) = t
+    df.select(t.rowSchema.fields.toIndexedSeq.map { f =>
+      f.name match {
+        case "src" => src.as("src")
+        case "dst" => dst.as("dst")
+        case "id" if !present("id") =>
+          xxhash64(lit(t.info.name), src, dst).as("id")
+        case "created_ts" if !present("created_ts") =>
+          lit(0L).as("created_ts")
+        case c if versioningEnabled && NodeTable.V0.contains(c) =>
+          lit(NodeTable.V0(c)).as(c)
+        case c if !present(c) => lit(null).cast(f.dataType).as(c)
+        case c => col(c).cast(f.dataType).as(c)
+      }
+    }: _*)
   }
 
   // ------------------------------------------------------------------
@@ -159,7 +172,7 @@ final class GraphStore(
     val t = table(label)
     ensureCounter(t)
     val id = catalog.nextNodeId(label)
-    t.appendRow(id, values, clock.nowNanos, versioningEnabled)
+    t.appendRow(id, values, clock.nowNanos)
     id
   }
 
@@ -221,7 +234,7 @@ final class GraphStore(
               "(partition "), col("__p"), lit(" exceeded counted rows "),
             col("__cnt"), lit(")"))).cast(LongType))).as("id") +:
         fieldCols.toIndexedSeq: _*)
-    if (versioningEnabled) appended = NodeTable.addV0(appended, clock)
+    if (versioningEnabled) appended = NodeTable.addV0(appended)
     t.base = Some(t.base.map(_.unionByName(appended)).getOrElse(appended))
   }
 
@@ -232,12 +245,7 @@ final class GraphStore(
       srcLabel: String, srcId: Long, edgeType: String,
       dstLabel: String, dstId: Long,
       props: Map[String, Any] = Map.empty, unique: Boolean = false): Long = {
-    val key = (edgeType, srcLabel, dstLabel)
-    val t = edgeTables.getOrElseUpdate(key, {
-      val info = EdgeTypeInfo(edgeType, srcLabel, dstLabel)
-      catalog.registerEdgeType(info)
-      new EdgeTable(info, versioningEnabled)
-    })
+    val t = edgeTableOrCreate(edgeType, srcLabel, dstLabel)
     // UNIQUE must see ALL edges (reference src/core/edge_store.cpp:58) —
     // the buffer check is O(1); edges already merged into `base` (flush /
     // restore / CSV load / attach) need a distributed lookup. limit(1)
@@ -259,7 +267,7 @@ final class GraphStore(
       label: String, id: Long, sets: Map[String, Any],
       append: Set[String] = Set.empty): Boolean = {
     val t = table(label)
-    t.updateBuffered(id, sets, append, clock.nowNanos, versioningEnabled) match {
+    t.updateBuffered(id, sets, append, clock.nowNanos) match {
       case Some(changed) => changed
       case None => // row lives in the base DataFrame — distributed rewrite
         val st = catalog.schemaOf(label)
@@ -275,15 +283,12 @@ final class GraphStore(
             parts.head ->
               GraphStore.mapEntryUpdate(col(parts.head), parts(1), v)
           } else if (append.contains(k)) {
-            // APPEND builds its own concat here (one element or a batch,
-            // reference append_all) — updateWhere's single-element array
-            // wrap would nest a Seq value
-            val arr = v match {
-              case s: Seq[_] => array(s.map(x => lit(x)).toIndexedSeq: _*)
-              case one       => array(lit(one))
+            // one element or a batch (reference append_all)
+            val elems = v match {
+              case s: Seq[_] => s.map(x => lit(x)).toIndexedSeq
+              case one       => Seq(lit(one))
             }
-            k -> concat(coalesce(col(k),
-              array().cast(st(st.fieldIndex(k)).dataType)), arr)
+            k -> GraphStore.appended(k, st(k).dataType, array(elems: _*))
           } else k -> lit(v)
         }
         // missing id = soft failure, 0 rows updated (reference:
@@ -308,30 +313,8 @@ final class GraphStore(
       validFrom: Option[Long] = None): Unit = {
     val t = table(label)
     t.flush(spark)
-    val base = t.base.getOrElse(return)
-    val now = clock.nowNanos
-    if (!versioningEnabled) {
-      t.base = Some(
-        sets.foldLeft(base) { case (d, (k, v)) =>
-          val nv = if (append.contains(k)) concat(col(k), array(v)) else v
-          d.withColumn(k, when(cond, nv).otherwise(col(k)))
-        })
-    } else {
-      val isHead = col(VersionCols.Vt) === INF
-      // no-op updates create no version (reference:
-      // tests/temporal_query_test.cpp:823) — a row whose new values all
-      // null-safe-equal the current ones is not a hit. Map columns are
-      // not comparable in Spark, so map rewrites conservatively count as
-      // changes; appends always change.
-      val hit = cond && isHead &&
-        GraphStore.changedCond(base.schema, sets, append)
-      val newSets = sets.map { case (k, v) =>
-        k -> (if (append.contains(k)) concat(col(k), array(v)) else v)
-      } ++ GraphStore.newVersionCols(now, validFrom.getOrElse(now))
-      t.base = Some(
-        GraphStore.versionedRewrite(base, base.schema, hit, newSets, now))
-    }
-    t.noteMutation()
+    if (t.base.isDefined)
+      rewrite(t, Where(cond), Update(sets, append, validFrom))
   }
 
   /** CSV bulk node load (reference S6: bench/tundra_runner.cpp:15-115).
@@ -348,7 +331,7 @@ final class GraphStore(
       val t = table(label)
       t.flush(spark)
       val withV =
-        if (versioningEnabled) NodeTable.addV0(casted, clock) else casted
+        if (versioningEnabled) NodeTable.addV0(casted) else casted
       t.base = Some(t.base.map(_.unionByName(withV)).getOrElse(withV))
       val maxId = casted.agg(max("id")).head().getLong(0)
       if (maxId >= catalog.nodeCounter(label))
@@ -362,57 +345,10 @@ final class GraphStore(
     * registered edge schema when present. */
   def loadEdgesCsv(edgeType: String, srcLabel: String, dstLabel: String,
                    path: String, header: Boolean = true): Unit = {
-    val key = (edgeType, srcLabel, dstLabel)
-    val t = edgeTables.getOrElseUpdate(key, {
-      val info = EdgeTypeInfo(edgeType, srcLabel, dstLabel)
-      catalog.registerEdgeType(info)
-      new EdgeTable(info, versioningEnabled)
-    })
-    val raw = spark.read.option("header", header.toString).csv(path)
-    var e = raw
-      .withColumn("src", col("src").cast(LongType))
-      .withColumn("dst", col("dst").cast(LongType))
-    t.info.props.fields.foreach { f =>
-      e =
-        if (raw.columns.contains(f.name))
-          e.withColumn(f.name, col(f.name).cast(f.dataType))
-        else e.withColumn(f.name, lit(null).cast(f.dataType))
-    }
-    if (!e.columns.contains("id"))
-      e = e.withColumn("id", xxhash64(lit(edgeType), col("src"), col("dst")))
-    if (!e.columns.contains("created_ts"))
-      e = e.withColumn("created_ts", lit(0L))
-    if (versioningEnabled) e = NodeTable.addV0(e, clock)
-    val ordered = e.select(t.schema.fieldNames.map(col).toIndexedSeq: _*)
+    val t = edgeTableOrCreate(edgeType, srcLabel, dstLabel)
+    val e = edgeRows(t, spark.read.option("header", header.toString).csv(path))
     t.flush(spark)
-    t.base = Some(t.base.map(_.unionByName(ordered)).getOrElse(ordered))
-  }
-
-  /** Join-based UPDATE of the rows whose `id` is in `ids`. Without
-    * versioning: in-place projection rewrite. With versioning: the matched
-    * HEAD versions are closed (valid_to = now) and new version rows are
-    * appended — same temporal rule as [[updateWhere]]; historical versions
-    * are never touched (reference: NodeArena::apply_updates,
-    * src/memory/node_arena.cpp:250-275, which applies to edge slots too). */
-  private def rewriteMatched(base: DataFrame, ids: DataFrame,
-                             sets: Map[String, Column],
-                             now: Long): DataFrame = {
-    val hits = ids.toDF("id").distinct().withColumn("__hit", lit(true))
-    val joined = base.join(hits, Seq("id"), "left_outer")
-    val result =
-      if (!versioningEnabled)
-        sets.foldLeft(joined) { case (d, (k, v)) =>
-          d.withColumn(k, when(col("__hit"), v).otherwise(col(k)))
-        }
-      else {
-        // same no-op rule as updateWhere: an unchanged row is not a hit
-        val hit = coalesce(col("__hit"), lit(false)) &&
-          col(VersionCols.Vt) === INF &&
-          GraphStore.changedCond(base.schema, sets, Set.empty)
-        val newSets = sets ++ GraphStore.newVersionCols(now, now)
-        GraphStore.versionedRewrite(joined, base.schema, hit, newSets, now)
-      }
-    result.drop("__hit").select(base.columns.map(col).toIndexedSeq: _*)
+    t.base = Some(t.base.map(_.unionByName(e)).getOrElse(e))
   }
 
   /** UPDATE edge properties for the edge ids in `ids` (reference D6 edge
@@ -421,29 +357,20 @@ final class GraphStore(
     * versioned stores get close-head + append-version semantics (T4). */
   def updateEdgesMatched(edgeType: String, srcLabel: String,
                          dstLabel: String, ids: DataFrame,
-                         sets: Map[String, Column]): Unit = {
-    val t = edgeTables.getOrElse((edgeType, srcLabel, dstLabel),
-      throw new IllegalArgumentException(
-        s"unknown edge type: $edgeType ($srcLabel->$dstLabel)"))
-    t.flush(spark)
-    t.base.foreach { base =>
-      t.base = Some(rewriteMatched(base, ids, sets, clock.nowNanos))
-    }
-    t.noteMutation()
-  }
+                         sets: Map[String, Column]): Unit =
+    updateIds(edgeTable(edgeType, srcLabel, dstLabel), ids, sets)
 
   /** UPDATE the rows whose ids appear in `ids` (one column, any name) —
     * join-based distributed rewrite, used by UPDATE-by-MATCH (reference
     * D6) so matched ids never surface on the driver. */
   def updateMatched(label: String, ids: DataFrame,
-                    sets: Map[String, Column]): Unit = {
-    val t = table(label)
-    t.flush(spark)
-    t.base.foreach { base =>
-      t.base = Some(rewriteMatched(base, ids, sets, clock.nowNanos))
-    }
-    t.noteMutation()
-  }
+                    sets: Map[String, Column]): Unit =
+    updateIds(table(label), ids, sets)
+
+  private def updateIds(t: TableState, ids: DataFrame,
+                        sets: Map[String, Column]): Unit =
+    rewrite(t, Keys(ids.toDF("__k").distinct(), col("id") === col("__k")),
+      Update(sets))
 
   /** DELETE nodes matching `cond` + their incident edges (reference D8:
     * src/main/database.cpp:107-114, DELETE_SYNTAX.md). Distributed:
@@ -452,24 +379,12 @@ final class GraphStore(
     val t = table(label)
     t.flush(spark)
     t.base.foreach { base =>
-      val isHead =
-        if (versioningEnabled) col(VersionCols.Vt) === INF else lit(true)
-      val doomed = base.filter(cond && isHead).select(col("id").as("__gone"))
-      t.base = Some(
-        if (!versioningEnabled) base.filter(!coalesce(cond, lit(false)))
-        else
-          // interval-end deletion (reference spec §10.6): close the head's
-          // valid interval so as-of reads still see the node
-          base.withColumn(VersionCols.Vt,
-            when(coalesce(cond, lit(false)) && isHead, clock.nowNanos)
-              .otherwise(col(VersionCols.Vt))))
-      edgeTables.values.foreach { e =>
-        if (e.info.srcLabel == label)
-          e.antiJoin(spark, doomed, "src", clock.nowNanos)
-        if (e.info.dstLabel == label)
-          e.antiJoin(spark, doomed, "dst", clock.nowNanos)
-      }
-      t.noteMutation()
+      val doomed = base.filter(cond && live).select(col("id").as("__gone"))
+      rewrite(t, Where(cond), Close)
+      for (e <- edgeTables.values;
+           (side, l) <- Seq("src" -> e.info.srcLabel, "dst" -> e.info.dstLabel)
+           if l == label)
+        rewrite(e, Keys(doomed, col(side) === col("__gone")), Close)
     }
   }
 
@@ -479,28 +394,16 @@ final class GraphStore(
   /** DELETE EDGE variants (reference D9: by type / FROM / TO / FROM+TO). */
   def deleteEdges(
       edgeType: String, srcLabel: String, dstLabel: String,
-      from: Option[Long] = None, to: Option[Long] = None): Unit = {
+      from: Option[Long] = None, to: Option[Long] = None): Unit =
     edgeTables.get((edgeType, srcLabel, dstLabel)).foreach { e =>
-      e.invalidatePairs()
-      e.flush(spark)
       val cond = (from, to) match {
         case (Some(s), Some(d)) => col("src") === s && col("dst") === d
         case (Some(s), None)    => col("src") === s
         case (None, Some(d))    => col("dst") === d
         case (None, None)       => lit(true)
       }
-      if (!versioningEnabled) e.base = e.base.map(_.filter(!cond))
-      else {
-        // versioned delete = close the valid interval (interval-end
-        // deletion, reference spec §10.6) so as-of reads still see it
-        val now = clock.nowNanos
-        e.base = e.base.map(_.withColumn(VersionCols.Vt,
-          when(cond && col(VersionCols.Vt) === INF, now)
-            .otherwise(col(VersionCols.Vt))))
-      }
-      e.noteMutation()
+      rewrite(e, Where(cond), Close)
     }
-  }
 
   /** DELETE the specific edges whose (src, dst) id pairs appear in
     * `pairs` (a two-column DataFrame, source ids first). This is the
@@ -508,29 +411,80 @@ final class GraphStore(
     * endpoint nodes survive. The reference shell declares the statement
     * with exactly this intent — "finding matching relationships …
     * removing edges from the edge store" (apps/tundra_shell.cpp:847-856,
-    * left TODO there). Distributed anti-join rewrite; versioned stores
-    * close the valid interval (interval-end deletion, spec §10.6). */
+    * left TODO there). */
   def deleteEdgesMatched(edgeType: String, srcLabel: String,
-                         dstLabel: String, pairs: DataFrame): Unit = {
+                         dstLabel: String, pairs: DataFrame): Unit =
     edgeTables.get((edgeType, srcLabel, dstLabel)).foreach { e =>
-      e.invalidatePairs()
-      e.flush(spark)
       val p = pairs.toDF("__gs", "__gd").dropDuplicates("__gs", "__gd")
-      val hit = col("src") === col("__gs") && col("dst") === col("__gd")
-      e.base = e.base.map { b =>
-        if (!versioningEnabled) b.join(p, hit, "left_anti")
-        else {
-          val now = clock.nowNanos
-          b.join(p.withColumn("__hit", lit(true)), hit, "left_outer")
-            .withColumn(VersionCols.Vt,
-              when(coalesce(col("__hit"), lit(false)) &&
-                col(VersionCols.Vt) === INF, now)
-                .otherwise(col(VersionCols.Vt)))
-            .drop("__gs", "__gd", "__hit")
-        }
-      }
-      e.noteMutation()
+      rewrite(e, Keys(p, col("src") === col("__gs") &&
+        col("dst") === col("__gd")), Close)
     }
+
+  // ------------------------------------------------------------------
+  // The mutation kernel
+  // ------------------------------------------------------------------
+
+  /** A live row: the head version when versioning, every row otherwise. */
+  private def live: Column =
+    if (versioningEnabled) col(VersionCols.Vt) === INF else lit(true)
+
+  /** Every bulk UPDATE and DELETE, node or edge, rewrites the rows `hit`
+    * selects here and nowhere else (reference: the one versioned-change
+    * routine, NodeArena::apply_updates, src/memory/node_arena.cpp:250-275).
+    * Per store mode:
+    *  - unversioned [[Update]]: one projection, `sets` on the hit rows;
+    *  - unversioned [[Close]]: a filter, or a left_anti join on the keys;
+    *  - versioned [[Update]]: [[GraphStore.versionedRewrite]] of the live
+    *    heads whose values change (no-op updates create no version,
+    *    tests/temporal_query_test.cpp:823; map sets and appends always
+    *    count as changes);
+    *  - versioned [[Close]]: interval-end deletion (reference spec §10.6)
+    *    — the live heads' `_vt` closes at now, so as-of reads still see
+    *    them.
+    * Flushes the buffer first and notes one mutation. */
+  private def rewrite(t: TableState, hit: Hit, change: Change): Unit = {
+    t.flush(spark)
+    t.base.foreach { base =>
+      val now = clock.nowNanos
+      val schema = base.schema
+      def project(df: DataFrame, mods: Map[String, Column]) =
+        df.select(schema.fieldNames.toIndexedSeq.map(n =>
+          mods.getOrElse(n, col(n)).as(n)): _*)
+      t.base = Some((hit, change) match {
+        case (Where(cond), Close) if !versioningEnabled =>
+          base.filter(!coalesce(cond, lit(false)))
+        case (Keys(keys, on), Close) if !versioningEnabled =>
+          base.join(keys, on, "left_anti")
+        case _ =>
+          val (df, matched) = hit match {
+            case Where(cond) => (base, coalesce(cond, lit(false)))
+            case Keys(keys, on) =>
+              val marked = keys.withColumn("__hit", lit(true))
+              (base.join(marked, on, "left_outer"), col("__hit").isNotNull)
+          }
+          change match {
+            case Close =>
+              project(df, Map(VersionCols.Vt -> when(matched && live, now)
+                .otherwise(col(VersionCols.Vt))))
+            case Update(sets, append, validFrom) =>
+              import GraphStore.{appended, changedCond, newVersionCols,
+                versionedRewrite}
+              val vals = sets.map { case (k, v) =>
+                val dt = schema(k).dataType // an unknown field is an error
+                k -> (if (append(k)) appended(k, dt, array(v)) else v)
+              }
+              if (!versioningEnabled)
+                project(df, vals.map { case (k, v) =>
+                  k -> when(matched, v).otherwise(col(k)) })
+              else versionedRewrite(df, schema,
+                matched && live && changedCond(schema, vals, append),
+                vals ++ newVersionCols(now, validFrom.getOrElse(now)), now)
+          }
+      })
+    }
+    if (change == Close)
+      t match { case e: EdgeTable => e.invalidatePairs(); case _ => }
+    t.noteMutation()
   }
 
   // ------------------------------------------------------------------
@@ -600,15 +554,10 @@ final class GraphStore(
     * src/core/edge_store.cpp:568): `(id, src, dst, created_ts, props…)`,
     * with as-of edge-existence visibility when versioning is on (T5). */
   def edges(edgeType: String, srcLabel: String, dstLabel: String,
-            asOf: Option[TemporalSnapshot] = None): DataFrame =
-    edgeTables.get((edgeType, srcLabel, dstLabel)) match {
-      case Some(t) =>
-        val df = t.materialize(spark)
-        if (!versioningEnabled) df else applyAsOf(df, asOf, "id")
-      case None =>
-        throw new IllegalArgumentException(
-          s"unknown edge type: $edgeType ($srcLabel->$dstLabel)")
-    }
+            asOf: Option[TemporalSnapshot] = None): DataFrame = {
+    val df = edgeTable(edgeType, srcLabel, dstLabel).materialize(spark)
+    if (!versioningEnabled) df else applyAsOf(df, asOf, "id")
+  }
 
   /** All edges named `edgeType` regardless of endpoints (SHOW EDGES t,
     * reference D11). An unknown type yields an EMPTY frame, not an
@@ -988,22 +937,16 @@ final class GraphStore(
     * (The tx axis needs no compaction: `_tt` is never closed; tx
     * supersession is already just `_tf` + newest-version-wins.)
     * Durability still comes from [[commit]]. */
-  def compactVersions(label: String, beforeValid: Long): Unit = {
-    require(versioningEnabled, "compactVersions needs a versioned store")
-    val t = table(label)
-    t.flush(spark)
-    t.base.foreach(b => t.base =
-      Some(GraphStore.compactHistory(b, beforeValid)))
-    t.noteMutation()
-  }
+  def compactVersions(label: String, beforeValid: Long): Unit =
+    compact(table(label), beforeValid)
 
   /** [[compactVersions]] for an edge table. */
   def compactEdgeVersions(edgeType: String, srcLabel: String,
-                          dstLabel: String, beforeValid: Long): Unit = {
+                          dstLabel: String, beforeValid: Long): Unit =
+    compact(edgeTable(edgeType, srcLabel, dstLabel), beforeValid)
+
+  private def compact(t: TableState, beforeValid: Long): Unit = {
     require(versioningEnabled, "compactVersions needs a versioned store")
-    val t = edgeTables.getOrElse((edgeType, srcLabel, dstLabel),
-      throw new IllegalArgumentException(
-        s"unknown edge type: $edgeType ($srcLabel->$dstLabel)"))
     t.flush(spark)
     t.base.foreach(b => t.base =
       Some(GraphStore.compactHistory(b, beforeValid)))
@@ -1019,6 +962,21 @@ final class GraphStore(
   private def table(label: String): NodeTable =
     nodeTables.getOrElse(label,
       throw new IllegalArgumentException(s"unknown schema: $label"))
+
+  private def edgeTable(edgeType: String, srcLabel: String,
+                        dstLabel: String): EdgeTable =
+    edgeTables.getOrElse((edgeType, srcLabel, dstLabel),
+      throw new IllegalArgumentException(
+        s"unknown edge type: $edgeType ($srcLabel->$dstLabel)"))
+
+  /** The edge table, registering a prop-less edge type on first use. */
+  private def edgeTableOrCreate(edgeType: String, srcLabel: String,
+                                dstLabel: String): EdgeTable =
+    edgeTables.getOrElseUpdate((edgeType, srcLabel, dstLabel), {
+      val info = EdgeTypeInfo(edgeType, srcLabel, dstLabel)
+      catalog.registerEdgeType(info)
+      new EdgeTable(info, versioningEnabled)
+    })
 }
 
 object GraphStore {
@@ -1053,6 +1011,11 @@ object GraphStore {
       VersionCols.Vt -> lit(INF),
       VersionCols.Tf -> lit(now),
       VersionCols.Tt -> lit(INF))
+
+  /** APPEND: ARRAY column `k` (of type `dt`) with `elems` appended; a
+    * null array appends to empty (reference D7). */
+  private[store] def appended(k: String, dt: DataType, elems: Column): Column =
+    concat(coalesce(col(k), array().cast(dt)), elems)
 
   /** Rebuild a MAP column for a single-key update (reference nested-path
     * semantics: values stringified, src/update/update_executor.cpp:23-81).
@@ -1417,8 +1380,26 @@ object GraphStore {
 // Table states
 // ====================================================================
 
-/** Shared table state: the lazy `base` plan plus mutation-chain lineage
-  * bounding (see [[GraphStore.CheckpointEvery]]). */
+/** What a mutation-kernel rewrite selects: the rows where `cond` holds, */
+private[store] sealed trait Hit
+private[store] final case class Where(cond: Column) extends Hit
+/** or the rows `on` joins to a row of `keys` (key columns named apart from
+  * the table's). */
+private[store] final case class Keys(keys: DataFrame, on: Column) extends Hit
+
+/** What a mutation-kernel rewrite does to the selected rows: SET `sets`
+  * (APPEND for the `append` fields; a versioned new head opens its valid
+  * interval at `validFrom`, default now), */
+private[store] sealed trait Change
+private[store] final case class Update(sets: Map[String, Column],
+    append: Set[String] = Set.empty,
+    validFrom: Option[Long] = None) extends Change
+/** or delete them. */
+private[store] case object Close extends Change
+
+/** Shared table state: the lazy `base` plan, the driver-side row buffer
+  * it absorbs on [[flush]], and mutation-chain lineage bounding (see
+  * [[GraphStore.CheckpointEvery]]). */
 private[store] trait TableState {
   private var _base: Option[DataFrame] = None
   /** (canonical snapshot root, data dir relative to it) this table's
@@ -1446,23 +1427,48 @@ private[store] trait TableState {
     if (mutations % GraphStore.CheckpointEvery == 0)
       base = base.map(GraphStore.truncateLineage)
   }
+
+  /** Stored row layout, version columns included when versioning. */
+  def rowSchema: StructType
+  val buffer = mutable.ArrayBuffer[Array[Any]]()
+  /** Called when [[flush]] empties the buffer. */
+  protected def onFlush(): Unit = ()
+
+  /** Merge the buffer into `base` (lazy union; no action triggered). */
+  def flush(spark: SparkSession): Unit = if (buffer.nonEmpty) {
+    val df = bufferDf(spark)
+    base = Some(base.map(_.unionByName(df)).getOrElse(df))
+    buffer.clear(); onFlush()
+  }
+
+  /** `base` plus the buffer. An empty table still carries the version
+    * columns when the store versions, or the as-of filter on `_vt` fails
+    * to resolve. */
+  def materialize(spark: SparkSession): DataFrame = {
+    val parts = base.toSeq ++
+      (if (buffer.nonEmpty) Seq(bufferDf(spark)) else Nil)
+    if (parts.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[Row](), rowSchema)
+    else parts.reduce(_ unionByName _)
+  }
+
+  private def bufferDf(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      buffer.map(a => Row.fromSeq(a.toIndexedSeq)).asJava, rowSchema)
 }
 
 private[store] final class NodeTable(
     val label: String, val schema: StructType,
     val versioned: Boolean = false) extends TableState {
-  /** Schema including version columns (only meaningful when versioning). */
-  def fullSchema(versioned: Boolean): StructType =
+  val rowSchema: StructType =
     if (versioned) StructType(schema.fields ++ VersionCols.fields) else schema
 
   var counterInitialized: Boolean = true
-  val buffer = mutable.ArrayBuffer[Array[Any]]()
   /** id -> buffer index of the current head version row. */
   private val headIdx = mutable.LongMap[Int]()
-  private var buffered = false
+  override protected def onFlush(): Unit = headIdx.clear()
 
-  def appendRow(id: Long, values: Map[String, Any], now: Long,
-                versioned: Boolean): Unit = {
+  def appendRow(id: Long, values: Map[String, Any], now: Long): Unit = {
     val unknown = values.keySet.diff(schema.fieldNames.toSet)
     require(unknown.isEmpty, s"unknown fields for $label: $unknown")
     val fieldVals = schema.fields.filter(_.name != "id").map { f =>
@@ -1478,13 +1484,12 @@ private[store] final class NodeTable(
       else (id +: fieldVals).toArray[Any]
     buffer += row
     headIdx(id) = buffer.length - 1
-    buffered = true
   }
 
   /** Buffered update; None if the id is not in the buffer. Some(false) when
     * the update was a no-op (versioned: creates no version). */
   def updateBuffered(id: Long, sets: Map[String, Any], append: Set[String],
-                     now: Long, versioned: Boolean): Option[Boolean] =
+                     now: Long): Option[Boolean] =
     headIdx.get(id).map { idx =>
       val row = buffer(idx)
       val updated = row.clone()
@@ -1528,29 +1533,6 @@ private[store] final class NodeTable(
         true
       }
     }
-
-  /** Merge the buffer into `base` (lazy union; no action triggered). */
-  def flush(spark: SparkSession): Unit = if (buffered) {
-    val df = bufferDf(spark)
-    base = Some(base.map(_.unionByName(df)).getOrElse(df))
-    buffer.clear(); headIdx.clear(); buffered = false
-  }
-
-  def materialize(spark: SparkSession): DataFrame = {
-    val parts = base.toSeq ++ (if (buffered) Seq(bufferDf(spark)) else Nil)
-    // Empty table must still carry version columns when the store versions,
-    // or the downstream as-of filter on _vt fails to resolve.
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[Row](), fullSchema(versioned))
-    else parts.reduce(_ unionByName _)
-  }
-
-  private def bufferDf(spark: SparkSession): DataFrame = {
-    val versioned = buffer.headOption.exists(_.length > schema.fields.length)
-    val rows = buffer.map(a => Row.fromSeq(a.toIndexedSeq)).asJava
-    spark.createDataFrame(rows, fullSchema(versioned))
-  }
 }
 
 private[store] object NodeTable {
@@ -1561,7 +1543,7 @@ private[store] object NodeTable {
     VersionCols.Tt -> INF)
 
   /** Wrap a plain DataFrame as version-0 rows. */
-  def addV0(df: DataFrame, clock: Clock): DataFrame =
+  def addV0(df: DataFrame): DataFrame =
     df.withColumns(scala.collection.immutable.ListMap(
       VersionCols.all.map(c => c -> lit(V0(c))): _*))
 }
@@ -1571,7 +1553,7 @@ private[store] final class EdgeTable(val info: EdgeTypeInfo,
   /** Edge rows carry the same bitemporal columns as nodes when versioning
     * is on — as-of applies to edge *existence* (reference spec §5.2:
     * "edges can appear/disappear by valid/txn windows"). */
-  val schema: StructType = StructType(
+  val rowSchema: StructType = StructType(
     (Seq(
       StructField("id", LongType, nullable = false),
       StructField("src", LongType, nullable = false),
@@ -1580,9 +1562,7 @@ private[store] final class EdgeTable(val info: EdgeTypeInfo,
     ) ++ info.props.fields) ++
       (if (versioned) VersionCols.fields else Seq.empty))
 
-  val buffer = mutable.ArrayBuffer[Array[Any]]()
   private val pairIndex = mutable.HashSet[(Long, Long)]()
-  private var buffered = false
 
   def appendRow(id: Long, src: Long, dst: Long, ts: Long,
                 props: Map[String, Any]): Unit = {
@@ -1598,7 +1578,6 @@ private[store] final class EdgeTable(val info: EdgeTypeInfo,
       if (versioned) Array[Any](0L, ts, INF, ts, INF) else Array.empty[Any]
     buffer += (Array[Any](id, src, dst, ts) ++ propVals ++ vCols)
     pairIndex += ((src, dst))
-    buffered = true
   }
 
   def existsBuffered(src: Long, dst: Long): Boolean = pairIndex((src, dst))
@@ -1614,43 +1593,6 @@ private[store] final class EdgeTable(val info: EdgeTypeInfo,
     * drop them so a deleted edge can be re-created — the authoritative
     * check is then [[existsPersisted]]. */
   def invalidatePairs(): Unit = pairIndex.clear()
-
-  def antiJoin(spark: SparkSession, doomed: DataFrame, side: String,
-               now: Long): Unit = {
-    invalidatePairs()
-    flush(spark)
-    base = base.map { b =>
-      if (!versioned)
-        b.join(doomed, col(side) === col("__gone"), "left_anti")
-      else {
-        // interval-end deletion: close valid_to of still-open versions
-        val hits = doomed.withColumn("__hit", lit(true))
-        b.join(hits, col(side) === col("__gone"), "left_outer")
-          .withColumn(VersionCols.Vt,
-            when(col("__hit") && col(VersionCols.Vt) === INF, now)
-              .otherwise(col(VersionCols.Vt)))
-          .drop("__gone", "__hit")
-      }
-    }
-    noteMutation()
-  }
-
-  def flush(spark: SparkSession): Unit = if (buffered) {
-    val df = bufferDf(spark)
-    base = Some(base.map(_.unionByName(df)).getOrElse(df))
-    buffer.clear(); buffered = false
-  }
-
-  def materialize(spark: SparkSession): DataFrame = {
-    val parts = base.toSeq ++ (if (buffered) Seq(bufferDf(spark)) else Nil)
-    if (parts.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else parts.reduce(_ unionByName _)
-  }
-
-  private def bufferDf(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      buffer.map(a => Row.fromSeq(a.toIndexedSeq)).asJava, schema)
 }
 
 /** Loose-but-checked scala-value -> Spark-type coercion for the interactive

@@ -72,6 +72,25 @@ class ArrayMapUpdateSpec extends SparkSpec {
       Seq("b", Seq("y", "t4", "t5", "t6")) -> 1))
   }
 
+  test("bulk APPEND onto a null array reads back [v], unversioned and " +
+      "versioned (D7)") {
+    for (versioned <- Seq(false, true)) {
+      val s = new GraphStore(spark, versioningEnabled = versioned)
+      s.createSchema("Item", "name" -> StringType,
+        "tags" -> ArrayType(StringType))
+      s.createNode("Item", Map("name" -> "a", "tags" -> null))
+      s.createNode("Item", Map("name" -> "b", "tags" -> Seq("x")))
+      s.updateWhere("Item", org.apache.spark.sql.functions.lit(true),
+        Map("tags" -> org.apache.spark.sql.functions.lit("v")),
+        append = Set("tags"))
+      val res = new Planner(s).plan(Q.from("i:Item")
+        .select("i.name", "i.tags").build)
+      assert(rowBag(res) === Map(
+        Seq("a", Seq("v")) -> 1,
+        Seq("b", Seq("x", "v")) -> 1), s"versioned = $versioned")
+    }
+  }
+
   test("UPDATE SET replaces array (not append)") {
     val s = new GraphStore(spark)
     s.createSchema("Item", "tags" -> ArrayType(StringType))

@@ -254,6 +254,72 @@ class TemporalSpec extends SparkSpec {
     assert(ageAt(s, Some(TemporalSnapshot(validTime = 1050L))) === Seq(50))
   }
 
+  test("mixed mutation chains keep plan depth bounded on every kernel " +
+      "caller") {
+    val (s, clock) = fixture()
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    s.createEdgeSchema("friend", "User", "User", "weight" -> LongType)
+    clock.set(1000L)
+    val ids = (0 until 30).map(i =>
+      s.createNode("User", Map("name" -> s"u$i", "age" -> i)))
+    ids.zip(ids.tail).foreach { case (a, b) =>
+      s.connect("User", a, "friend", "User", b, Map("weight" -> 1L)) }
+    (1 to 100).foreach { i =>
+      clock.set(1000L + i)
+      val a = ids(i % 29)
+      val b = ids(i % 29 + 1)
+      i % 5 match {
+        case 0 => s.updateMatched("User", Seq(a).toDF("id"),
+          Map("age" -> lit(i)))
+        case 1 => s.updateEdgesMatched("friend", "User", "User",
+          s.edges("friend", "User", "User").filter(col("src") === a)
+            .select("id"), Map("weight" -> lit(i.toLong)))
+        case 2 => s.deleteEdges("friend", "User", "User", from = Some(a))
+        case 3 => s.deleteEdgesMatched("friend", "User", "User",
+          Seq((a, b)).toDF("s", "d"))
+        case _ =>
+          s.deleteWhere("User", col("id") === ids(i / 5))
+      }
+    }
+    val nodePlan = s.nodes("User").queryExecution.logical.numberedTreeString
+    assert(nodePlan.linesIterator.size < 250, s"plan too deep:\n$nodePlan")
+    val edgePlan = s.edges("friend", "User", "User").queryExecution.logical
+      .numberedTreeString
+    assert(edgePlan.linesIterator.size < 250, s"plan too deep:\n$edgePlan")
+    // the last update of each survivor wins; deleted users are gone now
+    // and visible before their delete
+    val deleted = (4 to 99 by 5).map(i => ids(i / 5)).toSet
+    assert(s.nodes("User").select("id").as[Long].collect().toSet ===
+      ids.toSet -- deleted)
+    assert(s.nodes("User", Some(TemporalSnapshot(validTime = 1003L)))
+      .count() === 30)
+  }
+
+  test("versioned deleteEdgesMatched closes matched edges only") {
+    val (s, clock) = fixture()
+    import spark.implicits._
+    clock.set(1000L)
+    val Seq(a, b, c) = Seq("a", "b", "c").map(n =>
+      s.createNode("User", Map("name" -> n, "age" -> 1)))
+    Seq(a -> b, a -> c, b -> c).foreach { case (x, y) =>
+      s.connect("User", x, "friend", "User", y) }
+    clock.set(2000L)
+    s.deleteEdgesMatched("friend", "User", "User",
+      Seq((a, b), (b, c), (c, a)).toDF("s", "d"))
+    def pairsAt(snap: Option[TemporalSnapshot]): Set[(Long, Long)] =
+      s.edges("friend", "User", "User", snap).select("src", "dst")
+        .as[(Long, Long)].collect().toSet
+    assert(pairsAt(None) === Set(a -> c))
+    assert(pairsAt(Some(TemporalSnapshot(validTime = 2500L))) ===
+      Set(a -> c))
+    assert(pairsAt(Some(TemporalSnapshot(validTime = 1500L))) ===
+      Set(a -> b, a -> c, b -> c))
+    // closing adds no version row: the store still holds three edges
+    assert(s.edges("friend", "User", "User",
+      Some(TemporalSnapshot(validTime = 1500L))).count() === 3)
+  }
+
   test("node delete closes incident edge versions instead of dropping") {
     val (s, clock) = fixture()
     clock.set(1000L)
