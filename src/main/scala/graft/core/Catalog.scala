@@ -122,6 +122,12 @@ final case class EdgeTypeInfo(
   * auto-increment id counters starting at 0 (include/core/node.hpp:112-125),
   * and a single global edge-id counter (include/core/edge_store.hpp:40).
   */
+object Catalog {
+  /** A label's node schema: `id` prepended to its `fields`. */
+  def nodeSchema(fields: Seq[StructField]): StructType =
+    StructType(StructField("id", LongType, nullable = false) +: fields)
+}
+
 final class Catalog {
   private val nodeSchemas = mutable.LinkedHashMap[String, StructType]()
   private val nodeVersions = mutable.HashMap[String, Int]()
@@ -135,7 +141,7 @@ final class Catalog {
     synchronized {
       require(!nodeSchemas.contains(label), s"schema exists: $label")
       require(!fields.exists(_.name == "id"), "id is auto-prepended")
-      val st = StructType(StructField("id", LongType, nullable = false) +: fields)
+      val st = Catalog.nodeSchema(fields)
       nodeSchemas(label) = st
       nodeVersions(label) = 1
       nodeCounters(label) = new AtomicLong(0L)

@@ -109,7 +109,7 @@ final class Planner(store: GraphStore) {
       val label = nodeAliases(alias)
       val renamed = prefixed(store.nodes(label, q.asOf), alias)
       preFilters(alias).foldLeft(renamed)((d, e) =>
-        d.filter(compile(e, d)))
+        d.filter(compile(e, scope(d))))
     }
     def scanEdge(t: TraverseClause, alias: String,
                  srcLabel: String): DataFrame = {
@@ -131,7 +131,7 @@ final class Planner(store: GraphStore) {
       }
       val renamed = prefixed(raw, alias)
       preFilters(alias).foldLeft(renamed)((d, e) =>
-        d.filter(compile(e, d)))
+        d.filter(compile(e, scope(d))))
     }
 
     // ---- Clause-order execution (reference: src/main/database.cpp:221-244)
@@ -203,7 +203,7 @@ final class Planner(store: GraphStore) {
           // single-alias predicates on the edge alias (e.g. e.hops >= 2)
           // attach to the pair set, not an edge scan
           val pairsDf = preFilters(eAlias).foldLeft(pairsDf0)((d, e) =>
-            d.filter(compile(e, d)))
+            d.filter(compile(e, scope(d))))
           val tgt = scanNode(t.dstAlias)
           df.join(pairsDf, srcId === eSrc).join(tgt, eDst === dstId)
         } else (srcBound, dstBound) match {
@@ -339,7 +339,7 @@ final class Planner(store: GraphStore) {
 
     // ---- Deferred cross-alias WHERE (reference F7:
     // src/query/filter_executor.cpp:10-47)
-    postFilters.foreach(e => df = df.filter(compile(e, df)))
+    postFilters.foreach(e => df = df.filter(compile(e, scope(df))))
 
     // ---- SELECT projection + alias.field output naming (reference P1/R1)
     def plainCols(items: List[SelectItem]): Seq[Column] = items.flatMap {
@@ -357,7 +357,7 @@ final class Planner(store: GraphStore) {
         require(!ghosts(r.alias),
           s"SELECT references semi/anti alias ${r.alias}, " +
             "which binds no columns")
-        val c = refColumn(r, df, castTo = None)
+        val c = refColumn(r, scope(df), castTo = None)
         Seq(c.as(as.getOrElse(r.toString)))
       case SelectExpr(expr, as) =>
         expr.aliases.foreach { a =>
@@ -367,7 +367,7 @@ final class Planner(store: GraphStore) {
             s"SELECT expression references semi/anti alias $a, " +
               "which binds no columns")
         }
-        Seq(compileScalar(expr, df).as(as))
+        Seq(compileScalar(expr, scope(df)).as(as))
       case _: SelectAgg => Nil
     }
     val aggItems = q.select.collect { case a: SelectAgg => a }
@@ -384,7 +384,7 @@ final class Planner(store: GraphStore) {
         // final shuffle layout are Catalyst's.
         val aggCols = aggItems.map { a =>
           def c = refColumn(a.ref.getOrElse(throw new IllegalArgumentException(
-            s"${a.fn} requires a field")), df, castTo = None)
+            s"${a.fn} requires a field")), scope(df), castTo = None)
           val agged = a.fn match {
             case AggFn.Count => a.ref.map(_ => count(c)).getOrElse(count(lit(1)))
             case AggFn.CountDistinct => countDistinct(c)
@@ -431,18 +431,40 @@ final class Planner(store: GraphStore) {
   // compare_values, src/query/query.cpp:81-163 — no implicit coercion)
   // ------------------------------------------------------------------
 
-  private def compile(e: WhereExpr, df: DataFrame): Column = e match {
-    case And(l, r) => compile(l, df) && compile(r, df)
-    case Or(l, r)  => compile(l, df) || compile(r, df)
+  /** Where field references resolve: the column a reference names and
+    * the schema its type is read from (read only by a comparison). */
+  private final class Scope(val name: FieldRef => String,
+                            schema0: => StructType) {
+    lazy val schema: StructType = schema0
+  }
+
+  /** A planned frame's scope: `alias__field` columns, the frame's types. */
+  private def scope(df: DataFrame): Scope =
+    new Scope(r => s"${r.alias}$SEP${r.field}", df.schema)
+
+  /** A single-node mutation's WHERE (`UPDATE MATCH (a:L) … WHERE`,
+    * `DELETE (a:L) WHERE`) as a Column over label `label`'s raw columns.
+    * The MATCH compiler with its F3 typing, field-vs-field comparisons
+    * and scalar expressions; types come from the catalog, so compiling
+    * analyzes no plan. */
+  def compileWhere(e: WhereExpr, alias: String, label: String): Column =
+    compile(e, new Scope(r => {
+      require(r.alias == alias, s"alias ${r.alias} not in scope")
+      r.field
+    }, store.catalog.schemaOf(label)))
+
+  private def compile(e: WhereExpr, s: Scope): Column = e match {
+    case And(l, r) => compile(l, s) && compile(r, s)
+    case Or(l, r)  => compile(l, s) || compile(r, s)
     case ExprComparison(l, op, r) =>
-      applyOp(compileScalar(l, df), op, compileScalar(r, df))
+      applyOp(compileScalar(l, s), op, compileScalar(r, s))
     case Comparison(f, op, rhs) =>
-      val lhsType = refType(f, df)
-      validateTypes(f, lhsType, op, rhs, df)
-      val lhs = refColumn(f, df, castTo = litTypeFor(rhs, lhsType))
+      val lhsType = refType(f, s)
+      validateTypes(f, lhsType, op, rhs, s)
+      val lhs = refColumn(f, s, castTo = litTypeFor(rhs, lhsType))
       rhs match {
         case r: FieldRef =>
-          applyOp(lhs, op, refColumn(r, df, castTo = None))
+          applyOp(lhs, op, refColumn(r, s, castTo = None))
         case null => op match {
           case CmpOp.Eq    => lhs.isNull
           case CmpOp.NotEq => lhs.isNotNull
@@ -456,11 +478,11 @@ final class Planner(store: GraphStore) {
   /** Compile a scalar expression (beyond-reference, SURVEY §2.6): a fixed
     * function whitelist over codegen'd `sql.functions`, plus arithmetic.
     * Everything stays inside whole-stage codegen — no UDFs. */
-  private def compileScalar(e: ScalarExpr, df: DataFrame): Column = e match {
-    case SRef(r) => refColumn(r, df, castTo = None)
+  private def compileScalar(e: ScalarExpr, s: Scope): Column = e match {
+    case SRef(r) => refColumn(r, s, castTo = None)
     case SLit(v) => lit(v)
     case SArith(op, l, r) =>
-      val (a, b) = (compileScalar(l, df), compileScalar(r, df))
+      val (a, b) = (compileScalar(l, s), compileScalar(r, s))
       op match {
         case '+' => a + b
         case '-' => a - b
@@ -471,7 +493,7 @@ final class Planner(store: GraphStore) {
           s"unknown arithmetic operator $other")
       }
     case SFunc(name, args) =>
-      def c(i: Int) = compileScalar(args(i), df)
+      def c(i: Int) = compileScalar(args(i), s)
       def intLit(i: Int): Int = args(i) match {
         case SLit(v: Int)  => v
         case SLit(v: Long) => v.toInt
@@ -516,11 +538,10 @@ final class Planner(store: GraphStore) {
     case CmpOp.EndsWith   => l.endsWith(r)
   }
 
-  /** Resolve `alias.field` (or nested map path) to a Column against either
-    * a renamed scan or the denormalized frame. */
-  private def refColumn(r: FieldRef, df: DataFrame,
+  /** Resolve `alias.field` (or nested map path) to a Column in scope. */
+  private def refColumn(r: FieldRef, s: Scope,
                         castTo: Option[DataType]): Column = {
-    val base = col(s"${r.alias}$SEP${r.field}")
+    val base = col(s.name(r))
     val c =
       if (r.mapPath.isEmpty) base
       // nested MAP key access (reference P2/F5:
@@ -532,9 +553,9 @@ final class Planner(store: GraphStore) {
     }
   }
 
-  private def refType(r: FieldRef, df: DataFrame): DataType = {
-    val name = s"${r.alias}$SEP${r.field}"
-    val f = df.schema.fields.find(_.name == name).getOrElse(
+  private def refType(r: FieldRef, s: Scope): DataType = {
+    val name = s.name(r)
+    val f = s.schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"unknown field: $r"))
     if (r.mapPath.isEmpty) f.dataType
     else f.dataType match {
@@ -556,7 +577,7 @@ final class Planner(store: GraphStore) {
     }
 
   private def validateTypes(f: FieldRef, lhsType: DataType, op: CmpOp,
-                            rhs: Any, df: DataFrame): Unit = {
+                            rhs: Any, s: Scope): Unit = {
     val stringOps: Set[CmpOp] =
       Set(CmpOp.Contains, CmpOp.StartsWith, CmpOp.EndsWith)
     val eqOps: Set[CmpOp] = Set(CmpOp.Eq, CmpOp.NotEq)
@@ -571,7 +592,7 @@ final class Planner(store: GraphStore) {
     rhs match {
       case null => if (!eqOps(op)) fail("NULL only supports = / !=")
       case r: FieldRef =>
-        val rt = refType(r, df)
+        val rt = refType(r, s)
         if (!mapValued && !(numeric(lhsType) && numeric(rt)) &&
           lhsType != rt) fail(s"incompatible types $lhsType vs $rt")
       case _: Boolean =>

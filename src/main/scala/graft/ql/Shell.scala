@@ -1,10 +1,14 @@
 package graft.ql
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.Ast._
+import graft.pipeline.{Bpe, Corpus, Curation, Dedup, Dsir, Encoding, Ingest,
+  Multimodal, Similarity, TextAnalysis}
 import graft.planner.Planner
 import graft.store.GraphStore
 import graft.ql.TundraQL._
@@ -22,6 +26,369 @@ object Shell {
   def MaxSelectorMatches: Int =
     sys.props.get("graft.shell.maxSelectorMatches").map(_.toInt)
       .getOrElse(100000)
+
+  /** One PIPELINE statement: the option keys it accepts besides `id`,
+    * whether its output is document-grain (one row per unique node id,
+    * so INTO may attach it) and the operator call it binds to. */
+  private[graft] final case class PipelineOp(keys: Set[String],
+      docGrain: Boolean, build: PipelineArgs => DataFrame)
+
+  /** What a PIPELINE builder reads: the ON label's rows, the options
+    * through accessors that admit only the keys its entry declares (so
+    * the table cannot drift from the builders), and the QUERY IDS and
+    * AGAINST clauses. */
+  private[graft] final class PipelineArgs(name: String, keys: Set[String],
+      st: PipelineStmt, store: GraphStore, val warn: String => Unit) {
+    val df: DataFrame = store.nodes(st.label)
+    private def declared(k: String): Option[Any] = {
+      if (!keys(k)) throw new IllegalStateException(
+        s"PIPELINE $name reads option '$k', which its entry does not declare")
+      st.options.get(k)
+    }
+    def has(k: String): Boolean = declared(k).isDefined
+    def opt(k: String): Option[String] = declared(k).map(_.toString)
+    def str(k: String, d: String): String = opt(k).getOrElse(d)
+    /** A comma-separated list option; absent or blank entries dropped. */
+    def list(k: String): Seq[String] =
+      str(k, "").split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    // coercion errors NAME the offending key and statement (advice
+    // r12): a malformed value must not surface as a bare
+    // NumberFormatException with no hint which option it came from
+    private def num[T](k: String, d: T, kind: String)(f: String => T): T =
+      opt(k).map { v =>
+        try f(v) catch {
+          case _: NumberFormatException =>
+            throw new IllegalArgumentException(s"option '$k' of " +
+              s"""PIPELINE $name must be $kind, got "$v"""")
+        }
+      }.getOrElse(d)
+    def int(k: String, d: Int): Int = num(k, d, "an integer")(_.toInt)
+    def lng(k: String, d: Long): Long = num(k, d, "an integer")(_.toLong)
+    def dbl(k: String, d: Double): Double = num(k, d, "a number")(_.toDouble)
+    val id: String = str("id", "id")
+    def text: Column = col(str("text", "text"))
+    /** The QUERY IDS rows of the ON label (the ANN / PQ TOPK probes). */
+    def queries: DataFrame = {
+      require(st.queryIds.nonEmpty,
+        s"PIPELINE $name needs a QUERY IDS (…) list")
+      df.filter(col(id).isin(st.queryIds: _*))
+    }
+    /** The AGAINST label's rows; `role` names it in the error. */
+    def against(role: String): DataFrame = store.nodes(st.against.getOrElse(
+      throw new IllegalArgumentException(
+        s"PIPELINE $name needs AGAINST <$role>")))
+    /** PIPELINE MEDIA input shape: an EXPLICIT `payload` option always
+      * wraps that column as an opaque binary payload (even on a label
+      * that also carries `media` — the user named the column, so it
+      * must win, never be silently ignored); without one, a label
+      * already carrying the binary `media` + `meta` columns (the
+      * attachBinary / synthesize* layout) passes through, and a
+      * text-only label wraps its `text` column, exactly like the
+      * Scala-API caller would. */
+    def media: DataFrame = opt("payload") match {
+      case Some(p) => Multimodal.attachBinary(df, id, p)
+      case None if df.columns.contains("media") &&
+          df.columns.contains("meta") =>
+        df.select(col(id).cast("long").as("id"), col("media"), col("meta"))
+      case None => Multimodal.attachBinary(df, id, "text")
+    }
+  }
+
+  private def doc(keys: String*)(build: PipelineArgs => DataFrame) =
+    PipelineOp(keys.toSet, docGrain = true, build)
+  private def rows(keys: String*)(build: PipelineArgs => DataFrame) =
+    PipelineOp(keys.toSet, docGrain = false, build)
+  /** A text-column annotation: the id plus one computed column. */
+  private def annotate(as: String)(f: Column => Column) =
+    doc("text")(a => a.df.select(col(a.id), f(a.text).as(as)))
+
+  private val dedupExact = doc("keys")(a =>
+    Dedup.exact(a.df, a.id, a.str("keys", "text").split(',').map(_.trim)
+      .toSeq))
+
+  /** Every PIPELINE statement, keyed by (family, variant): the accepted
+    * keys, the grain and the builder of each, and the source of both
+    * PIPELINE error messages. `doc` entries may be attached with INTO;
+    * `rows` entries (pair, span, rank, frame, profile grain) may not. */
+  private[graft] val pipelines
+      : ListMap[(String, Option[String]), PipelineOp] = ListMap(
+    ("DEDUP", None) -> dedupExact,
+    ("DEDUP", Some("EXACT")) -> dedupExact,
+    ("DEDUP", Some("MINHASH")) -> rows("text", "num_hashes", "bands",
+        "shingle_k", "threshold") { a =>
+      Dedup.minhashLsh(a.df, a.id, a.str("text", "text"),
+        numHashes = a.int("num_hashes", 64), bands = a.int("bands", 16),
+        shingleK = a.int("shingle_k", 3), threshold = a.dbl("threshold", 0.7))
+    },
+    ("DEDUP", Some("SIMHASH")) -> rows("text", "max_hamming") { a =>
+      Dedup.simhashPairs(a.df, a.id, a.str("text", "text"),
+        maxHamming = a.int("max_hamming", 3))
+    },
+    ("DEDUP", Some("COSINE")) -> rows("vec", "threshold") { a =>
+      Dedup.cosinePairs(a.df, a.id, a.str("vec", "embedding"),
+        threshold = a.dbl("threshold", 0.9))
+    },
+    ("DEDUP", Some("COSINE_LSH")) -> rows("vec", "threshold", "planes",
+        "tables") { a =>
+      Dedup.cosinePairsLsh(a.df, a.id, a.str("vec", "embedding"),
+        threshold = a.dbl("threshold", 0.9), planes = a.int("planes", 12),
+        tables = a.int("tables", 1))
+    },
+    // keep-first cross-document line dedup (CCNet paragraph dedup —
+    // keeps ONE occurrence; TEXT BOILERPLATE drops all)
+    ("DEDUP", Some("LINES")) -> doc("text", "min_kept") { a =>
+      Curation.dedupLines(a.df, a.id, a.str("text", "text"),
+        minKeptLines = a.lng("min_kept", 1L))
+    },
+    // keep-first near-dup FILTER: first arrival of each family survives,
+    // later members flag is_dup (the streaming ingestion filter's batch
+    // twin)
+    ("DEDUP", Some("KEEPFIRST")) -> rows("text", "order", "num_hashes",
+        "bands", "shingle_k", "threshold") { a =>
+      Dedup.nearDupKeepFirst(a.df, a.id, a.str("order", a.id),
+        a.str("text", "text"), numHashes = a.int("num_hashes", 64),
+        bands = a.int("bands", 16), shingleK = a.int("shingle_k", 3),
+        threshold = a.dbl("threshold", 0.7))
+    },
+    ("SPANS", None) -> rows("text", "k", "min_count") { a =>
+      Dedup.duplicatedSpans(a.df, a.id, a.str("text", "text"),
+        k = a.int("k", 8), minCount = a.lng("min_count", 2L))
+    },
+    ("SPANS", Some("REMOVE")) -> doc("text", "k", "min_count",
+        "min_kept") { a =>
+      Dedup.removeSpans(a.df, a.id, a.str("text", "text"), k = a.int("k", 8),
+        minCount = a.lng("min_count", 2L),
+        minKeptTokens = a.lng("min_kept", 1L))
+    },
+    // keep-first k-sentence-span dedup (C4's final step)
+    ("SPANS", Some("SENTENCES")) -> doc("text", "k", "min_kept") { a =>
+      Curation.dedupSentenceSpans(a.df, a.id, a.str("text", "text"),
+        k = a.int("k", 3), minKeptSentences = a.lng("min_kept", 1L))
+    },
+    ("SHARDS", None) -> doc("n")(a =>
+      Curation.shuffleShards(a.df, a.id, a.int("n", 16))),
+    ("ANN", None) -> rows("vec", "k")(a =>
+      Similarity.bruteForceTopK(a.df, a.queries, k = a.int("k", 10),
+        idCol = a.id, vecCol = a.str("vec", "embedding"))),
+    // the scale path: train-on-the-fly IVF probe (interactive shape;
+    // production persists the index via the Scala API)
+    ("ANN", Some("IVF")) -> rows("vec", "k", "clusters", "iters",
+        "probe") { a =>
+      val vec = a.str("vec", "embedding")
+      val centroids = Similarity.ivfTrain(a.df, k = a.int("clusters", 16),
+        iters = a.int("iters", 2), idCol = a.id, vecCol = vec)
+      Similarity.ivfTopK(
+        Similarity.ivfAssign(a.df, centroids, idCol = a.id, vecCol = vec),
+        centroids, a.queries, k = a.int("k", 10),
+        nProbe = a.int("probe", 4), idCol = a.id, vecCol = vec)
+    },
+    // product quantization: train m per-subspace codebooks on the
+    // table, emit the (id, subspace, code) encoding
+    ("PQ", None) -> rows("vec", "m", "k", "iters")(a => pqCodes(a)._2),
+    // the ADC serving path: train + encode + per-query top-k over the
+    // compact codes (interactive shape; production persists the
+    // codebook/codes via the Scala API)
+    ("PQ", Some("TOPK")) -> rows("vec", "m", "k", "iters", "topk") { a =>
+      val (cb, codes) = pqCodes(a)
+      Similarity.pqTopK(codes, cb, a.queries, k = a.int("topk", 10),
+        m = a.int("m", 4), idCol = a.id, vecCol = a.str("vec", "embedding"))
+    },
+    ("DECONTAMINATE", None) -> doc("text", "k", "ratio")(a =>
+      Curation.decontaminate(a.df, a.against("benchmark-label"), a.id,
+        a.str("text", "text"), k = a.int("k", 3),
+        ratioThreshold = a.dbl("ratio", 0.5))),
+    ("PACK", None) -> doc("text", "budget", "chunks")(a =>
+      Curation.packSequences(a.df, a.id, a.str("text", "text"),
+        budgetTokens = a.lng("budget", 512L), chunks = a.int("chunks", 0))),
+    // pct = "value:percent,value:percent" — the percent binds to
+    // everything after the LAST ':', so stratum values may contain ':'
+    // (URLs, namespaced sources); values containing ',' cannot be
+    // expressed in this syntax (use the Scala API for those). Rows of
+    // strata absent from the map keep default_pct.
+    ("SAMPLE", None) -> doc("by", "pct", "default_pct") { a =>
+      val pcts = a.str("pct", "").split(',').filter(_.nonEmpty).map { kv =>
+        val i = kv.lastIndexOf(':')
+        require(i > 0 && i < kv.length - 1,
+          s"malformed pct entry '$kv' — expected value:percent")
+        kv.substring(0, i).trim -> kv.substring(i + 1).trim.toInt
+      }.toMap
+      Curation.stratifiedSample(a.df, a.id, col(a.str("by", "source")), pcts,
+        defaultPct = a.int("default_pct", 0))
+    },
+    ("CLUSTERS", None) -> doc("text", "block", "keys", "k",
+        "threshold") { a =>
+      val text = a.str("text", "text")
+      val block = a.str("block", "source")
+      Curation.dupClustersCollapsed(a.df, a.id,
+        exactKeyCols = a.str("keys", s"$block,$text").split(',')
+          .map(_.trim).toSeq,
+        pairGen = d => Dedup.ngramJaccardPairs(d, a.id, text,
+          blockCol = block, k = a.int("k", 3),
+          threshold = a.dbl("threshold", 0.1)),
+        collapsible = col(text).isNotNull)
+    },
+    // ---- text-analysis family (r12 verdict #7): thin bindings onto
+    // graft.pipeline.TextAnalysis, Bpe, Encoding and Curation
+    ("TEXT", Some("QUALITY")) -> doc("text")(a =>
+      TextAnalysis.annotate(a.df, a.str("text", "text")).select(col(a.id),
+        col("n_tokens"), col("n_tokens_bpe"), col("stopword_ratio"),
+        col("avg_word_len"), col("quality"))),
+    // method = stopword (default, the cheap heuristic) | ngram (the
+    // Cavnar-Trenkle trigram classifier). `threshold` is accepted only
+    // because stopword consumes it; ngram refuses it rather than
+    // silently ignore an explicit setting (advice r15)
+    ("TEXT", Some("LANGID")) -> doc("text", "threshold", "method") { a =>
+      a.str("method", "stopword") match {
+        case "stopword" =>
+          a.df.select(col(a.id), TextAnalysis.langId(a.text,
+            a.dbl("threshold", 0.05)).as("lang_pred"))
+        case "ngram" =>
+          require(!a.has("threshold"),
+            "option 'threshold' of PIPELINE TEXT LANGID applies only to " +
+              "method = stopword — the ngram classifier has no threshold")
+          val lid = TextAnalysis.langIdNgram(a.text)
+          a.df.select(col(a.id), lid.getField("lang").as("lang_pred"),
+            lid.getField("hits").as("hits"))
+        case m => throw new IllegalArgumentException(
+          "option 'method' of PIPELINE TEXT LANGID must be stopword or " +
+            s"""ngram, got "$m"""")
+      }
+    },
+    // Cavnar-Trenkle profile training: top-k trigrams per label by
+    // corpus frequency — the data-driven dial for LANGID method=ngram
+    // (default k = the paper's 300); one row per (label, rank)
+    ("TEXT", Some("LANGIDTRAIN")) -> rows("text", "label", "k")(a =>
+      TextAnalysis.langIdTrainProfiles(a.df, a.str("label", "lang"),
+        a.str("text", "text"), k = a.int("k", 300))),
+    ("TEXT", Some("FINGERPRINT")) -> annotate("fp")(TextAnalysis.fingerprint),
+    ("TEXT", Some("PII")) -> annotate("redacted")(TextAnalysis.redactPii),
+    ("TEXT", Some("REPETITION")) ->
+      annotate("rep_ratio")(TextAnalysis.repetitionRatio),
+    // cross-document line dedup (CCNet paragraph-dedup shape)
+    ("TEXT", Some("BOILERPLATE")) -> doc("text", "min_docs", "min_kept")(a =>
+      Curation.removeBoilerplate(a.df, a.id, a.str("text", "text"),
+        minDocs = a.lng("min_docs", 6L), minKeptLines = a.lng("min_kept", 1L))),
+    // corpus-trained bigram LM scoring (perplexity quality signal)
+    ("TEXT", Some("LM")) -> doc("text")(a =>
+      TextAnalysis.bigramLm(a.df, a.id, a.str("text", "text"))),
+    // the Gopher quality-rule suite (Rae 2021): integer signals + the
+    // pass bit; `required` overrides the English required-word list
+    ("TEXT", Some("GOPHER")) -> doc("text", "required") { a =>
+      val req = a.list("required")
+      TextAnalysis.gopherSignals(a.df, a.id, a.str("text", "text"),
+        if (req.nonEmpty) req else TextAnalysis.GopherRequiredWords)
+    },
+    // BPE train-on-the-fly + tokenize (interactive shape; a production
+    // pipeline persists the merge list via the API)
+    ("TEXT", Some("BPE")) -> doc("text", "merges") { a =>
+      val t = a.str("text", "text")
+      Bpe.tokenize(a.df, a.id, t, Bpe.train(a.df, t, a.int("merges", 20)))
+    },
+    // mojibake score + one-round Latin-1 mis-decode repair
+    ("TEXT", Some("FIXENCODING")) -> doc("text")(a =>
+      a.df.select(col(a.id), Encoding.mojibakeScore(a.text).as("n_moji"),
+        Encoding.repairMojibake(a.text).as("fixed"))),
+    // HTML → text extraction (script/style/comment contents dropped,
+    // tags stripped, named entities decoded)
+    ("TEXT", Some("STRIPHTML")) -> annotate("clean")(TextAnalysis.stripHtml),
+    // the C4 cleaning rules (Raffel 2020): line filters + page signals +
+    // the pass bit; `badwords` enables the paper's blocklist rule
+    ("TEXT", Some("C4")) -> doc("text", "badwords")(a =>
+      TextAnalysis.c4Clean(a.df, a.id, a.str("text", "text"),
+        a.list("badwords"))),
+    // Unicode normalization (UAX #15) — NFC/NFD/NFKC/NFKD
+    ("TEXT", Some("NORMALIZE")) -> doc("text", "form")(a =>
+      a.df.select(col(a.id), TextAnalysis.normalizeUnicode(a.text,
+        a.str("form", "NFC")).as("normalized"))),
+    // the Gopher REPETITION-filter suite (Rae 2021): line/paragraph
+    // duplicate signals + top-n-gram signals + the pass bit
+    ("TEXT", Some("GOPHERREP")) -> doc("text")(a =>
+      TextAnalysis.gopherRepetition(a.df, a.id, a.str("text", "text"))),
+    // fixed-budget token windows with overlap (chunk grain: ids repeat)
+    ("CHUNK", None) -> rows("text", "budget", "overlap")(a =>
+      Curation.chunkDocuments(a.df, a.id, a.str("text", "text"),
+        budget = a.int("budget", 512), overlap = a.int("overlap", 0))),
+    // canonicalize a URL column (dedup via a chained PIPELINE DEDUP
+    // EXACT on the canonical key); `block` (a domain list) additionally
+    // drops rows whose host is a blocked domain or any subdomain of one
+    ("URL", None) -> doc("url", "block") { a =>
+      val canon = a.df.select(col(a.id),
+        Curation.canonicalizeUrl(col(a.str("url", "url"))).as("url"))
+      val blocked = a.list("block")
+      if (blocked.isEmpty) canon
+      else Curation.filterBlockedHosts(canon, a.id, "url", blocked)
+    },
+    // RFC 9309 robots.txt evaluation: the allowed bit per row from a
+    // rules-body column + a path column
+    ("ROBOTS", None) -> doc("rules", "path", "agent")(a =>
+      a.df.select(col(a.id), TextAnalysis.robotsAllowed(
+        col(a.str("rules", "rules")), col(a.str("path", "path")),
+        a.str("agent", "graftbot")).cast("int").as("allowed"))),
+    // temperature-scaled source mixing (GPT-3/PaLM data mixing)
+    ("MIX", None) -> doc("by", "budget", "tau")(a =>
+      Curation.temperatureMix(a.df, a.id, a.str("by", "source"),
+        budgetDocs = a.lng("budget", 1000L), tau = a.dbl("tau", 0.5))),
+    // DSIR importance weighting (Xie 2023): AGAINST names the TARGET
+    // label; the scored label itself is the source distribution (the
+    // paper's raw-corpus setup). k > 0 additionally Gumbel-top-k
+    // resamples (seeded, deterministic)
+    ("DSIR", None) -> doc("text", "k", "seed", "buckets") { a =>
+      val w = Dsir.weights(a.df, a.against("target-label"), a.df, a.id,
+        a.str("text", "text"), buckets = a.int("buckets", 0))
+      val k = a.int("k", 0)
+      if (k > 0) Dsir.resample(w, a.id, k, a.lng("seed", 42L)) else w
+    },
+    // SemDeDup: k-means clusters + min-id cosine pruning; emits the KEPT
+    // vectors. The skew probe's warning lands in the shell's
+    // `diagnostics` so an interactive user sees it
+    ("SEMDEDUP", None) -> doc("vec", "clusters", "iters", "threshold",
+        "max_pairs")(a =>
+      Dedup.semDedup(a.df, nClusters = a.int("clusters", 16),
+        iters = a.int("iters", 2), threshold = a.dbl("threshold", 0.9),
+        idCol = a.id, vecCol = a.str("vec", "embedding"),
+        maxPairsPerCluster = a.lng("max_pairs", 100000000L),
+        onWarn = a.warn)),
+    // HTTP response split over a binary payload column (the WARC → HTTP
+    // → STRIPHTML → DEDUP intake chain); one output row per input row
+    ("HTTP", None) -> doc("payload")(a =>
+      Ingest.httpSplit(a.df, a.str("payload", "payload"))),
+    // one-row corpus health dashboard (integer aggregates)
+    ("PROFILE", None) -> rows("text", "min_quality")(a =>
+      Corpus.profile(a.df, a.id, a.str("text", "text"),
+        minQuality = a.dbl("min_quality", 0.5))),
+    // ---- media family: decode over a binary `media` column (see
+    // PipelineArgs.media for the input shapes)
+    ("MEDIA", Some("IMAGE")) -> doc("payload")(a => Multimodal.decode(a.media)),
+    ("MEDIA", Some("AUDIO")) ->
+      doc("payload")(a => Multimodal.decodeAudio(a.media)),
+    // HDR scanline decode via the engine's own OpenEXR codec
+    ("MEDIA", Some("EXR")) -> doc("payload")(a => Multimodal.decodeExr(a.media)),
+    // video frame sampling (AVI DIB / AVI Motion-JPEG / MP4 raw); frame
+    // grain: one row per sampled frame
+    ("MEDIA", Some("FRAMES")) -> rows("payload", "k")(a =>
+      Multimodal.sampleVideoFrames(a.media, k = a.int("k", 3))))
+
+  /** PQ's trained codebook and the table's codes (both PQ statements). */
+  private def pqCodes(a: PipelineArgs): (DataFrame, DataFrame) = {
+    val vec = a.str("vec", "embedding")
+    val m = a.int("m", 4)
+    val cb = Similarity.pqTrain(a.df, m = m, k = a.int("k", 16),
+      iters = a.int("iters", 2), idCol = a.id, vecCol = vec)
+    (cb, Similarity.pqEncode(a.df, cb, m = m, idCol = a.id, vecCol = vec))
+  }
+
+  /** The PIPELINE statements `keep` admits, by family in table order:
+    * `DEDUP ([EXACT|MINHASH|…])` — brackets when the variant is optional. */
+  private[graft] def families(keep: PipelineOp => Boolean): String = {
+    val kept = pipelines.filter(e => keep(e._2)).keys.toSeq
+    kept.map(_._1).distinct.map { family =>
+      val variants = kept.filter(_._1 == family).map(_._2)
+      val named = variants.flatten.mkString("|")
+      if (named.isEmpty) family
+      else if (variants.contains(None)) s"$family ([$named])"
+      else s"$family ($named)"
+    }.mkString(", ")
+  }
 }
 
 final class Shell(store: GraphStore,
@@ -143,9 +510,8 @@ final class Shell(store: GraphStore,
 
     case DeletePatternStmt(PathPattern(NodePat(alias, label) :: Nil, Nil),
         where) =>
-      val cond = where.map(compileSingleAlias(_, alias))
-        .getOrElse(lit(true))
-      store.deleteWhere(label.getOrElse(alias), cond)
+      val l = label.getOrElse(alias)
+      store.deleteWhere(l, mutationWhere(where, alias, l))
       None
     case DeletePatternStmt(pattern, where) =>
       // path-pattern DELETE deletes the matched *relationships* (endpoint
@@ -154,25 +520,20 @@ final class Shell(store: GraphStore,
       // matching relationships … removing edges from the edge store");
       // single-node patterns (previous case) delete the matched nodes.
       val m = MatchStmt(List(pattern), where, List.empty)
-      val aliasLabel = pattern.nodes
-        .map(n => n.alias -> n.label.getOrElse(n.alias)).toMap
+      val b = new Bindings(List(pattern))
       // plan EVERY hop's pair set before deleting anything: a plan built
       // after an earlier hop's delete would re-run the MATCH against the
       // already-mutated edge table, find no complete paths, and silently
       // delete nothing for the later hops. Captured plans are immutable,
       // so deferring execution past the mutations is safe.
-      val hopPairs = pattern.edges.zipWithIndex.map { case (e, i) =>
-        val (s, d) =
-          if (e.reversed) (pattern.nodes(i + 1), pattern.nodes(i))
-          else (pattern.nodes(i), pattern.nodes(i + 1))
-        val pairs = planner.plan(toQuery(m.copy(select = List(
-          SelectField(FieldRef(s.alias, List("id"))),
-          SelectField(FieldRef(d.alias, List("id")))))))
-        (e, s, d, pairs)
+      val hopPairs = b.hops.map { h =>
+        h -> planner.plan(toQuery(m.copy(select = List(
+          SelectField(FieldRef(h.src.alias, List("id"))),
+          SelectField(FieldRef(h.dst.alias, List("id")))))))
       }
-      hopPairs.foreach { case (e, s, d, pairs) =>
-        store.deleteEdgesMatched(e.edgeType,
-          aliasLabel(s.alias), aliasLabel(d.alias), pairs)
+      hopPairs.foreach { case (h, pairs) =>
+        store.deleteEdgesMatched(h.edge.edgeType,
+          b.labelOf(h.src.alias), b.labelOf(h.dst.alias), pairs)
       }
       None
 
@@ -196,11 +557,8 @@ final class Shell(store: GraphStore,
         List(PathPattern(NodePat(alias, label) :: Nil, Nil)), sets, where) =>
       // single-node pattern: one distributed conditional rewrite
       val l = label.getOrElse(alias)
-      val cond = where.map(compileSingleAlias(_, alias)).getOrElse(lit(true))
-      store.updateWhere(l, cond, sets.map { case (k, v) =>
-        val field = stripAlias(k, alias)
-        // nested MAP paths rewrite the base map column
-        field.split('.')(0) -> setColumn(l, field, v)
+      store.updateWhere(l, mutationWhere(where, alias, l), sets.map {
+        case (k, v) => setEntry(stripAlias(k, alias), v)
       })
       None
 
@@ -209,20 +567,8 @@ final class Shell(store: GraphStore,
       // (reference: update_by_match, src/update/update_executor.cpp:85-213;
       // an edge-alias SET updates that edge type's properties, :177-209)
       val m = MatchStmt(patterns, where, List.empty)
-      val aliasLabel = patterns.flatMap(p => p.nodes)
-        .map(n => n.alias -> n.label.getOrElse(n.alias)).toMap
-      // edge alias -> (type, srcLabel, dstLabel) from its pattern position
-      val edgeAliases = patterns.flatMap { p =>
-        p.edges.zipWithIndex.collect {
-          case (e, i) if e.alias.isDefined =>
-            val (s, d) =
-              if (e.reversed) (p.nodes(i + 1), p.nodes(i))
-              else (p.nodes(i), p.nodes(i + 1))
-            e.alias.get -> (e.edgeType,
-              s.label.getOrElse(aliasLabel(s.alias)),
-              d.label.getOrElse(aliasLabel(d.alias)))
-        }
-      }.toMap
+      val b = new Bindings(patterns)
+      val edgeAliases = b.hops.flatMap(h => h.edge.alias.map(_ -> h)).toMap
       // plan EVERY alias's matched-id set before applying any update —
       // the MATCH runs once, logically: a plan built after an earlier
       // alias's update would re-match against already-updated rows (a
@@ -239,17 +585,15 @@ final class Shell(store: GraphStore,
         }
       planned.foreach { case (alias, aliasSets, ids) =>
         val colSets = aliasSets.map { case (k, v) =>
-          val field = k.split('.').drop(1).mkString(".")
-          field.split('.')(0) ->
-            setColumn(aliasLabel.getOrElse(alias, alias), field, v)
+          setEntry(k.split('.').drop(1).mkString("."), v)
         }
         edgeAliases.get(alias) match {
-          case Some((etype, s, d)) =>
-            store.updateEdgesMatched(etype, s, d, ids, colSets)
+          case Some(h) =>
+            store.updateEdgesMatched(h.edge.edgeType, b.labelOf(h.src.alias),
+              b.labelOf(h.dst.alias), ids, colSets)
           case None =>
-            val label = aliasLabel.getOrElse(alias,
-              throw new IllegalArgumentException(s"unknown SET alias $alias"))
-            store.updateMatched(label, ids, colSets)
+            require(b.isNode(alias), s"unknown SET alias $alias")
+            store.updateMatched(b.labelOf(alias), ids, colSets)
         }
       }
       None
@@ -259,467 +603,46 @@ final class Shell(store: GraphStore,
         throw new IllegalStateException("no snapshot path configured")))
       None
 
-    case PipelineStmt(family, variant, label, opts, qids, against, into) =>
+    case st: PipelineStmt =>
       // pipeline operators from the shell (SURVEY §2.10 north star):
       // the statement is a thin argument-binding layer — semantics and
       // scale shape live entirely in the graft.pipeline operators the
       // Scala API exposes, so QL results are bit-identical to API calls
       diag.clear()
-      val df = store.nodes(label)
-      def unknownStmt(): Nothing = throw new IllegalArgumentException(
-        s"unknown PIPELINE statement: $family ${variant.getOrElse("")} — " +
-          "families: DEDUP (EXACT|MINHASH|SIMHASH|COSINE|COSINE_LSH|" +
-          "LINES), " +
-          "SPANS ([REMOVE|SENTENCES]), SHARDS, ANN ([IVF]), SEMDEDUP, " +
-          "PROFILE, " +
-          "DECONTAMINATE, PACK, SAMPLE, CLUSTERS, TEXT (QUALITY|LANGID|" +
-          "FINGERPRINT|PII|BPE|REPETITION|BOILERPLATE|LM|FIXENCODING|" +
-          "STRIPHTML|GOPHER|GOPHERREP|C4|NORMALIZE), HTTP, CHUNK, URL, " +
-          "ROBOTS, MIX, DSIR, " +
-          "MEDIA (IMAGE|AUDIO|EXR|FRAMES)")
+      val name = (st.family +: st.variant.toSeq).mkString(" ")
+      // the (family, variant) pair is validated FIRST (advice r12): an
+      // unknown variant of a known family is an unknown STATEMENT, and
+      // must say so instead of rejecting its option keys against an
+      // empty accepted set
+      val op = Shell.pipelines.getOrElse((st.family, st.variant),
+        throw new IllegalArgumentException(s"unknown PIPELINE statement: " +
+          s"$name — families: ${Shell.families(_ => true)}"))
       // an unknown (or misspelled) option key must fail loudly, never
       // silently run with a default — the review-r12 rule: a user who
       // writes ratio_threshold where the statement takes `ratio` gets
-      // an error naming the accepted keys, not a wrong threshold. The
-      // (family, variant) pair is validated FIRST (advice r12): an
-      // unknown variant of a known family is an unknown STATEMENT, and
-      // must say so instead of rejecting its option keys against an
-      // empty accepted set.
-      val accepted: Set[String] = ((family, variant) match {
-        case ("DEDUP", Some("EXACT") | None)  => Set("keys")
-        case ("DEDUP", Some("MINHASH"))       =>
-          Set("text", "num_hashes", "bands", "shingle_k", "threshold")
-        case ("DEDUP", Some("SIMHASH"))       => Set("text", "max_hamming")
-        case ("DEDUP", Some("COSINE"))        => Set("vec", "threshold")
-        case ("DEDUP", Some("COSINE_LSH"))    =>
-          Set("vec", "threshold", "planes", "tables")
-        case ("DEDUP", Some("LINES"))         => Set("text", "min_kept")
-        case ("DEDUP", Some("KEEPFIRST"))     =>
-          Set("text", "order", "num_hashes", "bands", "shingle_k",
-            "threshold")
-        case ("SPANS", None)                  => Set("text", "k", "min_count")
-        case ("SPANS", Some("REMOVE"))        =>
-          Set("text", "k", "min_count", "min_kept")
-        case ("SPANS", Some("SENTENCES"))     =>
-          Set("text", "k", "min_kept")
-        case ("SHARDS", None)                 => Set("n")
-        case ("ANN", None)                    => Set("vec", "k")
-        case ("ANN", Some("IVF"))             =>
-          Set("vec", "k", "clusters", "iters", "probe")
-        case ("PQ", None)                     =>
-          Set("vec", "m", "k", "iters")
-        case ("PQ", Some("TOPK"))             =>
-          Set("vec", "m", "k", "iters", "topk")
-        case ("DECONTAMINATE", None)          => Set("text", "k", "ratio")
-        case ("PACK", None)                   => Set("text", "budget", "chunks")
-        case ("SAMPLE", None)                 => Set("by", "pct", "default_pct")
-        case ("CLUSTERS", None)               =>
-          Set("text", "block", "keys", "k", "threshold")
-        // `threshold` is accepted ONLY where it is consumed (LANGID):
-        // accepting it for the other TEXT variants would silently
-        // ignore an explicit setting — the exact silent-default class
-        // this validation exists to kill
-        case ("TEXT", Some("LANGID"))         =>
-          Set("text", "threshold", "method")
-        case ("TEXT", Some("LANGIDTRAIN"))    =>
-          Set("text", "label", "k")
-        case ("TEXT", Some("QUALITY") | Some("PII") |
-            Some("REPETITION") | Some("FINGERPRINT") |
-            Some("LM"))                       => Set("text")
-        case ("TEXT", Some("GOPHER"))         => Set("text", "required")
-        case ("TEXT", Some("C4"))             => Set("text", "badwords")
-        case ("TEXT", Some("NORMALIZE"))      => Set("text", "form")
-        case ("TEXT", Some("GOPHERREP"))      => Set("text")
-        case ("TEXT", Some("BOILERPLATE"))    =>
-          Set("text", "min_docs", "min_kept")
-        case ("TEXT", Some("BPE"))            => Set("text", "merges")
-        case ("TEXT", Some("FIXENCODING"))    => Set("text")
-        case ("TEXT", Some("STRIPHTML"))      => Set("text")
-        case ("DSIR", None)                   =>
-          Set("text", "k", "seed", "buckets")
-        case ("CHUNK", None)                  =>
-          Set("text", "budget", "overlap")
-        case ("URL", None)                    => Set("url", "block")
-        case ("ROBOTS", None)                 =>
-          Set("rules", "path", "agent")
-        case ("MIX", None)                    =>
-          Set("by", "budget", "tau")
-        case ("SEMDEDUP", None)               =>
-          Set("vec", "clusters", "iters", "threshold", "max_pairs")
-        case ("HTTP", None)                   => Set("payload")
-        case ("PROFILE", None)                =>
-          Set("text", "min_quality")
-        case ("MEDIA", Some("IMAGE") | Some("AUDIO") |
-            Some("EXR"))                      => Set("payload")
-        case ("MEDIA", Some("FRAMES"))        => Set("payload", "k")
-        case _                                => unknownStmt()
-      }) ++ Set("id")
-      val unknown = opts.keySet.diff(accepted)
+      // an error naming the accepted keys, not a wrong threshold
+      val accepted = op.keys + "id"
+      val unknown = st.options.keySet.diff(accepted)
       require(unknown.isEmpty,
         s"unknown PIPELINE option(s) ${unknown.mkString(", ")} for " +
-          s"$family ${variant.getOrElse("")} — accepted: " +
-          accepted.toSeq.sorted.mkString(", "))
-      def str(k: String, d: String) =
-        opts.get(k).map(_.toString).getOrElse(d)
-      // coercion errors NAME the offending key and statement (advice
-      // r12): a malformed value must not surface as a bare
-      // NumberFormatException with no hint which option it came from
-      def num[T](k: String, d: T, kind: String)(f: String => T): T =
-        opts.get(k).map { v =>
-          try f(v.toString) catch {
-            case _: NumberFormatException =>
-              throw new IllegalArgumentException(s"option '$k' of " +
-                s"PIPELINE $family ${variant.getOrElse("")} must be " +
-                s"""$kind, got "$v"""")
-          }
-        }.getOrElse(d)
-      def int(k: String, d: Int) = num(k, d, "an integer")(_.toInt)
-      def lng(k: String, d: Long) = num(k, d, "an integer")(_.toLong)
-      def dbl(k: String, d: Double) = num(k, d, "a number")(_.toDouble)
-      val id = str("id", "id")
-      val result: DataFrame = (family, variant) match {
-        case ("DEDUP", Some("EXACT") | None) =>
-          graft.pipeline.Dedup.exact(df, id,
-            str("keys", "text").split(',').map(_.trim).toSeq)
-        case ("DEDUP", Some("MINHASH")) =>
-          graft.pipeline.Dedup.minhashLsh(df, id, str("text", "text"),
-            numHashes = int("num_hashes", 64), bands = int("bands", 16),
-            shingleK = int("shingle_k", 3),
-            threshold = dbl("threshold", 0.7))
-        case ("DEDUP", Some("SIMHASH")) =>
-          graft.pipeline.Dedup.simhashPairs(df, id, str("text", "text"),
-            maxHamming = int("max_hamming", 3))
-        case ("DEDUP", Some("COSINE")) =>
-          graft.pipeline.Dedup.cosinePairs(df, id,
-            str("vec", "embedding"), threshold = dbl("threshold", 0.9))
-        case ("DEDUP", Some("COSINE_LSH")) =>
-          graft.pipeline.Dedup.cosinePairsLsh(df, id,
-            str("vec", "embedding"), threshold = dbl("threshold", 0.9),
-            planes = int("planes", 12), tables = int("tables", 1))
-        case ("DEDUP", Some("LINES")) =>
-          // keep-first cross-document line dedup (CCNet paragraph
-          // dedup — keeps ONE occurrence; BOILERPLATE drops all)
-          graft.pipeline.Curation.dedupLines(df, id,
-            str("text", "text"), minKeptLines = lng("min_kept", 1L))
-        case ("DEDUP", Some("KEEPFIRST")) =>
-          // keep-first near-dup FILTER: first arrival of each family
-          // survives, later members flag is_dup (the streaming
-          // ingestion filter's batch twin)
-          graft.pipeline.Dedup.nearDupKeepFirst(df, id,
-            str("order", id), str("text", "text"),
-            numHashes = int("num_hashes", 64), bands = int("bands", 16),
-            shingleK = int("shingle_k", 3),
-            threshold = dbl("threshold", 0.7))
-        case ("SPANS", None) =>
-          graft.pipeline.Dedup.duplicatedSpans(df, id,
-            str("text", "text"), k = int("k", 8),
-            minCount = lng("min_count", 2L))
-        case ("SPANS", Some("REMOVE")) =>
-          graft.pipeline.Dedup.removeSpans(df, id, str("text", "text"),
-            k = int("k", 8), minCount = lng("min_count", 2L),
-            minKeptTokens = lng("min_kept", 1L))
-        case ("SPANS", Some("SENTENCES")) =>
-          // keep-first k-sentence-span dedup (C4's final step)
-          graft.pipeline.Curation.dedupSentenceSpans(df, id,
-            str("text", "text"), k = int("k", 3),
-            minKeptSentences = lng("min_kept", 1L))
-        case ("SHARDS", None) =>
-          graft.pipeline.Curation.shuffleShards(df, id, int("n", 16))
-        case ("ANN", None) =>
-          require(qids.nonEmpty,
-            "PIPELINE ANN needs a QUERY IDS (…) list")
-          graft.pipeline.Similarity.bruteForceTopK(df,
-            df.filter(col(id).isin(qids: _*)), k = int("k", 10),
-            idCol = id, vecCol = str("vec", "embedding"))
-        case ("ANN", Some("IVF")) =>
-          // the scale path: train-on-the-fly IVF probe (interactive
-          // shape; production persists the index via the Scala API)
-          require(qids.nonEmpty,
-            "PIPELINE ANN IVF needs a QUERY IDS (…) list")
-          val vec = str("vec", "embedding")
-          val centroids = graft.pipeline.Similarity.ivfTrain(df,
-            k = int("clusters", 16), iters = int("iters", 2),
-            idCol = id, vecCol = vec)
-          val assigned = graft.pipeline.Similarity.ivfAssign(df,
-            centroids, idCol = id, vecCol = vec)
-          graft.pipeline.Similarity.ivfTopK(assigned, centroids,
-            df.filter(col(id).isin(qids: _*)), k = int("k", 10),
-            nProbe = int("probe", 4), idCol = id, vecCol = vec)
-        case ("PQ", None) =>
-          // product quantization: train m per-subspace codebooks on
-          // the table, emit the (id, subspace, code) encoding
-          val vec = str("vec", "embedding")
-          val m = int("m", 4)
-          val cb = graft.pipeline.Similarity.pqTrain(df, m = m,
-            k = int("k", 16), iters = int("iters", 2), idCol = id,
-            vecCol = vec)
-          graft.pipeline.Similarity.pqEncode(df, cb, m = m,
-            idCol = id, vecCol = vec)
-        case ("PQ", Some("TOPK")) =>
-          // the ADC serving path: train + encode + per-query top-k
-          // over the compact codes (interactive shape; production
-          // persists the codebook/codes via the Scala API)
-          require(qids.nonEmpty,
-            "PIPELINE PQ TOPK needs a QUERY IDS (…) list")
-          val vec = str("vec", "embedding")
-          val m = int("m", 4)
-          val cb = graft.pipeline.Similarity.pqTrain(df, m = m,
-            k = int("k", 16), iters = int("iters", 2), idCol = id,
-            vecCol = vec)
-          val codes = graft.pipeline.Similarity.pqEncode(df, cb,
-            m = m, idCol = id, vecCol = vec)
-          graft.pipeline.Similarity.pqTopK(codes, cb,
-            df.filter(col(id).isin(qids: _*)), k = int("topk", 10),
-            m = m, idCol = id, vecCol = vec)
-        case ("DECONTAMINATE", None) =>
-          val bench = store.nodes(against.getOrElse(
-            throw new IllegalArgumentException(
-              "PIPELINE DECONTAMINATE needs AGAINST <benchmark-label>")))
-          graft.pipeline.Curation.decontaminate(df, bench, id,
-            str("text", "text"), k = int("k", 3),
-            ratioThreshold = dbl("ratio", 0.5))
-        case ("PACK", None) =>
-          graft.pipeline.Curation.packSequences(df, id,
-            str("text", "text"), budgetTokens = lng("budget", 512L),
-            chunks = int("chunks", 0))
-        case ("SAMPLE", None) =>
-          // pct = "value:percent,value:percent" — the percent binds to
-          // everything after the LAST ':', so stratum values may contain
-          // ':' (URLs, namespaced sources); values containing ',' cannot
-          // be expressed in this syntax (use the Scala API for those).
-          // Rows of strata absent from the map keep default_pct.
-          val pcts = str("pct", "").split(',').filter(_.nonEmpty)
-            .map { kv =>
-              val i = kv.lastIndexOf(':')
-              require(i > 0 && i < kv.length - 1,
-                s"malformed pct entry '$kv' — expected value:percent")
-              kv.substring(0, i).trim -> kv.substring(i + 1).trim.toInt
-            }.toMap
-          graft.pipeline.Curation.stratifiedSample(df, id,
-            col(str("by", "source")), pcts,
-            defaultPct = int("default_pct", 0))
-        case ("CLUSTERS", None) =>
-          val text = str("text", "text")
-          val block = str("block", "source")
-          graft.pipeline.Curation.dupClustersCollapsed(df, id,
-            exactKeyCols = str("keys", s"$block,$text")
-              .split(',').map(_.trim).toSeq,
-            pairGen = d => graft.pipeline.Dedup.ngramJaccardPairs(
-              d, id, text, blockCol = block, k = int("k", 3),
-              threshold = dbl("threshold", 0.1)),
-            collapsible = col(text).isNotNull)
-        // ---- text-analysis family (r12 verdict #7): quality / langid /
-        // fingerprint / PII / repetition from the REPL, each a thin
-        // dispatch onto graft.pipeline.TextAnalysis
-        case ("TEXT", Some("QUALITY")) =>
-          graft.pipeline.TextAnalysis.annotate(df, str("text", "text"))
-            .select(col(id), col("n_tokens"), col("n_tokens_bpe"),
-              col("stopword_ratio"), col("avg_word_len"), col("quality"))
-        case ("TEXT", Some("LANGID")) =>
-          // method = stopword (default, the cheap heuristic) | ngram
-          // (the Cavnar-Trenkle trigram classifier)
-          str("method", "stopword") match {
-            case "stopword" =>
-              df.select(col(id), graft.pipeline.TextAnalysis.langId(
-                col(str("text", "text")), dbl("threshold", 0.05))
-                .as("lang_pred"))
-            case "ngram" =>
-              // `threshold` binds only to the stopword heuristic —
-              // accepting it here would silently ignore an explicit
-              // setting (advice r15, the r12 silent-option class)
-              require(!opts.contains("threshold"),
-                "option 'threshold' of PIPELINE TEXT LANGID applies " +
-                  "only to method = stopword — the ngram classifier " +
-                  "has no threshold")
-              val lid = graft.pipeline.TextAnalysis.langIdNgram(
-                col(str("text", "text")))
-              df.select(col(id), lid.getField("lang").as("lang_pred"),
-                lid.getField("hits").as("hits"))
-            case m => throw new IllegalArgumentException(
-              s"option 'method' of PIPELINE TEXT LANGID must be " +
-                s"""stopword or ngram, got "$m"""")
-          }
-        case ("TEXT", Some("LANGIDTRAIN")) =>
-          // Cavnar-Trenkle profile training: top-k trigrams per label
-          // by corpus frequency — the data-driven dial for
-          // LANGID method=ngram (default k = the paper's 300)
-          graft.pipeline.TextAnalysis.langIdTrainProfiles(df,
-            str("label", "lang"), str("text", "text"),
-            k = int("k", 300))
-        case ("TEXT", Some("FINGERPRINT")) =>
-          df.select(col(id), graft.pipeline.TextAnalysis.fingerprint(
-            col(str("text", "text"))).as("fp"))
-        case ("TEXT", Some("PII")) =>
-          df.select(col(id), graft.pipeline.TextAnalysis.redactPii(
-            col(str("text", "text"))).as("redacted"))
-        case ("TEXT", Some("REPETITION")) =>
-          df.select(col(id), graft.pipeline.TextAnalysis.repetitionRatio(
-            col(str("text", "text"))).as("rep_ratio"))
-        case ("TEXT", Some("BOILERPLATE")) =>
-          // cross-document line dedup (CCNet paragraph-dedup shape)
-          graft.pipeline.Curation.removeBoilerplate(df, id,
-            str("text", "text"), minDocs = lng("min_docs", 6L),
-            minKeptLines = lng("min_kept", 1L))
-        case ("TEXT", Some("LM")) =>
-          // corpus-trained bigram LM scoring (perplexity quality signal)
-          graft.pipeline.TextAnalysis.bigramLm(df, id, str("text", "text"))
-        case ("TEXT", Some("GOPHER")) =>
-          // the Gopher quality-rule suite (Rae 2021): integer signals
-          // + the pass bit; `required` overrides the English
-          // required-word list (comma-separated)
-          val req = str("required", "").split(',').map(_.trim)
-            .filter(_.nonEmpty).toSeq
-          graft.pipeline.TextAnalysis.gopherSignals(df, id,
-            str("text", "text"),
-            if (req.nonEmpty) req
-            else graft.pipeline.TextAnalysis.GopherRequiredWords)
-        case ("TEXT", Some("BPE")) =>
-          // BPE train-on-the-fly + tokenize (interactive shape; a
-          // production pipeline persists the merge list via the API)
-          val t = str("text", "text")
-          graft.pipeline.Bpe.tokenize(df, id, t,
-            graft.pipeline.Bpe.train(df, t, int("merges", 20)))
-        case ("TEXT", Some("FIXENCODING")) =>
-          // mojibake score + one-round Latin-1 mis-decode repair
-          val t = col(str("text", "text"))
-          df.select(col(id),
-            graft.pipeline.Encoding.mojibakeScore(t).as("n_moji"),
-            graft.pipeline.Encoding.repairMojibake(t).as("fixed"))
-        case ("TEXT", Some("STRIPHTML")) =>
-          // HTML → text extraction (script/style/comment contents
-          // dropped, tags stripped, named entities decoded)
-          df.select(col(id), graft.pipeline.TextAnalysis.stripHtml(
-            col(str("text", "text"))).as("clean"))
-        case ("TEXT", Some("C4")) =>
-          // the C4 cleaning rules (Raffel 2020): line filters + page
-          // signals + the pass bit; `badwords` (comma-separated)
-          // enables the paper's blocklist rule
-          graft.pipeline.TextAnalysis.c4Clean(df, id,
-            str("text", "text"),
-            str("badwords", "").split(',').map(_.trim)
-              .filter(_.nonEmpty).toSeq)
-        case ("TEXT", Some("NORMALIZE")) =>
-          // Unicode normalization (UAX #15) — NFC/NFD/NFKC/NFKD
-          df.select(col(id),
-            graft.pipeline.TextAnalysis.normalizeUnicode(
-              col(str("text", "text")), str("form", "NFC"))
-              .as("normalized"))
-        case ("TEXT", Some("GOPHERREP")) =>
-          // the Gopher REPETITION-filter suite (Rae 2021): integer
-          // line/paragraph duplicate signals + top-n-gram signals +
-          // the pass bit with the paper's thresholds
-          graft.pipeline.TextAnalysis.gopherRepetition(df, id,
-            str("text", "text"))
-        case ("CHUNK", None) =>
-          // fixed-budget token windows with overlap (doc-grain in,
-          // CHUNK-grain out — ids repeat, so not INTO-able)
-          graft.pipeline.Curation.chunkDocuments(df, id,
-            str("text", "text"), budget = int("budget", 512),
-            overlap = int("overlap", 0))
-        case ("URL", None) =>
-          // canonicalize a URL column (doc-grain; dedup via a chained
-          // PIPELINE DEDUP EXACT on the canonical key); `block` (a
-          // comma-separated domain list) additionally drops rows whose
-          // host is a blocked domain or any subdomain of one
-          val canon = df.select(col(id),
-            graft.pipeline.Curation.canonicalizeUrl(
-              col(str("url", "url"))).as("url"))
-          val blocked = str("block", "").split(',').map(_.trim)
-            .filter(_.nonEmpty).toSeq
-          if (blocked.isEmpty) canon
-          else graft.pipeline.Curation.filterBlockedHosts(
-            canon, id, "url", blocked)
-        case ("ROBOTS", None) =>
-          // RFC 9309 robots.txt evaluation: emit the allowed bit per
-          // row from a rules-body column + a path column
-          df.select(col(id),
-            graft.pipeline.TextAnalysis.robotsAllowed(
-              col(str("rules", "rules")), col(str("path", "path")),
-              str("agent", "graftbot")).cast("int").as("allowed"))
-        case ("MIX", None) =>
-          // temperature-scaled source mixing (GPT-3/PaLM data mixing)
-          graft.pipeline.Curation.temperatureMix(df, id,
-            str("by", "source"), budgetDocs = lng("budget", 1000L),
-            tau = dbl("tau", 0.5))
-        case ("DSIR", None) =>
-          // DSIR importance weighting (Xie 2023): AGAINST names the
-          // TARGET label; the scored label itself is the source
-          // distribution (the paper's raw-corpus setup). k > 0
-          // additionally Gumbel-top-k resamples (seeded, deterministic)
-          val tgt = store.nodes(against.getOrElse(
-            throw new IllegalArgumentException(
-              "PIPELINE DSIR needs AGAINST <target-label>")))
-          val w = graft.pipeline.Dsir.weights(df, tgt, df, id,
-            str("text", "text"), buckets = int("buckets", 0))
-          val k = int("k", 0)
-          if (k > 0) graft.pipeline.Dsir.resample(w, id, k,
-            lng("seed", 42L))
-          else w
-        case ("SEMDEDUP", None) =>
-          // SemDeDup: k-means clusters + min-id cosine pruning; emits
-          // the KEPT vectors (doc grain). The skew probe's warning
-          // lands in `diagnostics` so an interactive user sees it
-          graft.pipeline.Dedup.semDedup(df,
-            nClusters = int("clusters", 16), iters = int("iters", 2),
-            threshold = dbl("threshold", 0.9), idCol = id,
-            vecCol = str("vec", "embedding"),
-            maxPairsPerCluster = lng("max_pairs", 100000000L),
-            onWarn = diag += _)
-        case ("HTTP", None) =>
-          // HTTP response split over a binary payload column (the
-          // WARC → HTTP → STRIPHTML → DEDUP intake chain); doc-grain —
-          // one output row per input row — so it chains via INTO
-          graft.pipeline.Ingest.httpSplit(df, str("payload", "payload"))
-        case ("PROFILE", None) =>
-          // one-row corpus health dashboard (integer aggregates)
-          graft.pipeline.Corpus.profile(df, id, str("text", "text"),
-            minQuality = dbl("min_quality", 0.5))
-        // ---- media family: decode over a binary `media` column (the
-        // attachBinary/synthesize* shape); a label carrying only text
-        // wraps its `payload` column as an opaque binary payload first
-        case ("MEDIA", Some("IMAGE")) =>
-          graft.pipeline.Multimodal.decode(mediaFrame(df, id,
-            opts.get("payload").map(_.toString)))
-        case ("MEDIA", Some("AUDIO")) =>
-          graft.pipeline.Multimodal.decodeAudio(mediaFrame(df, id,
-            opts.get("payload").map(_.toString)))
-        case ("MEDIA", Some("EXR")) =>
-          // HDR scanline decode via the engine's own OpenEXR codec
-          graft.pipeline.Multimodal.decodeExr(mediaFrame(df, id,
-            opts.get("payload").map(_.toString)))
-        case ("MEDIA", Some("FRAMES")) =>
-          // video frame sampling (AVI DIB / AVI Motion-JPEG / MP4 raw);
-          // frame-grain output (one row per sampled frame), so not
-          // INTO-able
-          graft.pipeline.Multimodal.sampleVideoFrames(mediaFrame(df, id,
-            opts.get("payload").map(_.toString)), k = int("k", 3))
-        case _ => unknownStmt()
-      }
+          s"$name — accepted: ${accepted.toSeq.sorted.mkString(", ")}")
       // INTO: attach the result as a node label so curation stages
       // CHAIN from the shell (r12 verdict #2). Document-grain outputs
-      // only — pair (DEDUP MINHASH/SIMHASH/COSINE*), span (SPANS), and
-      // rank (ANN) grains repeat or lack the id column and cannot be a
-      // node table; they refuse loudly instead of attaching garbage.
-      into.foreach { lbl =>
-        val docGrain = (family, variant) match {
-          case ("DEDUP", Some("EXACT") | Some("LINES") | None) |
-               ("SPANS", Some("REMOVE") | Some("SENTENCES")) |
-               ("SHARDS", None) | ("DECONTAMINATE", None) | ("PACK", None) |
-               ("SAMPLE", None) | ("CLUSTERS", None) | ("TEXT", _) |
-               ("SEMDEDUP", None) | ("DSIR", None) | ("URL", None) |
-               ("MIX", None) | ("HTTP", None) | ("ROBOTS", None) |
-               ("MEDIA", Some("IMAGE") | Some("AUDIO") |
-                 Some("EXR")) => true
-          case _ => false // pair / span / rank / frame grain
-        }
-        require(docGrain,
-          s"PIPELINE $family ${variant.getOrElse("")} INTO: output is " +
-            "not document-grain (no unique node id); INTO supports " +
-            "DEDUP EXACT|LINES, SPANS REMOVE, SHARDS, SEMDEDUP, " +
-            "DECONTAMINATE, PACK, SAMPLE, CLUSTERS, TEXT *, HTTP, URL, " +
-            "MIX, DSIR, MEDIA IMAGE|AUDIO|EXR")
+      // only — pair, span, rank, frame and profile grains repeat or
+      // lack the id column and cannot be a node table. Checked before
+      // the operator runs: BPE, IVF and PQ train eagerly.
+      st.into.foreach { lbl =>
+        require(op.docGrain, s"PIPELINE $name INTO: output is not " +
+          "document-grain (no unique node id); INTO supports " +
+          Shell.families(_.docGrain))
+        require(!store.catalog.hasSchema(lbl), s"schema exists: $lbl")
+      }
+      val args = new Shell.PipelineArgs(name, accepted, st, store,
+        diag += _)
+      val result = op.build(args)
+      st.into.foreach { lbl =>
         store.attachNodes(lbl, result,
-          if (result.columns.contains(id)) id else "id")
+          if (result.columns.contains(args.id)) args.id else "id")
       }
       Some(result)
 
@@ -733,50 +656,17 @@ final class Shell(store: GraphStore,
       }.toDF("edge_type", "src_label", "dst_label", "n"))
   }
 
-  /** PIPELINE MEDIA input shape: an EXPLICIT `payload` option always
-    * wraps that column as an opaque binary payload (even on a label
-    * that also carries `media` — the user named the column, so it must
-    * win, never be silently ignored); without one, a label already
-    * carrying the binary `media` + `meta` columns (the attachBinary /
-    * synthesize* layout) passes through, and a text-only label wraps
-    * its `text` column, exactly like the Scala-API caller would. */
-  private def mediaFrame(df: DataFrame, idCol: String,
-                         payloadCol: Option[String]): DataFrame =
-    payloadCol match {
-      case Some(p) => graft.pipeline.Multimodal.attachBinary(df, idCol, p)
-      case None if df.columns.contains("media") &&
-          df.columns.contains("meta") =>
-        df.select(col(idCol).cast("long").as("id"), col("media"),
-          col("meta"))
-      case None => graft.pipeline.Multimodal.attachBinary(df, idCol, "text")
-    }
-
-  /** MATCH AST → engine query (direction reversal normalized here, like
-    * the reference shell — apps/tundra_shell.cpp:568-579). */
+  /** MATCH AST → engine query (direction reversal normalized by
+    * [[Bindings]], like the reference shell — apps/tundra_shell.cpp:568-579). */
   private def toQuery(m: MatchStmt): GraphQuery = {
-    val labels = scala.collection.mutable.Map[String, String]()
-    m.patterns.flatMap(_.nodes).foreach { n =>
-      n.label.foreach { l =>
-        require(labels.getOrElse(n.alias, l) == l,
-          s"alias ${n.alias} bound to two labels")
-        labels(n.alias) = l
-      }
-    }
-    def labelOf(a: String): String = labels.getOrElse(a, a)
+    val b = new Bindings(m.patterns)
     val first = m.patterns.head.nodes.head
-    var clauses = List.empty[Clause]
-    m.patterns.foreach { p =>
-      p.edges.zipWithIndex.foreach { case (e, i) =>
-        val (srcPat, dstPat) =
-          if (e.reversed) (p.nodes(i + 1), p.nodes(i))
-          else (p.nodes(i), p.nodes(i + 1))
-        clauses :+= TraverseClause(srcPat.alias, e.edgeType, e.alias,
-          dstPat.alias, labelOf(dstPat.alias), e.kind,
-          Some(labelOf(srcPat.alias)), e.range, e.undirected)
-      }
-    }
-    m.where.foreach(w => clauses :+= WhereClause(w))
-    GraphQuery(first.alias, labelOf(first.alias), clauses, m.select,
+    val clauses = b.hops.map { h =>
+      TraverseClause(h.src.alias, h.edge.edgeType, h.edge.alias, h.dst.alias,
+        b.labelOf(h.dst.alias), h.edge.kind, Some(b.labelOf(h.src.alias)),
+        h.edge.range, h.edge.undirected)
+    } ++ m.where.map(WhereClause(_))
+    GraphQuery(first.alias, b.labelOf(first.alias), clauses, m.select,
       m.asOf, m.orderBy, m.limit, m.distinct, m.having, m.offset)
   }
 
@@ -818,50 +708,18 @@ final class Shell(store: GraphStore,
   private def stripAlias(key: String, alias: String): String =
     if (key.startsWith(alias + ".")) key.drop(alias.length + 1) else key
 
-  /** SET value → column; nested MAP paths rebuild the map entry. */
-  private def setColumn(label: String, field: String, v: Any): Column = {
+  /** SET `field = v` → (column, new value); a nested MAP path rewrites
+    * the base map column's entry. */
+  private def setEntry(field: String, v: Any): (String, Column) = {
     val parts = field.split('.')
-    if (parts.length == 1) lit(v)
-    else GraphStore.mapEntryUpdate(col(parts(0)), parts(1), v)
+    parts(0) -> (if (parts.length == 1) lit(v)
+      else GraphStore.mapEntryUpdate(col(parts(0)), parts(1), v))
   }
 
-  /** Compile a single-alias WHERE to a Column over the label's raw
-    * columns (for delete/update rewrites). */
-  private def compileSingleAlias(e: WhereExpr, alias: String): Column =
-    e match {
-      case And(l, r) =>
-        compileSingleAlias(l, alias) && compileSingleAlias(r, alias)
-      case Or(l, r) =>
-        compileSingleAlias(l, alias) || compileSingleAlias(r, alias)
-      case Comparison(f, op, rhs) =>
-        require(f.alias == alias, s"alias ${f.alias} not in scope")
-        val base = f.mapPath.foldLeft(col(f.field))((c, k) => element_at(c, k))
-        val lhs = rhs match {
-          case _: Int | _: Long if f.mapPath.nonEmpty => base.cast("long")
-          case _: Double | _: Float if f.mapPath.nonEmpty =>
-            base.cast("double")
-          case _ => base
-        }
-        op match {
-          case CmpOp.Eq if rhs == null    => lhs.isNull
-          case CmpOp.NotEq if rhs == null => lhs.isNotNull
-          case CmpOp.Eq                   => lhs === lit(rhs)
-          case CmpOp.NotEq                => lhs =!= lit(rhs)
-          case CmpOp.Gt                   => lhs > lit(rhs)
-          case CmpOp.Lt                   => lhs < lit(rhs)
-          case CmpOp.Gte                  => lhs >= lit(rhs)
-          case CmpOp.Lte                  => lhs <= lit(rhs)
-          case CmpOp.Contains             => lhs.contains(rhs)
-          case CmpOp.StartsWith           => lhs.startsWith(rhs.toString)
-          case CmpOp.EndsWith             => lhs.endsWith(rhs.toString)
-        }
-      case other =>
-        // scalar-expression predicates (ExprComparison) are a MATCH-path
-        // feature; DELETE/UPDATE rewrites keep the reference's
-        // field-vs-literal WHERE surface
-        throw new IllegalArgumentException(
-          s"unsupported WHERE form for a mutation rewrite: $other")
-    }
+  /** A single-node mutation's WHERE, compiled by the MATCH compiler. */
+  private def mutationWhere(where: Option[WhereExpr], alias: String,
+                            label: String): Column =
+    where.fold(lit(true))(planner.compileWhere(_, alias, label))
 
   private def structField(name: String, t: String): StructField = t match {
     // legacy fixed-string encodings (type_descriptor.hpp:64-77 maps
@@ -883,5 +741,31 @@ final class Shell(store: GraphStore,
     case "MAP"     => MapType(StringType, StringType)
     case other     => throw new IllegalArgumentException(
       s"unknown type $other (grammar TundraQL.g4:11)")
+  }
+}
+
+/** A hop of a path pattern in edge direction: `(a)<-[e]-(b)` is b→a. */
+private final case class Hop(src: NodePat, edge: EdgePat, dst: NodePat)
+
+/** The aliases of a statement's path patterns, resolved once for every
+  * statement that walks them (MATCH, UPDATE MATCH, path DELETE). */
+private final class Bindings(patterns: List[PathPattern]) {
+  private val nodes = patterns.flatMap(_.nodes)
+  private val labels: Map[String, String] =
+    nodes.foldLeft(Map.empty[String, String]) { (m, n) =>
+      n.label.fold(m) { l =>
+        require(m.getOrElse(n.alias, l) == l,
+          s"alias ${n.alias} bound to two labels")
+        m.updated(n.alias, l)
+      }
+    }
+  /** An alias's label; an unlabeled alias names its own label. */
+  def labelOf(alias: String): String = labels.getOrElse(alias, alias)
+  def isNode(alias: String): Boolean = nodes.exists(_.alias == alias)
+  val hops: List[Hop] = patterns.flatMap { p =>
+    p.edges.zipWithIndex.map { case (e, i) =>
+      if (e.reversed) Hop(p.nodes(i + 1), e, p.nodes(i))
+      else Hop(p.nodes(i), e, p.nodes(i + 1))
+    }
   }
 }

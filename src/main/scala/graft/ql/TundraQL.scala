@@ -65,19 +65,15 @@ object TundraQL {
     * beyond-reference QL surface exposing the training-data pipeline
     * operators (SURVEY §2.10 north star) from the shell, so the whole
     * curation family is reachable like every other operator instead of
-    * Scala-API-only. Families: DEDUP (EXACT|MINHASH|SIMHASH|COSINE|
-    * COSINE_LSH), SPANS ([REMOVE]), SHARDS, ANN ([IVF]), DECONTAMINATE
-    * (AGAINST names the benchmark label), PACK, SAMPLE, CLUSTERS,
-    * TEXT (QUALITY|LANGID|FINGERPRINT|PII|REPETITION), MEDIA
-    * (IMAGE|AUDIO|FRAMES). Each family validates its option keys at
-    * execution — an unknown or misspelled key is an error naming the
-    * accepted set, never a silent default (the executor in
-    * [[graft.ql.Shell]] is the authoritative key list). QUERY IDS is
-    * the bounded literal query set for the ANN family. `INTO` attaches
-    * the result as a node label so curation stages CHAIN from the
-    * shell (spans→remove→dedup→pack); document-grain families only —
-    * pair/span/rank-grain outputs have no unique node id and refuse
-    * loudly. */
+    * Scala-API-only. The statements, their option keys and their output
+    * grains are the table [[graft.ql.Shell.pipelines]]; an unknown or
+    * misspelled key is an error naming the accepted set, never a silent
+    * default. QUERY IDS is the bounded literal query set for the ANN
+    * and PQ TOPK probes; AGAINST names a second label (DECONTAMINATE's
+    * benchmark, DSIR's target). `INTO` attaches the result as a node
+    * label so curation stages CHAIN from the shell
+    * (spans→remove→dedup→pack); document-grain statements only — the
+    * others have no unique node id and are refused before they run. */
   final case class PipelineStmt(family: String, variant: Option[String],
       label: String, options: Map[String, Any],
       queryIds: Seq[Long] = Nil,

@@ -97,9 +97,11 @@ final class GraphStore(
   /** Register an existing DataFrame as a node label (bulk/cluster path —
     * e.g. the TPC-H graph view). `idCol` becomes the node id. */
   def attachNodes(label: String, df: DataFrame, idCol: String): Unit = {
-    val st = catalog.createSchema(label,
-      df.schema.fields.filter(_.name != idCol).toIndexedSeq)
-    val t = new NodeTable(label, st, versioningEnabled)
+    val fields = df.schema.fields.filter(_.name != idCol).toIndexedSeq
+    // the projection is analyzed before the catalog learns the label, so
+    // a frame it cannot project (no `idCol`) leaves no schema behind
+    val t = new NodeTable(label, Catalog.nodeSchema(fields),
+      versioningEnabled)
     t.base = Some(df.select(
       t.rowSchema.fieldNames.toIndexedSeq.map {
         case "id" => df.col(s"`${idCol.replace("`", "``")}`")
@@ -108,6 +110,7 @@ final class GraphStore(
           lit(NodeTable.V0(c)).as(c)
         case c => col(c)
       }: _*))
+    catalog.createSchema(label, fields)
     t.counterInitialized = false
     nodeTables(label) = t
   }

@@ -191,7 +191,7 @@ class ArrayMapUpdateSpec extends SparkSpec {
     assert(s.connect("User", a, "f", "User", b, unique = true) >= 0)
     // commit flushes the buffer into base — the duplicate now lives only
     // in the persisted plane
-    val tmp = java.nio.file.Files.createTempDirectory("graft-uniq").toString
+    val tmp = tmpDir("graft-uniq")
     s.commit(tmp)
     assert(s.connect("User", a, "f", "User", b, unique = true) === -1L)
     assert(s.connect("User", a, "f", "User", c, unique = true) >= 0)

@@ -209,7 +209,7 @@ class ForkedCommitSpec extends SparkSpec {
     * refs on disk, no stray tmp files). */
   private def race(mode: String, childIters: Int,
                    bootstrap: Option[SparkSession => GraphStore]): Unit = {
-    val root = Files.createTempDirectory(s"graft-forked-$mode").toString
+    val root = tmpDir(s"graft-forked-$mode")
     // read/compact children need an existing root (they never create
     // one); the commit child bootstraps itself on first iteration.
     bootstrap.foreach { b =>
@@ -373,7 +373,7 @@ class ForkedCommitSpec extends SparkSpec {
     // bucket to the file-backed double — one linearizable store shared
     // by both JVMs — and runs the same commit-vs-commit-vs-GC overlap
     // as the filesystem modes.
-    val storeDir = Files.createTempDirectory("graft-memstore")
+    val storeDir = Paths.get(tmpDir("graft-memstore"))
     graft.store.MemObjectStore.clear("forkedrace")
     val bkt = graft.store.MemObjectStore.bindFileBucket(
       "forkedrace", storeDir.resolve("forkedrace"))

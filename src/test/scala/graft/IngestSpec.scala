@@ -19,25 +19,7 @@ class IngestSpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("text", StringType)))
 
-  /** Temp dirs made by the running test; removed when it ends. */
-  private val made = scala.collection.mutable.ArrayBuffer[File]()
-
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft_ingest_spec").toFile
-    made += d
-    d.toString
-  }
-
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).getOrElse(Array()).foreach(rm)
-        f.delete(); ()
-      }
-      made.foreach(rm)
-      made.clear()
-    }
+  private def tmpDir(): String = tmpDir("graft_ingest_spec")
 
   test("zstd round-trip: shards written by executors, re-ingested " +
       "exactly, multi-line text survives JSON escaping") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** [[graft.core.Materialize]]: the one-knob fault-tolerance switch for
@@ -19,7 +17,7 @@ class MaterializeSpec extends SparkSpec {
     val baseline = rowBag(graft.planner.VarLength.pairs(edges, 1, 3))
 
     val sc = spark.sparkContext
-    val dir = Files.createTempDirectory("graft-reliable-ckpt").toString
+    val dir = tmpDir("graft-reliable-ckpt")
     sc.setCheckpointDir(dir)
     try {
       val reliable = rowBag(graft.planner.VarLength.pairs(edges, 1, 3))

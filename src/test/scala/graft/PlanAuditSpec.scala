@@ -239,7 +239,7 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val vecs = TpchGraph.store(spark, "/root/testdata/sf0.001")
       .nodes("embeddings").withColumnRenamed("id", "vec_id")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_audit").toString
+    val dir = tmpDir("ivf_audit")
     val cent = graft.pipeline.Similarity.ivfTrain(vecs, k = 4, iters = 1)
     graft.pipeline.Similarity.saveIndex(dir, cent,
       graft.pipeline.Similarity.ivfAssign(vecs, cent))
@@ -268,8 +268,7 @@ class PlanAuditSpec extends SparkSpec {
     // parquet row groups outside the interval are min/max-skipped —
     // version history only ever grows, so a full-history scan per as-of
     // read would be the dominant cost at scale.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_asof_push").toString
+    val dir = tmpDir("graft_asof_push")
     val clock = new graft.core.MockClock(0L)
     val s = new graft.store.GraphStore(spark,
       versioningEnabled = true, clock = clock)

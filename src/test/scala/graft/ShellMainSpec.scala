@@ -54,7 +54,7 @@ class ShellMainSpec extends SparkSpec {
   }
 
   test(".run executes a script file and reports the counts") {
-    val f = java.nio.file.Files.createTempFile("graft_repl", ".tql")
+    val f = tmpFile("graft_repl", ".tql")
     java.nio.file.Files.writeString(f,
       """CREATE SCHEMA User (name: STRING);
         |CREATE NODE User (name = "Alice");

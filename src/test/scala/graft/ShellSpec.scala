@@ -337,7 +337,7 @@ class ShellSpec extends SparkSpec {
   test("script file execution: -- comments, per-statement stats, " +
       "failures skipped (SCRIPT_EXECUTION_FEATURE.md)") {
     val sh = shell()
-    val f = java.nio.file.Files.createTempFile("graft-script", ".sql")
+    val f = tmpFile("graft-script", ".sql")
     java.nio.file.Files.writeString(f,
       """-- a reference-style script
         |CREATE SCHEMA User (name: STRING, age: INT64); -- trailing comment
@@ -986,5 +986,152 @@ class ShellSpec extends SparkSpec {
     assert(sh.execute(
       "PIPELINE SPANS SENTENCES ON sents WITH (min_kept = 5);").get
       .count() === 0)
+  }
+
+  // ---- single-node UPDATE MATCH / DELETE WHERE: compiled by the
+  // Planner's MATCH compiler (F3 typing, field-vs-field, scalar
+  // expressions) over the label's raw columns
+
+  private val people = """
+    CREATE SCHEMA Person (name: STRING, age: INT64, cap: INT64);
+    CREATE NODE Person (name = "Alice", age = 30, cap = 40);
+    CREATE NODE Person (name = "Bob", age = 50, cap = 40);
+    CREATE NODE Person (name = "Carol", age = 20, cap = 10);
+    CREATE NODE Person (name = "Di", age = 5, cap = 6);
+  """
+  private def namesAges(sh: Shell): Map[Seq[Any], Int] =
+    rowBag(sh.execute("MATCH (c:Person) SELECT c.name, c.age;").get)
+
+  for (versioned <- Seq(false, true))
+    test("a type-mismatched single-node UPDATE / DELETE WHERE fails at " +
+        s"the statement and the label still reads (versioned = $versioned)") {
+      val sh = new Shell(new GraphStore(spark, versioningEnabled = versioned))
+      sh.execute(people)
+      val before = namesAges(sh)
+      val up = intercept[IllegalArgumentException] {
+        sh.execute("UPDATE MATCH (c:Person) SET c.age = 1 WHERE c.name = 5;")
+      }
+      assert(up.getMessage.contains("numeric literal vs StringType"),
+        up.getMessage)
+      val del = intercept[IllegalArgumentException] {
+        sh.execute("DELETE (c:Person) WHERE c.name = 5;")
+      }
+      assert(del.getMessage.contains("numeric literal vs StringType"),
+        del.getMessage)
+      val scope = intercept[IllegalArgumentException] {
+        sh.execute("DELETE (c:Person) WHERE d.age > 1;")
+      }
+      assert(scope.getMessage.contains("alias d not in scope"))
+      assert(namesAges(sh) === before && before.size === 4)
+    }
+
+  test("single-node DELETE / UPDATE WHERE take scalar expressions and " +
+      "field-vs-field comparisons, like MATCH") {
+    val sh = shell()
+    sh.execute(people)
+    sh.execute("DELETE (c:Person) WHERE length(c.name) > 4;")
+    assert(namesAges(sh) === Map(Seq("Bob", 50L) -> 1, Seq("Di", 5L) -> 1))
+    sh.execute("UPDATE MATCH (c:Person) SET c.name = \"over\" " +
+      "WHERE c.age > c.cap;")
+    assert(namesAges(sh) === Map(Seq("over", 50L) -> 1, Seq("Di", 5L) -> 1))
+    sh.execute("DELETE (c:Person) WHERE c.cap > c.age + 0;")
+    assert(namesAges(sh) === Map(Seq("over", 50L) -> 1))
+  }
+
+  test("the graph_write benchmark's UPDATE and DELETE WHERE forms compile " +
+      "to the Column the shell built before") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val store = new GraphStore(spark)
+    import spark.implicits._
+    store.attachNodes("customer", Seq((1L, 7, 120.5, "S"))
+      .toDF("id", "nationkey", "acctbal", "mktsegment"), "id")
+    val planner = new graft.planner.Planner(store)
+    def where(stmt: String) = TundraQL.parseScript(stmt).head match {
+      case TundraQL.UpdateMatchStmt(_, _, Some(w)) => w
+      case TundraQL.DeletePatternStmt(_, Some(w))  => w
+      case other => fail(s"not a mutation with a WHERE: $other")
+    }
+    // semantic equality of the two conditions, resolved on the label
+    def same(a: org.apache.spark.sql.Column,
+             b: org.apache.spark.sql.Column): Boolean = {
+      def cond(c: org.apache.spark.sql.Column) = store.nodes("customer")
+        .filter(c).queryExecution.analyzed.collectFirst {
+          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+            f.condition
+        }.get
+      cond(a).semanticEquals(cond(b))
+    }
+    val update = planner.compileWhere(where("UPDATE MATCH (c:customer) " +
+      "SET c.mktsegment = \"SEG3\" WHERE c.nationkey = 7 AND " +
+      "c.acctbal > -12;"), "c", "customer")
+    assert(same(update, col("nationkey") === lit(7L) &&
+      col("acctbal") > lit(-12L)), update.toString)
+    val delete = planner.compileWhere(
+      where("DELETE (c:customer) WHERE c.id = 42;"), "c", "customer")
+    assert(same(delete, col("id") === lit(42L)), delete.toString)
+  }
+
+  test("PIPELINE INTO of a non-document-grain statement is refused " +
+      "before the operator runs; the catalog is unchanged") {
+    import spark.implicits._
+    val store = new GraphStore(spark)
+    val sh = new Shell(store)
+    store.attachNodes("Labeled", Seq((0L, "en", "the cat and the dog"),
+      (1L, "fr", "le chat et le chien")).toDF("id", "lang", "text"), "id")
+    store.attachNodes("vecs", Seq((0L, Array(1.0f, 0.0f)),
+      (1L, Array(0.0f, 1.0f))).toDF("id", "embedding"), "id")
+    val labels = store.catalog.labels
+    val sc = spark.sparkContext
+    def jobsOf(stmt: String): (String, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(); ()
+      }
+      sc.addSparkListener(listener)
+      try {
+        val e = intercept[IllegalArgumentException](sh.execute(stmt))
+        org.apache.spark.graftspec.ListenerBus.drain(sc)
+        (e.getMessage, jobs.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    // LANGIDTRAIN emits one row per (label, rank): no node id
+    val (trainMsg, _) = jobsOf("PIPELINE TEXT LANGIDTRAIN ON Labeled " +
+      "WITH (label = \"lang\", k = 5) INTO prof;")
+    assert(trainMsg.contains("not document-grain"), trainMsg)
+    // IVF trains eagerly; a refused INTO must not pay for it
+    val (ivfMsg, ivfJobs) = jobsOf("PIPELINE ANN IVF ON vecs QUERY IDS (0) " +
+      "WITH (clusters = 2, iters = 1) INTO ranked;")
+    assert(ivfMsg.contains("not document-grain") && ivfJobs === 0,
+      s"$ivfJobs job(s): $ivfMsg")
+    assert(store.catalog.labels === labels)
+    // the label is still free: a document-grain INTO takes it
+    sh.execute("PIPELINE TEXT LANGID ON Labeled INTO prof;")
+    assert(store.nodes("prof").count() === 2)
+  }
+
+  test("the PIPELINE table names every statement in the unknown-statement " +
+      "message and every document-grain one in the INTO refusal") {
+    val sh = shell()
+    sh.execute("CREATE SCHEMA Doc (text: STRING);")
+    val unknown = intercept[IllegalArgumentException] {
+      sh.execute("PIPELINE FROBNICATE ON Doc;")
+    }.getMessage
+    val into = intercept[IllegalArgumentException] {
+      sh.execute("PIPELINE SPANS ON Doc INTO spans;")
+    }.getMessage
+    // "DEDUP ([EXACT|LINES])" lists DEDUP, DEDUP EXACT and DEDUP LINES
+    def named(msg: String, family: String, variant: Option[String]) =
+      msg.split("families: |INTO supports ").last.split(", ").exists { g =>
+        val parts = g.split("[\\[\\]()|]").map(_.trim).filter(_.nonEmpty)
+        parts.head == family && variant.fold(
+          parts.length == 1 || g.contains("(["))(parts.tail.contains)
+      }
+    Shell.pipelines.foreach { case ((family, variant), op) =>
+      assert(named(unknown, family, variant), s"$family $variant: $unknown")
+      assert(named(into, family, variant) === op.docGrain,
+        s"$family $variant: $into")
+    }
   }
 }

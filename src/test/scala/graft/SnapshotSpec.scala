@@ -28,7 +28,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("commit + restore round-trips nodes, edges, schemas, counters") {
-    val dir = Files.createTempDirectory("graft-snap").toString
+    val dir = tmpDir("graft-snap")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType, "age" -> LongType)
     s.createSchema("Company", "name" -> StringType)
@@ -54,7 +54,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("consecutive snapshots: restore, mutate, commit to the SAME path " +
       "(database_test.cpp:299,352)") {
-    val dir = Files.createTempDirectory("graft-snap-cyc").toString
+    val dir = tmpDir("graft-snap-cyc")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType, "age" -> LongType)
     s.createNode("User", Map("name" -> "alice", "age" -> 30L))
@@ -92,7 +92,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("incremental commit: unchanged tables are carried forward by " +
       "reference, not rewritten") {
-    val dir = Files.createTempDirectory("graft-snap-incr").toString
+    val dir = tmpDir("graft-snap-incr")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createSchema("Company", "name" -> StringType)
@@ -126,8 +126,8 @@ class SnapshotSpec extends SparkSpec {
 
   test("commit to a second path rewrites once, then goes incremental " +
       "there too") {
-    val dirA = Files.createTempDirectory("graft-snap-rootA").toString
-    val dirB = Files.createTempDirectory("graft-snap-rootB").toString
+    val dirA = tmpDir("graft-snap-rootA")
+    val dirB = tmpDir("graft-snap-rootB")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "alice"))
@@ -140,7 +140,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("schema-only tables round-trip commit+restore with no data dir") {
-    val dir = Files.createTempDirectory("graft-snap-empty").toString
+    val dir = tmpDir("graft-snap-empty")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createSchema("Ghost", "tag" -> StringType) // never populated
@@ -160,7 +160,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("reuse degrades loudly, before the pointer flip, when referenced " +
       "data was deleted under a closed store") {
-    val dir = Files.createTempDirectory("graft-snap-gone").toString
+    val dir = tmpDir("graft-snap-gone")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "alice"))
@@ -182,7 +182,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("snapshot time travel: an explicit retained version restores; a " +
       "GC'd one fails loudly") {
-    val dir = Files.createTempDirectory("graft-snap-tt").toString
+    val dir = tmpDir("graft-snap-tt")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "alice"))
@@ -198,7 +198,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("version reservation probes past a concurrent writer's dir; GC " +
       "sweeps reserved-but-never-committed orphans") {
-    val dir = Files.createTempDirectory("graft-snap-race").toString
+    val dir = tmpDir("graft-snap-race")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "alice"))
@@ -222,7 +222,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("an orphan dir does not occupy a keep-window slot") {
-    val dir = Files.createTempDirectory("graft-snap-slot").toString
+    val dir = tmpDir("graft-snap-slot")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "alice"))
@@ -241,7 +241,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("gcSnapshots keeps old versions the live manifest references") {
-    val dir = Files.createTempDirectory("graft-snap-incr-gc").toString
+    val dir = tmpDir("graft-snap-incr-gc")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createSchema("Company", "name" -> StringType)
@@ -271,7 +271,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("gcSnapshots refuses to drop a version a live store is pinned to") {
-    val dir = Files.createTempDirectory("graft-snap-pin").toString
+    val dir = tmpDir("graft-snap-pin")
     val a = new GraphStore(spark)
     a.createSchema("User", "name" -> StringType)
     a.createNode("User", Map("name" -> "alice"))
@@ -289,7 +289,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("corrupt/truncated root pointer: restore falls back to the newest " +
       "complete version; commit heals the pointer") {
-    val dir = Files.createTempDirectory("graft-snap-crash").toString
+    val dir = tmpDir("graft-snap-crash")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "alice"))
@@ -314,7 +314,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("commit crashed mid-manifest-stage: v-dir with only .manifest.tmp " +
       "is an orphan — swept by GC, skipped by restore, sweep not aborted") {
-    val dir = Files.createTempDirectory("graft-snap-stage").toString
+    val dir = tmpDir("graft-snap-stage")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "alice"))
@@ -338,7 +338,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("versioned store round-trips version metadata") {
-    val dir = Files.createTempDirectory("graft-snap-v").toString
+    val dir = tmpDir("graft-snap-v")
     val clock = new graft.core.MockClock(1000L)
     val s = new GraphStore(spark, versioningEnabled = true, clock = clock)
     s.createSchema("User", "age" -> IntegerType)
@@ -392,7 +392,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("CSV bulk load with and without ids (S6)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val dir = tmpDir("graft-csv")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/users.csv"),
       "id,name,age\n0,alex,25\n1,bob,31\n2,jeff,33\n")
@@ -417,7 +417,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("range-sharded commit lays files out by id and restores (S2)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shard").toString
+    val dir = tmpDir("graft-shard")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     (0 until 100).foreach(i => s.createNode("User", Map("name" -> s"u$i")))
@@ -464,7 +464,7 @@ class SnapshotSpec extends SparkSpec {
     val s2 = new GraphStore(spark)
     s2.createSchemaFields("Sensor", Seq(FixedSize.string("tag", 8)))
     s2.createNode("Sensor", Map("tag" -> "ok"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-fixed").toString
+    val dir = tmpDir("graft-fixed")
     s2.commit(dir)
     val r = GraphStore.restore(spark, dir)
     val e3 = intercept[IllegalArgumentException] {
@@ -526,7 +526,7 @@ class SnapshotSpec extends SparkSpec {
     // code path an hdfs:// root takes on a real cluster; file: exercises
     // it hermetically (LocalFileSystem = ChecksumFileSystem, so the
     // CRC-shadow-file behaviors the nio path never hits run here too).
-    val local = java.nio.file.Files.createTempDirectory("graft-hfs")
+    val local = tmpDir("graft-hfs")
     clusterRootBehavior(s"file:$local",
       p => new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(p.stripPrefix("file:")))))
@@ -624,8 +624,7 @@ class SnapshotSpec extends SparkSpec {
     // parseable manifest with missing data means corruption or a lying
     // Files.exists — deleting anything on that evidence would be
     // irreversible, so the whole sweep must abort (return 0).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-gc-failclosed").toString
+    val dir = tmpDir("graft-gc-failclosed")
     val s = new GraphStore(spark)
     s.createSchema("User", "name" -> StringType)
     s.createNode("User", Map("name" -> "a"))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** Shared local SparkSession for specs; temp paths via [[TempFiles]]. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll with TempFiles {
   lazy val spark: SparkSession = SparkSpec.session
 
   /** Rows as a multiset of sequences for order-insensitive comparison. */

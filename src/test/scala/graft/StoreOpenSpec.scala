@@ -70,9 +70,6 @@ class StoreOpenSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("schema equals Spark's inference for every fixture table, under " +
       "either nanosAsLong setting") {
     val tables = new java.io.File(Fixture).listFiles()
@@ -248,5 +245,19 @@ class StoreOpenSpec extends SparkSpec {
     try {
       assert(ParquetTable.read(spark, p).count() === cached.count())
     } finally cached.unpersist(blocking = true)
+  }
+
+  test("an attach that cannot project its frame leaves no label behind") {
+    import spark.implicits._
+    for (versioned <- Seq(false, true)) {
+      val s = new GraphStore(spark, versioningEnabled = versioned)
+      val labels = s.catalog.labels
+      val frame = Seq((3L, "x")).toDF("doc_id", "text")
+      assert(Try(s.attachNodes("docs", frame, "id")).isFailure)
+      assert(s.catalog.labels === labels)
+      s.attachNodes("docs", frame, "doc_id")
+      assert(s.nodes("docs").select("id", "text").collect().toSeq ===
+        Seq(Row(3L, "x")))
+    }
   }
 }

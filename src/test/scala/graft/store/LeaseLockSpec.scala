@@ -18,10 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (src/storage/snapshot_manager.cpp:315 never faces cross-process
   * committers); this lock exists for the cluster-storage story.
   */
-class LeaseLockSpec extends AnyFunSuite {
+class LeaseLockSpec extends AnyFunSuite with graft.TempFiles {
 
   private def newRoot(): (String, java.nio.file.Path) = {
-    val local = Files.createTempDirectory("graft-lease")
+    val local = Paths.get(tmpDir("graft-lease"))
     (s"file:$local", local)
   }
 

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * double must not be MORE permissive than the stores it models (HDFS /
   * S3A), or it silently masks data-plane committer bugs (r9 ADVICE).
   */
-class MemObjectStoreFsSpec extends AnyFunSuite {
+class MemObjectStoreFsSpec extends AnyFunSuite with graft.TempFiles {
 
   private def freshFs(bucket: String): MemObjectStoreFileSystem = {
     MemObjectStore.clear(bucket)
@@ -124,14 +124,14 @@ class MemObjectStoreFsSpec extends AnyFunSuite {
 
   test("Bucket contract: file-backed double (identical semantics over " +
       "OS-lock-serialized shared files)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-filebucket")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-filebucket"))
     bucketContract(
       MemObjectStore.bindFileBucket("contract-file", dir))
   }
 
   test("file-backed generation counter survives a crash mid-stage: " +
       "a torn .gen.staging never poisons subsequent etags") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fb-gen")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-fb-gen"))
     val bkt = MemObjectStore.bindFileBucket("contract-gen", dir)
     val o1 = bkt.put("k", "a".getBytes("UTF-8"))
     // simulate a process killed between staging and the atomic move:
@@ -150,7 +150,7 @@ class MemObjectStoreFsSpec extends AnyFunSuite {
 
   test("file-backed backdate preserves bytes and etag, changes mtime " +
       "(lease-expiry clock control)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fb-bd")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-fb-bd"))
     val bkt = MemObjectStore.bindFileBucket("contract-bd", dir)
     val o = bkt.put("lease", "holder".getBytes("UTF-8"))
     bkt.backdate("lease", o.mtime - 120000)
